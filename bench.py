@@ -1137,7 +1137,6 @@ def sec_ann_big(spark, per_query, mark):
 
     from mcp_vector_search_spark import io as eio
     from mcp_vector_search_spark.operators.ivf import (
-        _driver_probe_sets,
         ivf_build_sampled,
         ivf_build_sampled_packed,
         ivf_pack,
@@ -1146,6 +1145,7 @@ def sec_ann_big(spark, per_query, mark):
         read_ivf_layout,
         write_ivf_layout,
     )
+    from mcp_vector_search_spark.operators.kernel import collect_queries
     from mcp_vector_search_spark.operators.topk import topk_per_query_np
 
     INFLATE = 256
@@ -1212,7 +1212,7 @@ def sec_ann_big(spark, per_query, mark):
     for nq in (2, 8, 32, 128):
         qn = big_q.limit(nq).cache()
         qn.count()
-        _, _, c2q = _driver_probe_sets(qn, big_cents, 20, "query_id", "query_vec")
+        c2q = collect_queries(qn, centroids=big_cents, nprobes=20).probes
         per_query[f"ann_big_xover_q{nq}_probe_union"] = len(c2q)
         per_query[f"ann_big_xover_q{nq}_ivf_sec"] = round(
             _best_of(spark, 2, lambda q=qn: _noop(ivf_topk_batch_packed(
@@ -1475,7 +1475,7 @@ def sec_ann_big(spark, per_query, mark):
     for nq in (2, 8):
         qn = big_q256.limit(nq).cache()
         qn.count()
-        _, _, c2q = _driver_probe_sets(qn, cents256, 20, "query_id", "query_vec")
+        c2q = collect_queries(qn, centroids=cents256, nprobes=20).probes
         per_query[f"ann_big256_q{nq}_probe_union"] = len(c2q)
         per_query[f"ann_big256_q{nq}_ivf_sec"] = round(
             _best_of(spark, 2, lambda q=qn: _noop(ivf_topk_batch_packed(
@@ -1809,7 +1809,6 @@ def _sec_ann_huge_body(
     from pyspark.sql import functions as F
 
     from mcp_vector_search_spark.operators.ivf import (
-        _driver_probe_sets,
         choose_ann_route,
         ivf_build_sampled_packed,
         ivf_pack_fused,
@@ -1817,6 +1816,7 @@ def _sec_ann_huge_body(
         read_ivf_layout,
         write_ivf_layout,
     )
+    from mcp_vector_search_spark.operators.kernel import collect_queries
     from mcp_vector_search_spark.operators.topk import topk_per_query_np
 
     per_query["ann_huge_brute_runs"] = _runs_of(
@@ -1846,9 +1846,7 @@ def _sec_ann_huge_body(
     # brute at this dim/batch. The regime where in-memory probing wins
     # is small/concentrated batches; on disk the pruning is physical
     # partition pruning regardless (the disk q2 points below).
-    _, _, _c2q = _driver_probe_sets(
-        huge_q, huge_cents, 20, "query_id", "query_vec"
-    )
+    _c2q = collect_queries(huge_q, centroids=huge_cents, nprobes=20).probes
     per_query["ann_huge_probed_union"] = len(_c2q)
     # float32 packs halve the bytes crossing the JVM→Arrow boundary —
     # the lever that matters when serving is transfer-bound
@@ -1896,9 +1894,7 @@ def _sec_ann_huge_body(
     pk_df, pk_cents = read_ivf_layout(spark, f"{layout_dir}/packed")
     hq2 = huge_q.limit(2).cache()
     hq2.count()
-    _, _, q2_probe = _driver_probe_sets(
-        hq2, pk_cents, 20, "query_id", "query_vec"
-    )
+    q2_probe = collect_queries(hq2, centroids=pk_cents, nprobes=20).probes
     per_query["ann_huge_disk_q2_probed"] = len(q2_probe)  # of 512
     # r11: make BOTH sides of the pair actually cold (see
     # _drop_page_cache) — the flag says which population this record

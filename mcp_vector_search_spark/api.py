@@ -671,10 +671,11 @@ class SparkProject:
     def search_batch(
         self, queries: DataFrame, limit: int = 10, route: str = "auto"
     ) -> DataFrame:
-        """Batch ANN (tool batch search): always the Arrow-vectorized
-        kernels — per-batch numpy matmul with partial top-k, so the
-        shuffle carries O(batches·|Q|·k) rows, never |Q|×|V| scored
-        pairs (the round-2 perf-weak HOF path is oracle-only now).
+        """Batch ANN (tool batch search): every route runs the one
+        Arrow scoring kernel (`operators/kernel.py`) — per-unit numpy
+        scoring with partial top-k, so the shuffle carries
+        O(units·|Q|·k) rows, never |Q|×|V| scored pairs (the HOF path
+        is oracle-only). An empty query set returns an empty frame.
 
         `route` (VERDICT r8 #2 — the measured probe-vs-brute
         crossover, decided per batch instead of by layout presence):
@@ -752,10 +753,10 @@ class SparkProject:
         if self._ivf_layout is not None:
             from mcp_vector_search_spark.operators.ivf import (
                 NPROBES,
-                _driver_probe_sets,
                 choose_ann_route,
                 ivf_topk_batch_packed,
             )
+            from mcp_vector_search_spark.operators.kernel import collect_queries
 
             layout, centroids, _ = self._ivf_layout
             if route == "probe":
@@ -784,10 +785,8 @@ class SparkProject:
                     "corpus_bytes": corpus_bytes, "nodes": nodes,
                 }
                 return result
-            probe = _driver_probe_sets(
-                queries, centroids, NPROBES, "query_id", "query_vec"
-            )
-            union_fraction = len(probe[2]) / max(1, self._ivf_layout_clusters())
+            qs = collect_queries(queries, centroids=centroids, nprobes=NPROBES)
+            union_fraction = len(qs.probes) / max(1, self._ivf_layout_clusters())
             if choose_ann_route(
                 corpus_bytes, union_fraction, nodes=nodes,
                 bytes_per_node=self.ann_route_bytes_per_node,
@@ -795,7 +794,7 @@ class SparkProject:
                 corpus_cold=self.corpus_cold,
             ) == "probe":
                 result = ivf_topk_batch_packed(
-                    layout, centroids, queries, limit, _probe_sets=probe
+                    layout, centroids, queries, limit, _query_set=qs
                 )
                 self.last_route = {
                     "requested": route, "served": "probe",
@@ -808,11 +807,11 @@ class SparkProject:
                 }
                 return result
             # the queries were already collected for the probe map —
-            # hand the matrix to the brute kernel rather than
+            # hand them to the brute kernel rather than
             # re-executing the query frame's lineage (a limit()/
             # sampled frame could yield a DIFFERENT set, r8 trap)
             result = topk_per_query_np(
-                self.vectors, queries, limit, _queries_np=(probe[0], probe[1])
+                self.vectors, queries, limit, _query_set=qs
             )
             self.last_route = {
                 "requested": route, "served": "brute",

@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mcp_vector_search_spark.functions.vectors import cosine_sim
-from mcp_vector_search_spark.operators.nputil import round_half_up
 
 NPROBES = 20
 
@@ -285,13 +284,13 @@ def _fit_centroids(
     fused builds can never produce different quantizers."""
     import numpy as np
 
-    from mcp_vector_search_spark.operators.topk import _safe_norms
+    from mcp_vector_search_spark.operators.nputil import safe_norms
 
     if num_clusters is None:
         num_clusters = clamp_clusters(vectors.count())
     sample = _fit_sample(vectors, id_col, vec_col, sample_rows)
     X = np.stack(sample[vec_col].to_numpy()).astype(np.float64)
-    X /= _safe_norms(X)
+    X /= safe_norms(X)
     cents = _lloyd_fit(X, num_clusters, iters, seed)
     return vectors.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
@@ -386,63 +385,6 @@ def ivf_topk(
     return out.select(id_col, "cos_sim")
 
 
-def _driver_probe_sets(
-    queries: DataFrame,
-    centroids: DataFrame,
-    nprobes: int,
-    query_id_col: str,
-    query_vec_col: str,
-    return_centroids: bool = False,
-):
-    """Driver-side probe assignment shared by the Arrow scoring paths
-    — INCLUDING IVF-PQ's `_adc_query_prep`, which previously inlined a
-    line-for-line copy that every probe/rounding fix had to patch
-    twice (r6 review #7): rank clusters per query by round-9 centroid
-    cosine (ties → lower cluster id) — the same deterministic contract
-    as the rounded window in `ivf_topk_batch`. Returns
-    (Q, qids, cluster_to_q) where Q is the unit query matrix, qids the
-    id vector, and cluster_to_q maps cluster_id → np.array of query
-    row-indexes probing it; with `return_centroids`, additionally
-    (C_raw, cids) for callers that need the un-normalized centroid
-    matrix (the ADC offset term).
-
-    The query set and centroid table are both driver-small (queries
-    are the serving batch; centroids ≤512 rows by construction), so
-    this is pure numpy — no Spark job."""
-    import numpy as np
-
-    from mcp_vector_search_spark.operators.topk import _safe_norms
-
-    qpd = queries.select(query_id_col, query_vec_col).toPandas()
-    Q = np.stack(qpd[query_vec_col].to_numpy()).astype(np.float64)
-    Q /= _safe_norms(Q)
-    qids = qpd[query_id_col].to_numpy()
-
-    cpd = centroids.orderBy("cluster_id").toPandas()
-    C = np.stack(cpd["centroid"].to_numpy()).astype(np.float64)
-    Cn = C / _safe_norms(C)
-    cids = cpd["cluster_id"].to_numpy()
-    csim = round_half_up(Q @ Cn.T, 9)  # (nq, nc)
-    order = np.lexsort((np.broadcast_to(cids, csim.shape), -csim), axis=1)
-    # nprobes=None → the [:None] slice keeps every cluster (exact
-    # packed brute force); 0/negative would silently produce an EMPTY
-    # probe map — a vector leg that returns nothing while looking like
-    # a "minimal probing" configuration (r6 review)
-    if nprobes is not None and nprobes < 1:
-        raise ValueError(
-            f"nprobes must be >= 1, or None to probe all clusters; got {nprobes}"
-        )
-    probe_sets = order[:, :nprobes]  # (nq, nprobes) — indices into cids
-    cluster_to_q: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        for ci in probe_sets[qi]:
-            cluster_to_q.setdefault(int(cids[ci]), []).append(qi)
-    cluster_to_q_np = {c: np.asarray(v) for c, v in cluster_to_q.items()}
-    if return_centroids:
-        return Q, qids, cluster_to_q_np, C, cids
-    return Q, qids, cluster_to_q_np
-
-
 def ivf_topk_batch_np(
     assigned: DataFrame,
     centroids: DataFrame,
@@ -456,92 +398,16 @@ def ivf_topk_batch_np(
     round_to: int = 6,
     batch_buffer: int = 4,
 ) -> DataFrame:
-    """IVF batch ANN with the Arrow-vectorized scoring kernel.
+    """IVF batch ANN over the per-row layout: one matmul per
+    within-batch cluster run against only its probing queries, with no
+    exchange before scoring (a groupBy formulation shuffled every row)."""
+    from mcp_vector_search_spark.operators import kernel
 
-    Probe assignment runs on the driver over the (tiny) query set and
-    centroid matrix — pure numpy, no Spark job. Scoring is a
-    shuffle-free `mapInPandas` over the probe-pruned scan: each Arrow
-    batch sub-groups its rows by cluster_id (on a cluster-partitioned
-    layout rows arrive already grouped, so this is one cheap pandas
-    groupby over contiguous runs) and computes one matmul per cluster
-    run against ONLY the queries probing it — flops scale with
-    nprobes/num_clusters of the brute-force work, and NO exchange
-    precedes scoring (an earlier groupBy(cluster_id).applyInPandas
-    formulation shuffled every probed row — on the partitioned-layout
-    disk bench that exchange cost more than the pruning saved). The
-    per-run partial top-k keeps the final exact rank window's input at
-    O(runs · probing-queries · k).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from mcp_vector_search_spark.operators.topk import _partial_topk, _safe_norms
-
-    Q, qids, cluster_to_q_np = _driver_probe_sets(
-        queries, centroids, nprobes, query_id_col, query_vec_col
-    )
-    keep = k * batch_buffer
-
-    has_unit = "unit" in assigned.columns
-    score_col = "unit" if has_unit else vec_col
-
-    def _score_run(sub: pd.DataFrame, qidx) -> pd.DataFrame:
-        V = np.stack(sub[score_col].to_numpy()).astype(np.float64)
-        if not has_unit:
-            V /= _safe_norms(V)
-        S = round_half_up(V @ Q[qidx].T, round_to)  # (b, nqq)
-        b, nqq = S.shape
-        vids = sub[id_col].to_numpy()
-        if b > keep:
-            idx = _partial_topk(S, vids, keep)
-        else:
-            idx = np.tile(np.arange(b)[:, None], (1, nqq))
-        rows = idx.shape[0]
-        return pd.DataFrame(
-            {
-                query_id_col: np.repeat(qids[qidx][None, :], rows, axis=0).ravel(),
-                id_col: vids[idx].ravel(),
-                "cos_sim": np.take_along_axis(S, idx, axis=0).ravel(),
-            }
-        )
-
-    def score_batches(batches):
-        empty = pd.DataFrame(
-            {
-                query_id_col: qids[:0],
-                id_col: np.empty(0, dtype=object),
-                "cos_sim": np.empty(0, dtype=np.float64),
-            }
-        )
-        for pdf in batches:
-            outs = []
-            for cid, sub in pdf.groupby("cluster_id", sort=False):
-                qidx = cluster_to_q_np.get(int(cid))
-                if qidx is not None:
-                    outs.append(_score_run(sub, qidx))
-            yield pd.concat(outs) if outs else empty
-
-    from mcp_vector_search_spark.operators.topk import id_type
-
-    # pre-filter to the UNION of probed clusters: on a cluster_id-
-    # partitioned layout this is partition pruning — non-probed
-    # clusters are never deserialized. For small query batches the
-    # union is a small fraction of the corpus; that is the serving win.
-    probed = sorted(cluster_to_q_np)
-    cand = (
-        assigned.filter(F.col("cluster_id").isin(probed))
-        .select("cluster_id", id_col, score_col)
-        .mapInPandas(
-            score_batches,
-            f"{query_id_col} {id_type(queries, query_id_col)}, "
-            f"{id_col} {id_type(assigned, id_col)}, cos_sim double",
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rn")
+    qs = kernel.collect_queries(queries, query_id_col, query_vec_col, centroids, nprobes)
+    col = "unit" if "unit" in assigned.columns else vec_col
+    return kernel.score_topk(
+        assigned, kernel.rows(id_col, col, "cluster_id"), qs, k,
+        kernel.float_codec(qs.Q, col != "unit"), "cos_sim", round_to, batch_buffer,
     )
 
 
@@ -593,7 +459,8 @@ def ivf_pack(
     import numpy as np
     import pandas as pd
 
-    from mcp_vector_search_spark.operators.topk import _safe_norms, id_type
+    from mcp_vector_search_spark.operators.nputil import safe_norms
+    from mcp_vector_search_spark.operators.topk import id_type
 
     has_unit = "unit" in assigned.columns
     src = "unit" if has_unit else vec_col
@@ -611,7 +478,7 @@ def ivf_pack(
         pdf = pdf.sort_values(id_col)
         V = np.stack(pdf[src].to_numpy()).astype(np.float64)
         if not has_unit:
-            V /= _safe_norms(V)
+            V /= safe_norms(V)
         M = np.ascontiguousarray(V.astype(np_dtype))
         dim = M.shape[1]
         step = block_step(dim * np_dtype.itemsize, rows_per_block, max_block_bytes)
@@ -700,7 +567,8 @@ def ivf_pack_fused(
     import numpy as np
     import pandas as pd
 
-    from mcp_vector_search_spark.operators.topk import _safe_norms, id_type
+    from mcp_vector_search_spark.operators.nputil import safe_norms
+    from mcp_vector_search_spark.operators.topk import id_type
 
     cpd = centroids.orderBy("cluster_id").toPandas()
     C = np.stack(cpd["centroid"].to_numpy()).astype(np.float64)
@@ -720,7 +588,7 @@ def ivf_pack_fused(
             if not len(pdf):
                 continue
             V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            U = V / _safe_norms(V)
+            U = V / safe_norms(V)
             asn_parts.append(_coarse_nearest(U, C, half_c2))
             U_parts.append(U)
             id_parts.append(pdf[id_col].to_numpy())
@@ -838,98 +706,19 @@ def ivf_topk_batch_packed(
     id_col: str = "vec_id",
     round_to: int = 6,
     batch_buffer: int = 4,
-    _probe_sets=None,
+    _query_set=None,
 ) -> DataFrame:
-    """IVF batch ANN over an `ivf_pack` layout → (query_id, vec_id,
-    cos_sim, rn) — the same output contract (and, for float64 packs,
-    bit-identical results) as `ivf_topk_batch_np`.
+    """`ivf_topk_batch_np` over an `ivf_pack` layout (bit-identical for
+    float64 packs): the probe filter skips whole blocks. `nprobes=None`
+    is a packed brute-force scan; `_query_set` as in `topk_per_query_np`."""
+    from mcp_vector_search_spark.operators import kernel
 
-    `_probe_sets` — a (Q, qids, cluster_to_q) triple already computed
-    by `_driver_probe_sets` for THIS query frame: the regime router
-    collects the queries once to measure the probe-union fraction, and
-    re-collecting here would double-execute the query frame's lineage
-    (on a limit()/sampled frame that can be a DIFFERENT query set, the
-    r8 nondeterministic-subset trap).
-
-    Plan: driver-side probe assignment (shared `_driver_probe_sets`
-    contract) → row filter keeps only probed blocks — a filter over
-    ~num_clusters rows, so non-probed clusters cost nothing, not a
-    per-vector deserialize — → one `np.frombuffer` + one matmul per
-    (block, probing-queries) inside a shuffle-free mapInPandas → exact
-    per-query rank window over the per-block partial top-k. Probing
-    all clusters (`nprobes=None`, or any value ≥ the cluster count)
-    degenerates to a packed brute-force scan, which is how the layout
-    also serves exact search — with no extra job to count centroids.
-
-    Scale envelope: the query set and its probe map live on the
-    driver and ship inside the task closure — right for SERVING
-    batches (up to ~100K queries; the map is nq·nprobes ints). For a
-    corpus-×-corpus scale query set, use `ivf_topk_batch` — its probe
-    assignment is a distributed broadcast-join, no driver
-    materialization."""
-    import numpy as np
-    import pandas as pd
-
-    from mcp_vector_search_spark.operators.topk import _partial_topk, id_type
-
-    if _probe_sets is None:
-        Q, qids, cluster_to_q_np = _driver_probe_sets(
-            queries, centroids, nprobes, query_id_col, query_vec_col
-        )
-    else:
-        Q, qids, cluster_to_q_np = _probe_sets
-    keep = k * batch_buffer
-    out_id_t = packed.schema["vec_ids"].dataType.elementType.simpleString()
-
-    def score_blocks(batches):
-        empty = pd.DataFrame(
-            {
-                query_id_col: qids[:0],
-                id_col: np.empty(0, dtype=object),
-                "cos_sim": np.empty(0, dtype=np.float64),
-            }
-        )
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                qidx = cluster_to_q_np.get(int(row.cluster_id))
-                if qidx is None:
-                    continue
-                M = np.frombuffer(row.mat, dtype=row.dtype).reshape(row.n, row.dim)
-                # float32 packs upcast once here: the matmul and the
-                # round-6 both run in float64 either way
-                S = round_half_up(M.astype(np.float64, copy=False) @ Q[qidx].T, round_to)
-                vids = np.asarray(row.vec_ids)
-                b, nqq = S.shape
-                if b > keep:
-                    idx = _partial_topk(S, vids, keep)
-                else:
-                    idx = np.tile(np.arange(b)[:, None], (1, nqq))
-                rows = idx.shape[0]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            query_id_col: np.repeat(
-                                qids[qidx][None, :], rows, axis=0
-                            ).ravel(),
-                            id_col: vids[idx].ravel(),
-                            "cos_sim": np.take_along_axis(S, idx, axis=0).ravel(),
-                        }
-                    )
-                )
-            yield pd.concat(outs) if outs else empty
-
-    probed = sorted(cluster_to_q_np)
-    cand = packed.filter(F.col("cluster_id").isin(probed)).mapInPandas(
-        score_blocks,
-        f"{query_id_col} {id_type(queries, query_id_col)}, "
-        f"{id_col} {out_id_t}, cos_sim double",
+    qs = _query_set or kernel.collect_queries(
+        queries, query_id_col, query_vec_col, centroids, nprobes
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rn")
+    return kernel.score_topk(
+        packed, kernel.blocks(id_col, "mat", "dim", "dtype", "cluster_id"), qs, k,
+        kernel.float_codec(qs.Q, False), "cos_sim", round_to, batch_buffer,
     )
 
 
@@ -952,7 +741,7 @@ def ivf_assign(
     ``vectors_backend.py`` add-to-existing-index path."""
     import numpy as np
 
-    from mcp_vector_search_spark.operators.topk import _safe_norms
+    from mcp_vector_search_spark.operators.nputil import safe_norms
 
     clash = {"unit", "cluster_id"} & set(vectors.columns)
     if clash:
@@ -972,7 +761,7 @@ def ivf_assign(
     def assign_pass(batches):
         for pdf in batches:
             V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            U = V / _safe_norms(V)
+            U = V / safe_norms(V)
             nearest = _coarse_nearest(U, C, half_c2)
             out = pdf.copy()
             out["unit"] = list(U)

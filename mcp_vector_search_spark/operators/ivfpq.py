@@ -27,12 +27,13 @@ Spark-first shape:
 - for the inner-product (cosine-on-unit-sphere) metric the ADC table
   is CLUSTER-INDEPENDENT: q·(c + r) = q·c + q·r, so scoring needs
   one (m × k) LUT per query plus a per-(query, probed-cluster)
-  scalar offset — both driver-computed, both tiny, both broadcast in
-  the applyInPandas closure;
-- scoring groups by ``cluster_id`` (`applyInPandas`), each cluster
-  ADC-scores only the queries probing it with per-cluster partial
-  top-k, so the rank-window shuffle carries
-  O(clusters · probing-queries · shortlist) rows — never |V|×|Q|.
+  scalar offset — both driver-computed, both tiny, both shipped in
+  the task closure;
+- scoring is the shared Arrow kernel (`operators/kernel.py`) with the
+  PQ-ADC codec: each probed cluster run or block ADC-scores only the
+  queries probing it, with a partial top-k, so the rank-window
+  shuffle carries O(clusters · probing-queries · shortlist) rows —
+  never |V|×|Q|.
 
 Determinism contract (same as ivf.py / pq.py): float64 everywhere,
 round-9 probe ranking and LUT entries, round-6 final scores, ties →
@@ -43,12 +44,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from mcp_vector_search_spark.functions.vectors import normalized
 from mcp_vector_search_spark.operators.ivf import NPROBES, block_step, ivf_build
 from mcp_vector_search_spark.operators.pq import _collect_codebooks
-from mcp_vector_search_spark.operators.nputil import round_half_up
 
 
 def ivfpq_build(
@@ -220,142 +218,6 @@ def ivfpq_encode(
     return _encode_residuals(_residuals(assigned, centroids, id_col), codebooks, id_col)
 
 
-def _adc_query_prep(
-    codebooks: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    nprobes: int,
-    query_id_col: str,
-    query_vec_col: str,
-):
-    """Driver-side ADC prep shared by the per-row and packed scanners
-    (all tiny): probe assignment by round-9 query × NORMALIZED
-    centroid similarity (ties → lower cluster_id — identical to
-    ``ivf_topk_batch_np``), one (m × k) residual LUT per query, one
-    q·RAW-centroid offset per (query, probed cluster) — the residual
-    was computed against the un-normalized centroid, so the offset
-    must use it too. Returns
-    (m, qids, cluster_to_q, offset, cid_to_row, lut).
-
-    Probe assignment DELEGATES to ``ivf._driver_probe_sets`` — a prior
-    inlined copy meant every probe tie-rule/rounding fix had to land
-    twice or the float and PQ layouts silently probed different
-    clusters for the same query (r6 review #7)."""
-    import numpy as np
-
-    from mcp_vector_search_spark.operators.ivf import _driver_probe_sets
-
-    cb = _collect_codebooks(codebooks)
-    m, _, dsub = cb.shape
-
-    Q, qids, cluster_to_q_np, C, cids = _driver_probe_sets(
-        queries, centroids, nprobes, query_id_col, query_vec_col,
-        return_centroids=True,
-    )
-    nq = len(qids)
-
-    offset = Q @ C.T  # (nq, nc) — q·centroid, cluster_id-indexed below
-    cid_to_row = {int(c): i for i, c in enumerate(cids)}
-    # lut[qi, s, c] = round(Q_sub · codebook[s, c], 9); cluster-free
-    lut = round_half_up(np.einsum("qsd,scd->qsc", Q.reshape(nq, m, dsub), cb), 9)
-    return m, qids, cluster_to_q_np, offset, cid_to_row, lut
-
-
-def ivfpq_topk(
-    encoded: DataFrame,
-    centroids: DataFrame,
-    codebooks: DataFrame,
-    queries: DataFrame,
-    k: int,
-    nprobes: int = NPROBES,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    round_to: int = 6,
-    batch_buffer: int = 4,
-) -> DataFrame:
-    """IVF-ADC batch top-k over the compressed layout →
-    (query_id, id, adc_score, rn).
-
-    Driver side (all tiny): probe assignment by round-9 query ×
-    centroid similarity (ties → lower cluster_id, identical to
-    ``ivf_topk_batch_np``), one (m × k) residual LUT per query, one
-    q·centroid offset per (query, probed cluster). Executor side:
-    per-cluster ADC = offset + m LUT gathers + sum over only the
-    queries probing that cluster, then partial top-k. The float
-    corpus is never read.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from mcp_vector_search_spark.operators.topk import _partial_topk, id_type
-
-    m, qids, cluster_to_q_np, offset, cid_to_row, lut = _adc_query_prep(
-        codebooks, centroids, queries, nprobes, query_id_col, query_vec_col
-    )
-    keep = k * batch_buffer
-
-    def _score_run(cid: int, sub: pd.DataFrame, qidx) -> pd.DataFrame:
-        Cm = np.stack(sub["codes"].to_numpy())  # (b, m)
-        b = Cm.shape[0]
-        S = np.broadcast_to(
-            offset[qidx, cid_to_row[cid]][None, :], (b, len(qidx))
-        ).copy()
-        lutq = lut[qidx]  # (nqq, m, k) — one gather, not one per subspace
-        for s in range(m):
-            S += lutq[:, s, Cm[:, s]].T  # (b, nqq)
-        S = round_half_up(S, round_to)
-        vids = sub[id_col].to_numpy()
-        if b > keep:
-            idx = _partial_topk(S, vids, keep)
-        else:
-            idx = np.tile(np.arange(b)[:, None], (1, len(qidx)))
-        rows = idx.shape[0]
-        return pd.DataFrame(
-            {
-                query_id_col: np.repeat(qids[qidx][None, :], rows, axis=0).ravel(),
-                id_col: vids[idx].ravel(),
-                "adc_score": np.take_along_axis(S, idx, axis=0).ravel(),
-            }
-        )
-
-    def score_batches(batches):
-        empty = pd.DataFrame(
-            {
-                query_id_col: qids[:0],
-                id_col: np.empty(0, dtype=object),
-                "adc_score": np.empty(0, dtype=np.float64),
-            }
-        )
-        for pdf in batches:
-            outs = []
-            for cid, sub in pdf.groupby("cluster_id", sort=False):
-                qidx = cluster_to_q_np.get(int(cid))
-                if qidx is not None:
-                    outs.append(_score_run(int(cid), sub, qidx))
-            yield pd.concat(outs) if outs else empty
-
-    # union-of-probes pre-filter = partition pruning on a cluster_id-
-    # partitioned layout, and a shuffle-free mapInPandas scan with
-    # within-batch cluster runs (same rationale as ivf_topk_batch_np:
-    # a groupBy here shuffled every probed code row for nothing)
-    cand = (
-        encoded.filter(F.col("cluster_id").isin(sorted(cluster_to_q_np)))
-        .select("cluster_id", id_col, "codes")
-        .mapInPandas(
-            score_batches,
-            f"{query_id_col} {id_type(queries, query_id_col)}, "
-            f"{id_col} {id_type(encoded, id_col)}, adc_score double",
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("adc_score"), F.asc(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "adc_score", "rn")
-    )
-
-
 def ivfpq_pack(
     encoded: DataFrame,
     id_col: str = "vec_id",
@@ -455,7 +317,8 @@ def ivfpq_pack_fused(
     )
     from mcp_vector_search_spark.operators.layout import repack_codec_blocks
     from mcp_vector_search_spark.operators.pq import _code_rows
-    from mcp_vector_search_spark.operators.topk import _safe_norms, id_type
+    from mcp_vector_search_spark.operators.nputil import safe_norms
+    from mcp_vector_search_spark.operators.topk import id_type
 
     cpd = centroids.orderBy("cluster_id").toPandas()
     C = np.stack(cpd["centroid"].to_numpy()).astype(np.float64)
@@ -477,7 +340,7 @@ def ivfpq_pack_fused(
             if not len(pdf):
                 continue
             V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            U = V / _safe_norms(V)
+            U = V / safe_norms(V)
             nearest = _coarse_nearest(U, C, half_c2)
             code_parts.append(_code_rows(U - C[nearest], cb))
             id_parts.append(pdf[id_col].to_numpy())
@@ -535,76 +398,15 @@ def ivfpq_topk_packed(
     round_to: int = 6,
     batch_buffer: int = 4,
 ) -> DataFrame:
-    """IVF-ADC batch top-k over an `ivfpq_pack` layout — identical
-    results to `ivfpq_topk` (same prep, same round-9 LUT + round-6
-    scores, same tie-breaks), with one `np.frombuffer` per probed
-    block instead of 512K per-row code arrays."""
-    import numpy as np
-    import pandas as pd
+    """IVF-ADC batch top-k over an `ivfpq_pack` layout →
+    (query_id, id, adc_score, rn); the float corpus is never read."""
+    from mcp_vector_search_spark.operators import kernel
 
-    from mcp_vector_search_spark.operators.topk import _partial_topk, id_type
-
-    m_cb, qids, cluster_to_q_np, offset, cid_to_row, lut = _adc_query_prep(
-        codebooks, centroids, queries, nprobes, query_id_col, query_vec_col
-    )
-    keep = k * batch_buffer
-    out_id_t = packed_codes.schema["vec_ids"].dataType.elementType.simpleString()
-
-    def score_blocks(batches):
-        empty = pd.DataFrame(
-            {
-                query_id_col: qids[:0],
-                id_col: np.empty(0, dtype=object),
-                "adc_score": np.empty(0, dtype=np.float64),
-            }
-        )
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                qidx = cluster_to_q_np.get(int(row.cluster_id))
-                if qidx is None:
-                    continue
-                Cm = np.frombuffer(row.codes, dtype=row.dtype).reshape(row.n, row.m)
-                b = Cm.shape[0]
-                S = np.broadcast_to(
-                    offset[qidx, cid_to_row[int(row.cluster_id)]][None, :],
-                    (b, len(qidx)),
-                ).copy()
-                lutq = lut[qidx]
-                for s in range(row.m):
-                    S += lutq[:, s, Cm[:, s]].T
-                S = round_half_up(S, round_to)
-                vids = np.asarray(row.vec_ids)
-                if b > keep:
-                    idx = _partial_topk(S, vids, keep)
-                else:
-                    idx = np.tile(np.arange(b)[:, None], (1, len(qidx)))
-                rows = idx.shape[0]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            query_id_col: np.repeat(
-                                qids[qidx][None, :], rows, axis=0
-                            ).ravel(),
-                            id_col: vids[idx].ravel(),
-                            "adc_score": np.take_along_axis(S, idx, axis=0).ravel(),
-                        }
-                    )
-                )
-            yield pd.concat(outs) if outs else empty
-
-    cand = packed_codes.filter(
-        F.col("cluster_id").isin(sorted(cluster_to_q_np))
-    ).mapInPandas(
-        score_blocks,
-        f"{query_id_col} {id_type(queries, query_id_col)}, "
-        f"{id_col} {out_id_t}, adc_score double",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("adc_score"), F.asc(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "adc_score", "rn")
+    qs = kernel.collect_queries(queries, query_id_col, query_vec_col, centroids, nprobes)
+    return kernel.score_topk(
+        packed_codes, kernel.blocks(id_col, "codes", "m", "dtype", "cluster_id"), qs, k,
+        kernel.pq_codec(qs, _collect_codebooks(codebooks)), "adc_score", round_to,
+        batch_buffer,
     )
 
 
@@ -624,68 +426,27 @@ def ivfpq_topk_refined(
     round_to: int = 6,
     packed_codes: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-ADC shortlist → exact rerank (reference ``refine_factor=5``,
-    ``vectors_backend.py:1336``) → (query_id, id, cos_sim, rn). Only
-    O(nq·k·rerank_factor) rows rejoin the float corpus; the join is an
-    id equi-join with the (tiny) query side broadcast. Pass
-    `packed_codes` (an `ivfpq_pack` layout) to run the ADC stage over
-    packed blocks — identical shortlist, ~none of the per-row
-    deserialize cost."""
-    from mcp_vector_search_spark.functions.vectors import dot
+    """IVF-ADC shortlist (k·rerank_factor) → exact rerank → (query_id,
+    id, cos_sim, rn); scans `packed_codes` when given, else `encoded`."""
+    from mcp_vector_search_spark.operators import kernel
 
-    # batch_buffer=1 for the shortlist: per-block top-N with exact
-    # boundary-tie handling (_partial_topk) already yields a provable
-    # superset of the global top-N, so the ×4 safety margin only
-    # multiplied the rank-window shuffle (keep=N·4 per block per
-    # probing query was over half of each 2K-row block at the bench's
-    # rerank_factor=30 — the window input shrank 4× with identical
-    # results, pinned by the parity tests + ann_recall gate)
-    _short_kw = dict(
-        nprobes=nprobes,
-        id_col=id_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-        batch_buffer=1,
-    )
     if encoded is None and packed_codes is None:
         raise ValueError(
             "ivfpq_topk_refined needs a code layout: pass `encoded` "
             "(per-row) or `packed_codes` (ivfpq_pack blocks)"
         )
     if packed_codes is not None:
-        shortlist = ivfpq_topk_packed(
-            packed_codes, centroids, codebooks, queries, k * rerank_factor,
-            **_short_kw,
-        ).select(query_id_col, id_col)
+        frame, src = packed_codes, kernel.blocks(id_col, "codes", "m", "dtype", "cluster_id")
     else:
-        shortlist = ivfpq_topk(
-            encoded, centroids, codebooks, queries, k * rerank_factor,
-            **_short_kw,
-        ).select(query_id_col, id_col)
-    # join the RAW corpus first, normalize per candidate pair: the
-    # unit transform (64-element HOF + sqrt) is the expensive part of
-    # this stage, and only O(nq·k·rerank_factor) candidate pairs need
-    # it — normalizing the whole corpus before the join made the
-    # rerank, not the ADC scan, the dominant cost of the refined path
-    # (r5 bench: ~7.1 s of the 7.3 s total at 512K×256q×rerank30).
-    # Per-pair normalization re-derives the unit vector for an id
-    # shared by several queries, but pairs ≪ corpus rows and the plan
-    # stays single-pass and lazy (a distinct-ids semi-join would
-    # execute the ADC shortlist lineage twice).
-    v = vectors.select(id_col, vec_col)
-    q = (
-        normalized(queries, query_vec_col, "_uq")
-        .select(query_id_col, "_uq")
+        frame, src = encoded, kernel.rows(id_col, "codes", "cluster_id")
+    qs = kernel.collect_queries(queries, query_id_col, query_vec_col, centroids, nprobes)
+    # batch_buffer=1: the exact-tie partial top-k already keeps a
+    # superset of the top-N; a ×4 buffer only grew the shuffle
+    shortlist = kernel.score_topk(
+        frame, src, qs, k * rerank_factor,
+        kernel.pq_codec(qs, _collect_codebooks(codebooks)), "adc_score", batch_buffer=1,
     )
-    sim = F.round(dot(F.col("_u"), F.col("_uq")), round_to)
-    cand = (
-        normalized(shortlist.join(v, id_col), vec_col, "_u")
-        .join(F.broadcast(q), query_id_col)
-        .withColumn("cos_sim", sim)
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rn")
+    return kernel.exact_rerank(
+        vectors, shortlist, queries, k, vec_col, id_col, query_id_col,
+        query_vec_col, round_to,
     )

@@ -49,3 +49,13 @@ def round_half_up(x, decimals: int):
     np.trunc(y, out=y)
     y /= scale
     return y
+
+
+def safe_norms(M):
+    """Row norms with zero mapped to 1: a zero vector stays the zero
+    vector (cosine 0 to everything), the semantics `unit_expr` gives
+    the DataFrame paths; bare division would NaN-poison the scores and
+    rank the zero vector FIRST under DESC NaN ordering."""
+    n = np.linalg.norm(M, axis=1, keepdims=True)
+    n[n == 0] = 1.0
+    return n

@@ -20,12 +20,14 @@ Spark-first shape:
 - codes are an ``array<int>`` column next to the id — the compressed
   corpus is a normal parquet table, co-partitionable with any IVF
   ``cluster_id`` layout;
-- encode and ADC scoring are Arrow ``mapInPandas`` kernels: per batch
-  one numpy gather+sum, per-batch partial top-k so the shuffle into
+- encode is an Arrow ``mapInPandas`` pass; ADC scoring is the shared
+  Arrow kernel (`operators/kernel.py`) with the PQ-ADC codec: per
+  batch one numpy gather+sum and a partial top-k, so the shuffle into
   the final rank window carries O(batches·nq·shortlist), never
   |V|×|Q|;
-- the shortlist → exact-rerank join (``pq_topk_refined``) is a plain
-  equi-join on the id column, O(nq·shortlist) rows.
+- the shortlist → exact-rerank join (``pq_topk_refined``, the kernel's
+  shared `exact_rerank`) is a plain equi-join on the id column,
+  O(nq·shortlist) rows.
 
 Determinism contract (shared with the SQL oracles): all float work in
 float64; per-subspace distances/partial dots rounded to 9 before
@@ -37,10 +39,7 @@ replay expression-for-expression.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from mcp_vector_search_spark.functions.vectors import normalized
 from mcp_vector_search_spark.operators.nputil import round_half_up
 
 PQ_M = 8  # subspaces
@@ -66,10 +65,10 @@ def _collect_codebooks(codebooks: DataFrame):
 def _unit_rows(pdf_col) -> "object":
     import numpy as np
 
-    from mcp_vector_search_spark.operators.topk import _safe_norms
+    from mcp_vector_search_spark.operators.nputil import safe_norms
 
     V = np.stack(pdf_col.to_numpy()).astype(np.float64)
-    return V / _safe_norms(V)
+    return V / safe_norms(V)
 
 
 def pq_train(
@@ -82,7 +81,6 @@ def pq_train(
     iters: int = 15,
     seed: int = 42,
     normalize: bool = True,
-    aniso_eta: float | None = None,
 ) -> DataFrame:
     """Fit per-subspace codebooks with numpy Lloyd's iterations on a
     bounded driver-side sample → (sub_idx int, code int,
@@ -99,9 +97,7 @@ def pq_train(
     on the unit sphere with inner-product ADC. `normalize=False`
     trains on the raw column — the IVF-PQ residual path
     (`operators/ivfpq.py`), where the input is already a residual that
-    must not be re-scaled. `aniso_eta` switches the fit to the
-    score-aware anisotropic loss (`_fit_codebooks_aniso`) — see
-    ISSUES.md #1.
+    must not be re-scaled.
     """
     import numpy as np
 
@@ -119,13 +115,9 @@ def pq_train(
         X = _unit_rows(sample[vec_col])
     else:
         X = np.stack(sample[vec_col].to_numpy()).astype(np.float64)
-    fit = (
-        _fit_codebooks(X, m, k, iters, seed)
-        if aniso_eta is None
-        else _fit_codebooks_aniso(X, m, k, iters, seed, aniso_eta)
-    )
     return vectors.sparkSession.createDataFrame(
-        fit, "sub_idx int, code int, centroid array<double>"
+        _fit_codebooks(X, m, k, iters, seed),
+        "sub_idx int, code int, centroid array<double>",
     )
 
 
@@ -163,143 +155,6 @@ def _fit_codebooks(X, m: int, k: int, iters: int, seed: int) -> list:
     return rows
 
 
-def _fit_codebooks_aniso(
-    X, m: int, k: int, iters: int, seed: int, eta: float
-) -> list:
-    """Score-aware (anisotropic) per-subspace Lloyd's — the published
-    fix for exactly the isotropic regime of ISSUES.md #1 (Guo et al.
-    2020, "Accelerating Large-Scale Inference with Anisotropic Vector
-    Quantization", ICML — ScaNN's loss, applied per PQ subspace).
-
-    Residual r = x_s − c is penalized `eta`× harder along the
-    datapoint direction x̂_s than orthogonally: errors parallel to x
-    are the ones that corrupt inner-product (cosine) ranking near the
-    top of the list, which is all ADC is used for.
-
-    - assignment: argmin ‖r‖² + (η−1)(x̂_s·r)², computed BLAS-form
-      as d2 + (η−1)(‖x_s‖ − X̂Cᵀ)²;
-    - update: the closed-form weighted-least-squares centroid
-      c_j = (n_j·I + (η−1)·Σ x̂x̂ᵀ)⁻¹ · η·Σx  — using
-      (x̂x̂ᵀ)x = ‖x‖·x̂ = x so b_j collapses to η·Σx. One dsub×dsub
-      solve per cluster per iteration.
-
-    η=1 is plain Lloyd's (the k-means objective); larger η trades
-    mean squared error for top-rank fidelity."""
-    import numpy as np
-
-    n, d = X.shape
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    dsub = d // m
-    k = min(k, n)
-    rng = np.random.default_rng(seed)
-    rows = []
-    for s in range(m):
-        Xs = X[:, s * dsub : (s + 1) * dsub]
-        norms = np.sqrt((Xs * Xs).sum(axis=1))
-        safe = np.maximum(norms, 1e-12)
-        Xhat = Xs / safe[:, None]
-        xs_sq = norms * norms
-        cents = Xs[rng.choice(n, size=k, replace=False)].copy()
-        for _ in range(iters):
-            d2 = xs_sq[:, None] + (cents * cents).sum(axis=1)[None, :]
-            d2 -= 2.0 * (Xs @ cents.T)
-            par = norms[:, None] - (Xhat @ cents.T)  # x̂·(x−c)
-            assign = np.argmin(d2 + (eta - 1.0) * par * par, axis=1)
-            counts = np.bincount(assign, minlength=k)
-            bsum = np.zeros((k, dsub))
-            np.add.at(bsum, assign, Xs)
-            for j in np.nonzero(counts)[0]:
-                idx = assign == j
-                S = Xhat[idx].T @ Xhat[idx]
-                A = counts[j] * np.eye(dsub) + (eta - 1.0) * S
-                cents[j] = np.linalg.solve(A, eta * bsum[j])
-        rows.extend(
-            (s, c, [float(x) for x in cents[c]]) for c in range(k)
-        )
-    return rows
-
-
-def opq_rotation(X, m: int):
-    """d×d orthogonal rotation for OPQ-style PQ (Ge et al. 2013,
-    "Optimized Product Quantization", CVPR — the parametric variant):
-    PCA-decorrelate, then assign principal directions to the m
-    subspaces by greedy eigenvalue-product balancing so every subspace
-    carries comparable variance. Addresses ISSUES.md #1 — on
-    weakly-clustered corpora the identity split leaves some subspaces
-    with no contrast for Lloyd's to quantize.
-
-    Rotation is orthogonal, so inner products (and the ADC scores
-    built from them) are preserved exactly; only the subspace SPLIT
-    changes."""
-    import numpy as np
-
-    n, d = X.shape
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    dsub = d // m
-    lam, U = np.linalg.eigh(np.cov(X, rowvar=False))
-    order = np.argsort(lam)[::-1]
-    lam, U = lam[order], U[:, order]
-    # LPT greedy over SHIFTED log-eigenvalues: balancing log-products
-    # is shift-invariant (every bucket holds exactly dsub dims), and
-    # the shift makes every job positive — with raw logs (negative for
-    # λ<1) the emptiest bucket keeps winning and the greedy degenerates
-    # to consecutive fill
-    logs = np.log(np.maximum(lam, 1e-12))
-    jobs = logs - logs.min() + 1.0
-    buckets: list[list[int]] = [[] for _ in range(m)]
-    loads = [0.0] * m
-    for i in range(d):
-        free = [b for b in range(m) if len(buckets[b]) < dsub]
-        b = min(free, key=lambda j: loads[j])
-        buckets[b].append(i)
-        loads[b] += float(jobs[i])
-    perm = [i for b in buckets for i in b]
-    return np.ascontiguousarray(U[:, perm].T)
-
-
-def pq_train_rotated(
-    vectors: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = PQ_M,
-    k: int = PQ_CODES,
-    sample_rows: int = 16384,
-    iters: int = 15,
-    seed: int = 42,
-    aniso_eta: float | None = None,
-):
-    """OPQ fit → (codebooks DataFrame, rotation d×d numpy). Same
-    deterministic md5-ordered sample as `pq_train`; the rotation is
-    computed from the sample, the codebooks are fit in rotated space.
-    Pass the returned rotation to `pq_encode` / `pq_adc_topk` /
-    `pq_topk_refined` — the exact-rerank stage is untouched (true
-    cosine on the original vectors)."""
-    from pyspark.sql import functions as _F
-
-    sample = (
-        vectors.select(id_col, vec_col)
-        .orderBy(
-            _F.md5(_F.concat(_F.col(id_col).cast("string"), _F.lit("#pq-fit")))
-        )
-        .limit(sample_rows)
-        .toPandas()
-    )
-    X = _unit_rows(sample[vec_col])
-    R = opq_rotation(X, m)
-    Xr = X @ R.T
-    fit = (
-        _fit_codebooks(Xr, m, k, iters, seed)
-        if aniso_eta is None
-        else _fit_codebooks_aniso(Xr, m, k, iters, seed, aniso_eta)
-    )
-    cb = vectors.sparkSession.createDataFrame(
-        fit, "sub_idx int, code int, centroid array<double>"
-    )
-    return cb, R
-
-
 def _code_rows(V, cb, round_to: int = 9):
     """THE PQ code-assignment kernel: per subspace, nearest codebook
     entry by round-`round_to` squared L2 in BLAS expansion form
@@ -329,7 +184,6 @@ def pq_encode(
     id_col: str = "vec_id",
     round_to: int = 9,
     normalize: bool = True,
-    rotation=None,
     passthrough_cols: list[str] | None = None,
 ) -> DataFrame:
     """Compress the corpus → (id[, passthrough...], codes array<int>):
@@ -339,8 +193,7 @@ def pq_encode(
     the IVF-PQ residual path). One Arrow batch = m argmin passes over
     a numpy distance matrix; no shuffle — the output inherits the
     input partitioning, so an IVF-partitioned corpus stays
-    IVF-partitioned. `rotation` (from `pq_train_rotated`) applies the
-    OPQ basis change before the subspace split. `passthrough_cols`
+    IVF-partitioned. `passthrough_cols`
     ride through the kernel unchanged — the IVF-PQ build carries
     cluster_id this way instead of re-joining (which would execute the
     assignment lineage twice plus an id shuffle).
@@ -359,8 +212,6 @@ def pq_encode(
                 V = _unit_rows(pdf[vec_col])
             else:
                 V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if rotation is not None:
-                V = V @ rotation.T
             codes = _code_rows(V, cb, round_to)
             out = {id_col: pdf[id_col].to_numpy()}
             for c in passthrough_cols or []:
@@ -386,75 +237,16 @@ def pq_adc_topk(
     query_vec_col: str = "query_vec",
     round_to: int = 6,
     batch_buffer: int = 4,
-    rotation=None,
 ) -> DataFrame:
-    """ADC batch top-k over the compressed corpus →
-    (query_id, id, adc_score, rn).
+    """ADC batch top-k over the codes → (query_id, id, adc_score, rn),
+    adc_score = round(Σ_s round(lut, 9), 6)."""
+    from mcp_vector_search_spark.operators import kernel
 
-    Per query one (m × k) lookup table of round-9 partial inner
-    products (query subvector · codebook entry); per Arrow batch the
-    score is m table gathers + a sum — the corpus floats are never
-    touched. Per-batch partial top-k keeps the rank-window shuffle at
-    O(batches·nq·k). ADC score = round(Σ_s round(lut, 9), 6); ranking
-    ties break on the id column, same as every exact path.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from mcp_vector_search_spark.operators.topk import (
-        _partial_topk,
-        _safe_norms,
-        id_type,
-    )
-
-    cb = _collect_codebooks(codebooks)
-    m, _, dsub = cb.shape
-    qpd = queries.select(query_id_col, query_vec_col).toPandas()
-    Q = np.stack(qpd[query_vec_col].to_numpy()).astype(np.float64)
-    Q /= _safe_norms(Q)
-    if rotation is not None:
-        # orthogonal: rotated-space inner products == original ones
-        Q = Q @ rotation.T
-    qids = qpd[query_id_col].to_numpy()
-    nq = len(qids)
-    # lut[qi, s, c] = round(Q_sub · cb[s, c], 9)
-    lut = round_half_up(
-        np.einsum("qsd,scd->qsc", Q.reshape(nq, m, dsub), cb), 9
-    )
-    keep = k * batch_buffer
-
-    def score(batches):
-        for pdf in batches:
-            C = np.stack(pdf["codes"].to_numpy())  # (b, m)
-            b = C.shape[0]
-            S = np.zeros((b, nq), dtype=np.float64)
-            for s in range(m):
-                S += lut[:, s, C[:, s]].T  # (b, nq)
-            S = round_half_up(S, round_to)
-            vids = pdf[id_col].to_numpy()
-            if b > keep:
-                idx = _partial_topk(S, vids, keep)
-            else:
-                idx = np.tile(np.arange(b)[:, None], (1, nq))
-            rows = idx.shape[0]
-            yield pd.DataFrame(
-                {
-                    query_id_col: np.repeat(qids[None, :], rows, axis=0).ravel(),
-                    id_col: vids[idx].ravel(),
-                    "adc_score": np.take_along_axis(S, idx, axis=0).ravel(),
-                }
-            )
-
-    cand = codes.select(id_col, "codes").mapInPandas(
-        score,
-        f"{query_id_col} {id_type(queries, query_id_col)}, "
-        f"{id_col} {id_type(codes, id_col)}, adc_score double",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("adc_score"), F.asc(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "adc_score", "rn")
+    qs = kernel.collect_queries(queries, query_id_col, query_vec_col)
+    return kernel.score_topk(
+        codes, kernel.rows(id_col, "codes"), qs, k,
+        kernel.pq_codec(qs, _collect_codebooks(codebooks)), "adc_score", round_to,
+        batch_buffer,
     )
 
 
@@ -470,48 +262,16 @@ def pq_topk_refined(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     round_to: int = 6,
-    rotation=None,
 ) -> DataFrame:
-    """ADC shortlist → exact rerank (the reference's
-    ``refine_factor=5`` two-stage shape, ``vectors_backend.py:1336``)
-    → (query_id, id, cos_sim, rn).
+    """ADC shortlist (k·rerank_factor) → exact rerank → (query_id, id,
+    cos_sim, rn)."""
+    from mcp_vector_search_spark.operators.kernel import exact_rerank
 
-    The ADC pass never reads the float corpus; only the
-    O(nq·k·rerank_factor) shortlist joins back to full-precision
-    vectors for the exact cosine. That join is an equi-join on the id
-    column — broadcastable whenever the shortlist is small, and the
-    rank window input is already shortlist-sized.
-    """
     shortlist = pq_adc_topk(
-        codes,
-        codebooks,
-        queries,
-        k * rerank_factor,
-        id_col=id_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-        rotation=rotation,
-    ).select(query_id_col, id_col)
-    # join the RAW corpus first, normalize per candidate pair — the
-    # unit transform is the expensive part and only the shortlist
-    # pairs need it (same r5 fix as ivfpq_topk_refined: normalizing
-    # the whole corpus before the join dominated the refined path)
-    v = vectors.select(id_col, vec_col)
-    q = (
-        normalized(queries, query_vec_col, "_uq")
-        .select(query_id_col, "_uq")
+        codes, codebooks, queries, k * rerank_factor, id_col=id_col,
+        query_id_col=query_id_col, query_vec_col=query_vec_col,
     )
-    from mcp_vector_search_spark.functions.vectors import dot
-
-    sim = F.round(dot(F.col("_u"), F.col("_uq")), round_to)
-    cand = (
-        normalized(shortlist.join(v, id_col), vec_col, "_u")
-        .join(F.broadcast(q), query_id_col)
-        .withColumn("cos_sim", sim)
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rn")
+    return exact_rerank(
+        vectors, shortlist, queries, k, vec_col, id_col, query_id_col,
+        query_vec_col, round_to,
     )

@@ -17,11 +17,12 @@ Spark-first shape:
 - codes are an ``array<int>`` column next to the id, co-partitionable
   with an IVF ``cluster_id`` layout (IVF_SQ = write this table
   partitioned by cluster, prune partitions on probe);
-- encode and scoring are Arrow ``mapInPandas`` kernels; scoring
-  decodes per batch (``recon = mn + code·step``, a (b×d) float64
-  intermediate bounded by the Arrow batch size) and GEMMs against the
-  query block, with per-batch partial top-k so the rank-window shuffle
-  carries O(batches·nq·k), never |V|×|Q|.
+- encode is an Arrow ``mapInPandas`` pass; scoring is the shared
+  Arrow kernel (`operators/kernel.py`) with the SQ codec: decode per
+  batch or block (``recon = mn + code·step``, a (b×d) float64
+  intermediate bounded by the unit size), one GEMM against the query
+  block and a partial top-k, so the rank-window shuffle carries
+  O(units·nq·k), never |V|×|Q|.
 
 Determinism contract (shared with ``registry.q_sq_fixed``'s DuckDB
 replay): unit-normalize in float64; code = clip(floor(x + 0.5), 0,
@@ -34,11 +35,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from mcp_vector_search_spark.functions.vectors import normalized
 from mcp_vector_search_spark.operators.ivf import block_step
-from mcp_vector_search_spark.operators.nputil import round_half_up
 
 SQ_LEVELS = 255  # code range [0, 255] — int8-equivalent
 
@@ -144,58 +143,15 @@ def sq_topk(
     round_to: int = 6,
     batch_buffer: int = 4,
 ) -> DataFrame:
-    """Batch top-k over the compressed corpus →
-    (query_id, id, sq_score, rn): per Arrow batch decode
-    (recon = mn + codes·step) then one GEMM against the unit query
-    block; per-batch partial top-k bounds the rank-window shuffle at
-    O(batches·nq·k). sq_score ≈ cosine against the quantized corpus.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from mcp_vector_search_spark.operators.topk import (
-        _partial_topk,
-        _safe_norms,
-        id_type,
-    )
+    """Batch top-k over the per-row code table → (query_id, id,
+    sq_score, rn); sq_score ≈ cosine against the quantized corpus."""
+    from mcp_vector_search_spark.operators import kernel
 
     mn, step, _ = _collect_bounds(bounds)
-    qpd = queries.select(query_id_col, query_vec_col).toPandas()
-    Q = np.stack(qpd[query_vec_col].to_numpy()).astype(np.float64)
-    Q /= _safe_norms(Q)
-    qids = qpd[query_id_col].to_numpy()
-    keep = k * batch_buffer
-
-    def score(batches):
-        for pdf in batches:
-            C = np.stack(pdf["codes"].to_numpy()).astype(np.float64)  # (b, d)
-            R = mn + C * step
-            S = round_half_up(R @ Q.T, round_to)  # (b, nq)
-            vids = pdf[id_col].to_numpy()
-            b = C.shape[0]
-            if b > keep:
-                idx = _partial_topk(S, vids, keep)
-            else:
-                idx = np.tile(np.arange(b)[:, None], (1, len(qids)))
-            rows = idx.shape[0]
-            yield pd.DataFrame(
-                {
-                    query_id_col: np.repeat(qids[None, :], rows, axis=0).ravel(),
-                    id_col: vids[idx].ravel(),
-                    "sq_score": np.take_along_axis(S, idx, axis=0).ravel(),
-                }
-            )
-
-    cand = codes.select(id_col, "codes").mapInPandas(
-        score,
-        f"{query_id_col} {id_type(queries, query_id_col)}, "
-        f"{id_col} {id_type(codes, id_col)}, sq_score double",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sq_score"), F.asc(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "sq_score", "rn")
+    qs = kernel.collect_queries(queries, query_id_col, query_vec_col)
+    return kernel.score_topk(
+        codes, kernel.rows(id_col, "codes"), qs, k, kernel.sq_codec(qs.Q, mn, step),
+        "sq_score", round_to, batch_buffer,
     )
 
 
@@ -213,57 +169,25 @@ def sq_topk_refined(
     round_to: int = 6,
     packed_codes: DataFrame | None = None,
 ) -> DataFrame:
-    """SQ shortlist → exact cosine rerank (the reference's
-    ``refine_factor=5`` two-stage shape, ``vectors_backend.py:1336``)
-    → (query_id, id, cos_sim, rn). Only the O(nq·k·rerank_factor)
-    shortlist joins back to the float corpus. Pass `packed_codes`
-    (an `sq_pack` layout) to scan packed blocks for the shortlist."""
-    from mcp_vector_search_spark.functions.vectors import dot
+    """SQ shortlist (k·rerank_factor) → exact rerank → (query_id, id,
+    cos_sim, rn); scans `packed_codes` when given, else `codes`."""
+    from mcp_vector_search_spark.operators.kernel import exact_rerank
 
     if codes is None and packed_codes is None:
         raise ValueError(
             "sq_topk_refined needs a code layout: pass `codes` "
             "(per-row) or `packed_codes` (sq_pack blocks)"
         )
-    if packed_codes is not None:
-        shortlist = sq_topk_packed(
-            packed_codes,
-            bounds,
-            queries,
-            k * rerank_factor,
-            id_col=id_col,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-        ).select(query_id_col, id_col)
-    else:
-        shortlist = sq_topk(
-            codes,
-            bounds,
-            queries,
-            k * rerank_factor,
-            id_col=id_col,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-        ).select(query_id_col, id_col)
-    # join the RAW corpus first, normalize per candidate pair (same
-    # r5 fix as pq/ivfpq_topk_refined: unit-transforming the whole
-    # corpus before the join dominated the refined path)
-    v = vectors.select(id_col, vec_col)
-    q = (
-        normalized(queries, query_vec_col, "_uq")
-        .select(query_id_col, "_uq")
+    shortlist_fn, layout = (
+        (sq_topk_packed, packed_codes) if packed_codes is not None else (sq_topk, codes)
     )
-    sim = F.round(dot(F.col("_u"), F.col("_uq")), round_to)
-    cand = (
-        normalized(shortlist.join(v, id_col), vec_col, "_u")
-        .join(F.broadcast(q), query_id_col)
-        .withColumn("cos_sim", sim)
+    shortlist = shortlist_fn(
+        layout, bounds, queries, k * rerank_factor, id_col=id_col,
+        query_id_col=query_id_col, query_vec_col=query_vec_col,
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rn")
+    return exact_rerank(
+        vectors, shortlist, queries, k, vec_col, id_col, query_id_col,
+        query_vec_col, round_to,
     )
 
 
@@ -435,67 +359,12 @@ def sq_topk_packed(
     round_to: int = 6,
     batch_buffer: int = 4,
 ) -> DataFrame:
-    """Batch top-k over an `sq_pack` layout — identical results to
-    `sq_topk` (same decode, round-6 GEMM scores, tie-breaks)."""
-    import numpy as np
-    import pandas as pd
-
-    from mcp_vector_search_spark.operators.topk import (
-        _partial_topk,
-        _safe_norms,
-        id_type,
-    )
+    """`sq_topk` over an `sq_pack` layout, identical results."""
+    from mcp_vector_search_spark.operators import kernel
 
     mn, step, _ = _collect_bounds(bounds)
-    qpd = queries.select(query_id_col, query_vec_col).toPandas()
-    Q = np.stack(qpd[query_vec_col].to_numpy()).astype(np.float64)
-    Q /= _safe_norms(Q)
-    qids = qpd[query_id_col].to_numpy()
-    keep = k * batch_buffer
-    out_id_t = packed_codes.schema["vec_ids"].dataType.elementType.simpleString()
-
-    def score_blocks(batches):
-        empty = pd.DataFrame(
-            {
-                query_id_col: qids[:0],
-                id_col: np.empty(0, dtype=object),
-                "sq_score": np.empty(0, dtype=np.float64),
-            }
-        )
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                Cm = np.frombuffer(row.codes, dtype=np.uint8).reshape(row.n, row.d)
-                R = mn + Cm.astype(np.float64) * step
-                S = round_half_up(R @ Q.T, round_to)
-                vids = np.asarray(row.vec_ids)
-                b = Cm.shape[0]
-                if b > keep:
-                    idx = _partial_topk(S, vids, keep)
-                else:
-                    idx = np.tile(np.arange(b)[:, None], (1, len(qids)))
-                rows = idx.shape[0]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            query_id_col: np.repeat(
-                                qids[None, :], rows, axis=0
-                            ).ravel(),
-                            id_col: vids[idx].ravel(),
-                            "sq_score": np.take_along_axis(S, idx, axis=0).ravel(),
-                        }
-                    )
-                )
-            yield pd.concat(outs) if outs else empty
-
-    cand = packed_codes.mapInPandas(
-        score_blocks,
-        f"{query_id_col} {id_type(queries, query_id_col)}, "
-        f"{id_col} {out_id_t}, sq_score double",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sq_score"), F.asc(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "sq_score", "rn")
+    qs = kernel.collect_queries(queries, query_id_col, query_vec_col)
+    return kernel.score_topk(
+        packed_codes, kernel.blocks(id_col, "codes", "d", None), qs, k,
+        kernel.sq_codec(qs.Q, mn, step), "sq_score", round_to, batch_buffer,
     )

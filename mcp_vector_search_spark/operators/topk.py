@@ -1,12 +1,14 @@
 """Vector top-k search operators (reference J1/T1,
 ``vectors_backend.py:733-876``).
 
-Two physical strategies, same logical semantics:
+Three physical strategies, same logical semantics:
 
-- `knn_brute_force` — exact cosine scan + TakeOrderedAndProject. The
-  scan is embarrassingly parallel; per-partition top-k is combined on
-  the driver (k rows per partition, not the data). This is the
-  correctness baseline and the right plan under ~10M vectors/query.
+- `knn_brute_force` / `topk_per_query` — exact cosine in SQL
+  expressions: a broadcast join plus TakeOrderedAndProject or a rank
+  window. The correctness baseline the oracle gates replay.
+- `topk_per_query_np` — the same exact answer through the one Arrow
+  scoring kernel (`operators/kernel.py`) that also serves every IVF,
+  SQ, PQ and IVF-PQ path.
 - `ivf_topk` (see `ivf.py`) — KMeans-bucketed scan pruning, the
   100 TB path (reference: IVF_SQ index, ``vectors_backend.py:1264-1341``).
 """
@@ -18,7 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mcp_vector_search_spark.functions.vectors import dot, l2_norm, unit_expr
-from mcp_vector_search_spark.operators.nputil import round_half_up
 
 
 def _normalized(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
@@ -107,37 +108,6 @@ def id_type(df: DataFrame, col: str) -> str:
     return df.schema[col].dataType.simpleString()
 
 
-def _safe_norms(M):
-    """Row norms with zero mapped to 1 — a zero vector stays the zero
-    vector (cosine 0 to everything), the same semantics `unit_expr`
-    gives the DataFrame paths; bare division would NaN-poison the
-    scores and rank the zero vector FIRST under DESC NaN ordering."""
-    import numpy as np
-
-    n = np.linalg.norm(M, axis=1, keepdims=True)
-    n[n == 0] = 1.0
-    return n
-
-
-def _partial_topk(S, vids, keep: int):
-    """Per-column top-`keep` row indexes of score matrix S, matching
-    the exact path's (score DESC, id ASC) order at the cutoff: the
-    cheap argpartition is score-only, so columns where a non-kept row
-    ties the boundary score fall back to an exact lexsort — rare, but
-    without it a batch of >keep identical vectors could drop the
-    lowest ids the exact path would return."""
-    import numpy as np
-
-    idx = np.argpartition(-S, keep - 1, axis=0)[:keep]
-    kept_scores = np.take_along_axis(S, idx, axis=0)
-    kth = kept_scores.min(axis=0)  # boundary score per column
-    n_tied_total = (S == kth[None, :]).sum(axis=0)
-    n_tied_kept = (kept_scores == kth[None, :]).sum(axis=0)
-    for j in np.nonzero(n_tied_total != n_tied_kept)[0]:
-        idx[:, j] = np.lexsort((vids, -S[:, j]))[:keep]
-    return idx
-
-
 def topk_per_query_np(
     vectors: DataFrame,
     queries: DataFrame,
@@ -148,71 +118,15 @@ def topk_per_query_np(
     id_col: str = "vec_id",
     round_to: int = 6,
     batch_buffer: int = 4,
-    _queries_np=None,
+    _query_set=None,
 ) -> DataFrame:
-    """Arrow-vectorized batch top-k: the high-throughput kernel.
+    """`topk_per_query` through the Arrow kernel (`operators/kernel.py`).
+    `_query_set`: the `QuerySet` a router already collected from
+    `queries`, so the query lineage runs once."""
+    from mcp_vector_search_spark.operators import kernel
 
-    `_queries_np` — a (Q_unit, qids) pair already collected from THIS
-    query frame (the regime router's probe-fraction measurement): a
-    second toPandas here would double-execute the query frame's
-    lineage, and on a limit()/sampled frame could collect a DIFFERENT
-    query set than the one the routing decision saw.
-
-    Same semantics as `topk_per_query` (reference J1 batch search,
-    ``vectors_backend.py:733-876``), different physical strategy: the
-    query matrix is collected once (query sets are small by contract —
-    the reference caps search batches the same way) and shipped in the
-    UDF closure; each Arrow batch of vectors computes ONE numpy
-    matmul (batch × dim) @ (dim × nq) instead of per-pair interpreted
-    lambda folds — measured ~10× on 64-d corpora, and the gap widens
-    with dimension. Per batch only the top `k·batch_buffer` rows per
-    query survive (argpartition, score-only cutoff; the buffer absorbs
-    round-to-6 score ties at the boundary), so the shuffle into the
-    final exact rank window carries O(batches · nq · k) rows, never
-    |V|×|Q|. That partial-then-merge shape is what survives a 1000-
-    executor scale-up: per-partition flops vectorized, shuffle tiny.
-    """
-    import numpy as np
-    import pandas as pd
-
-    if _queries_np is None:
-        qpd = queries.select(query_id_col, query_vec_col).toPandas()
-        Q = np.stack(qpd[query_vec_col].to_numpy()).astype(np.float64)
-        Q /= _safe_norms(Q)
-        qids = qpd[query_id_col].to_numpy()
-    else:
-        Q, qids = _queries_np
-    nq = len(qids)
-    keep = min(k * batch_buffer, 1 << 20)
-
-    def score(batches):
-        for pdf in batches:
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            V /= _safe_norms(V)
-            S = round_half_up(V @ Q.T, round_to)  # (b, nq)
-            b = S.shape[0]
-            vids = pdf[id_col].to_numpy()
-            if b > keep:
-                idx = _partial_topk(S, vids, keep)  # (keep, nq)
-            else:
-                idx = np.tile(np.arange(b)[:, None], (1, nq))
-            rows = idx.shape[0]
-            yield pd.DataFrame(
-                {
-                    query_id_col: np.repeat(qids[None, :], rows, axis=0).ravel(),
-                    id_col: vids[idx].ravel(),
-                    "cos_sim": np.take_along_axis(S, idx, axis=0).ravel(),
-                }
-            )
-
-    cand = vectors.select(id_col, vec_col).mapInPandas(
-        score,
-        f"{query_id_col} {id_type(queries, query_id_col)}, "
-        f"{id_col} {id_type(vectors, id_col)}, cos_sim double",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rn")
+    qs = _query_set or kernel.collect_queries(queries, query_id_col, query_vec_col)
+    return kernel.score_topk(
+        vectors, kernel.rows(id_col, vec_col), qs, k, kernel.float_codec(qs.Q, True),
+        "cos_sim", round_to, batch_buffer,
     )

@@ -18,6 +18,7 @@ Cross-engine determinism rules used throughout (see FIXTURES.md):
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -208,7 +209,7 @@ def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     defaultParallelism, not a constant.
 
     Wired ONLY where an interleaved fresh-session A/B at sf0.1
-    measured a win (r12, tools/ab_r12.py; table in
+    measured a win (r12 interleaved A/B; table in
     OPTIMIZATION_r12.md): expression-heavy scans (ngram folds,
     window-hashing, shingle/simhash fingerprints) win 1.3-2.7x;
     shuffle-dominated or sink-bound gates (bm25 lifecycle writes,
@@ -916,6 +917,18 @@ def _layout_equal_row(codec, staged, fused, keys, payload_cols, serve):
     )
 
 
+@contextmanager
+def _cached(*frames: DataFrame):
+    """Cache `frames` for the block and unpersist them on every exit,
+    an exception included, so a failing gate leaves nothing cached."""
+    frames = tuple(f.cache() for f in frames)
+    try:
+        yield frames
+    finally:
+        for f in frames:
+            f.unpersist()
+
+
 def _fused_family_rows(spark, sf_dir, codecs):
     """Equality rows for the requested fused codecs — the shared body
     of `q_ivf_fused` (in-window: "ivf" only) and `q_fused_family`
@@ -948,93 +961,85 @@ def _fused_family_rows(spark, sf_dir, codecs):
     # the quantizer fits, both pack builds per codec, and the sq train
     # each re-executed the parquet-scan+project lineage — ~10 actions
     # over the same tiny frame. Every row is fully computed (collected)
-    # before this function returns, so the unpersist below is safe.
+    # before this function returns, so releasing the caches is safe.
     # Warm best-of-3 A/B at sf0.1: 12.29 → 11.93 s (clean canaries);
     # the remaining ~12 s is the gate's documented floor — 2 pack
     # builds per codec + 2 comparison actions per codec + 3 driver
     # sample-fit collects, phase-timed in OPTIMIZATION_r13.md.
-    emb = _emb(spark, sf_dir).cache()
-    # pinned once (r12; guide §7.2): every serve-parity leg collects
-    # the query block driver-side for its LUT/GEMM prep, so an
-    # unmaterialized lineage re-scans the vector table per leg
-    queries = emb.filter(F.col("vec_id") % 37 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    ).localCheckpoint(eager=True)
-    # caches: each codec's comparison runs 2 actions (merged block
-    # aggregate, symmetric serve difference) — without them the second
-    # action would re-execute the sample fit + corpus pack end to end
-    # (r7 review; r12 cut the action count from ~5)
+    with _cached(_emb(spark, sf_dir)) as (emb,):
+        # pinned once (r12): every serve-parity leg collects
+        # the query block driver-side for its LUT/GEMM prep, so an
+        # unmaterialized lineage re-scans the vector table per leg
+        queries = emb.filter(F.col("vec_id") % 37 == 0).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+        ).localCheckpoint(eager=True)
+        # caches: each codec's comparison runs 2 actions (merged block
+        # aggregate, symmetric serve difference) — without them the
+        # second action would re-execute the sample fit + corpus pack
+        # end to end (r7 review; r12 cut the action count from ~5).
+        # `_cached` releases every one on any exit, raise included.
 
-    def _coarse_rows():
-        """ivf and/or ivfpq legs — they share the coarse quantizer."""
-        out = []
-        assigned = cents = None
-        if "ivf" in codecs or "ivfpq" in codecs:
+        def _coarse_rows():
+            """ivf and/or ivfpq legs — they share the coarse quantizer."""
+            if "ivf" not in codecs and "ivfpq" not in codecs:
+                return []
+            out = []
             assigned, cents = ivf_build_sampled(emb, num_clusters=16)
-            assigned = assigned.cache()
-        if "ivf" in codecs:
-            two = ivf_pack(assigned).cache()
-            fused = ivf_pack_fused(emb, cents).cache()
-            out.append(_layout_equal_row(
-                "ivf", two, fused, ["cluster_id", "block_id"],
-                ["n", "dtype", "vec_ids", "mat"],
-                lambda p: ivf_topk_batch_packed(
-                    p, cents, queries, BATCH_K, nprobes=4
-                ),
-            ))
-            two.unpersist()
-            fused.unpersist()
+            with _cached(assigned) as (assigned,):
+                if "ivf" in codecs:
+                    with _cached(ivf_pack(assigned), ivf_pack_fused(emb, cents)) as (two, fused):
+                        out.append(_layout_equal_row(
+                            "ivf", two, fused, ["cluster_id", "block_id"],
+                            ["n", "dtype", "vec_ids", "mat"],
+                            lambda p: ivf_topk_batch_packed(
+                                p, cents, queries, BATCH_K, nprobes=4
+                            ),
+                        ))
+                if "ivfpq" in codecs:
+                    enc, _, cbs = ivfpq_build(
+                        emb, m=16, k_codes=64, coarse=(assigned, cents)
+                    )
+                    with _cached(ivfpq_pack(enc), ivfpq_pack_fused(emb, cents, cbs)) as (
+                        pq_two, pq_fused,
+                    ):
+                        out.append(_layout_equal_row(
+                            "ivfpq", pq_two, pq_fused, ["cluster_id", "block_id"],
+                            ["n", "dtype", "vec_ids", "codes"],
+                            lambda p: ivfpq_topk_packed(
+                                p, cents, cbs, queries, BATCH_K, nprobes=4
+                            ),
+                        ))
+            return out
 
-        if "ivfpq" in codecs:
-            enc, _, cbs = ivfpq_build(
-                emb, m=16, k_codes=64, coarse=(assigned, cents)
-            )
-            pq_two = ivfpq_pack(enc).cache()
-            pq_fused = ivfpq_pack_fused(emb, cents, cbs).cache()
-            out.append(_layout_equal_row(
-                "ivfpq", pq_two, pq_fused, ["cluster_id", "block_id"],
-                ["n", "dtype", "vec_ids", "codes"],
-                lambda p: ivfpq_topk_packed(
-                    p, cents, cbs, queries, BATCH_K, nprobes=4
-                ),
-            ))
-            pq_two.unpersist()
-            pq_fused.unpersist()
-        if assigned is not None:
-            assigned.unpersist()
-        return out
+        def _sq_rows():
+            if "sq" not in codecs:
+                return []
+            bounds = sq_train(emb)
+            bounds = spark.createDataFrame(bounds.collect(), bounds.schema)
+            with _cached(sq_pack(sq_encode(emb, bounds)), sq_pack_fused(emb, bounds)) as (
+                sq_two, sq_fused_df,
+            ):
+                return [_layout_equal_row(
+                    "sq", sq_two, sq_fused_df, ["bucket", "block_id"],
+                    ["n", "vec_ids", "codes"],
+                    lambda p: sq_topk_packed(p, bounds, queries, BATCH_K),
+                )]
 
-    def _sq_rows():
-        if "sq" not in codecs:
-            return []
-        bounds = sq_train(emb)
-        bounds = spark.createDataFrame(bounds.collect(), bounds.schema)
-        sq_two = sq_pack(sq_encode(emb, bounds)).cache()
-        sq_fused_df = sq_pack_fused(emb, bounds).cache()
-        row = _layout_equal_row(
-            "sq", sq_two, sq_fused_df, ["bucket", "block_id"],
-            ["n", "vec_ids", "codes"],
-            lambda p: sq_topk_packed(p, bounds, queries, BATCH_K),
-        )
-        sq_two.unpersist()
-        sq_fused_df.unpersist()
-        return [row]
+        if "sq" in codecs and ("ivf" in codecs or "ivfpq" in codecs):
+            # the sq family is independent of the coarse-quantizer
+            # family: overlap the two chains of blocking driver actions
+            # so the sq leg back-fills executors idled by the other
+            # leg's driver-side steps. Row order stays
+            # deterministic — results are assembled [coarse..., sq]
+            # regardless of finish order.
+            from concurrent.futures import ThreadPoolExecutor
 
-    if "sq" in codecs and ("ivf" in codecs or "ivfpq" in codecs):
-        # the sq family is independent of the coarse-quantizer family:
-        # overlap the two chains of blocking driver actions so the sq
-        # leg back-fills executors idled by the other leg's driver-side
-        # steps (guide §2.6). Row order stays deterministic — results
-        # are assembled [coarse..., sq] regardless of finish order.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_coarse = pool.submit(_coarse_rows)
-            f_sq = pool.submit(_sq_rows)
-            rows = f_coarse.result() + f_sq.result()
-    else:
-        rows = _coarse_rows() + _sq_rows()
-    emb.unpersist()
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                f_coarse = pool.submit(_coarse_rows)
+                f_sq = pool.submit(_sq_rows)
+                rows = f_coarse.result() + f_sq.result()
+        else:
+            rows = _coarse_rows() + _sq_rows()
 
     return spark.createDataFrame(
         rows,

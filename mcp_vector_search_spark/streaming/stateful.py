@@ -7,14 +7,18 @@ gap).
 the state store. A new event for the key either *coalesces* into the
 pending entry (arrived inside the debounce gap) or *releases* it (the
 pending entry had gone quiet before this event arrived, so it is
-emitted and the new event becomes pending). A processing-time timeout
-flushes keys that go quiet forever. State is keyed per file path, so
+emitted and the new event becomes pending). An optional processing-time
+timeout flushes keys that go quiet forever. State is keyed per file path, so
 the operator scales horizontally with the shuffle — exactly the
 watcher semantics, minus the hand-rolled timer wheel.
 
 The state store checkpoint makes this restart-safe: a re-run with the
 same checkpoint resumes pending entries (tested across two
-availableNow runs in tests/test_stateful_debounce.py).
+availableNow runs in tests/test_stateful_debounce.py). Without the
+timeout a bounded (availableNow) run stops once its input is
+processed, pending keys kept in state; with it, Spark runs no-data
+batches for as long as any timer may fire, so such a run never
+stops — the timeout is for continuous (processingTime) queries.
 """
 
 from __future__ import annotations
@@ -30,9 +34,9 @@ STATE_SCHEMA = "ts long, text string"
 def debounce_fn(gap: int, timeout_ms: int | None = None):
     """Build the applyInPandasWithState function with a fixed quiet-gap
     (same time unit as the `ts` column). `timeout_ms` is the
-    processing-time flush for keys that go quiet forever (defaults to
-    gap seconds); pass a large value to make runs deterministic when
-    wall-clock time must not release state (tests)."""
+    processing-time flush for keys that go quiet forever; None (the
+    default) keeps pending keys in state until a later event for the
+    key releases them."""
 
     def fn(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: Any
@@ -57,7 +61,8 @@ def debounce_fn(gap: int, timeout_ms: int | None = None):
                 pending = (int(r.ts), r.text)
         if pending is not None:
             state.update(pending)
-            state.setTimeoutDuration(timeout_ms if timeout_ms is not None else gap * 1000)
+            if timeout_ms is not None:
+                state.setTimeoutDuration(timeout_ms)
         if emitted:
             yield pd.DataFrame(
                 {
@@ -73,7 +78,8 @@ def debounce_fn(gap: int, timeout_ms: int | None = None):
 def debounced_changes(changes, gap: int, timeout_ms: int | None = None):
     """changes: streaming DataFrame (source, ts, text) → debounced
     stream of the same shape; one output row per quiet-gap-separated
-    burst per file, carrying the burst's latest payload."""
+    burst per file, carrying the burst's latest payload. Pass
+    `timeout_ms` only to a continuous query (see the module note)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return changes.groupBy("source").applyInPandasWithState(
@@ -81,5 +87,8 @@ def debounced_changes(changes, gap: int, timeout_ms: int | None = None):
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout if timeout_ms is None
+            else GroupStateTimeout.ProcessingTimeTimeout
+        ),
     )

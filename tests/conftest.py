@@ -17,6 +17,23 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def no_stream_left_running():
+    """Fail any test that leaves a streaming query running: a live
+    query keeps scheduling batches through every later test. The
+    leftovers are stopped first so the next test starts clean."""
+    yield
+    from pyspark.sql import SparkSession
+
+    session = SparkSession.getActiveSession()
+    left = session.streams.active if session is not None else []
+    for q in left:
+        q.stop()
+    if left:
+        pytest.fail(f"test left {len(left)} streaming quer(y/ies) running: "
+                    f"{[q.name or q.id for q in left]}")
+
+
 @pytest.fixture(scope="session")
 def docs(spark):
     rows = [

@@ -106,12 +106,12 @@ def test_search_batch_auto_routes_probe_above_crossover(spark, monkeypatch):
     real_packed = ivf_mod.ivf_topk_batch_packed
 
     def spy(*a, **k):
-        seen["probe_sets"] = k.get("_probe_sets")
+        seen["query_set"] = k.get("_query_set")
         return real_packed(*a, **k)
 
     monkeypatch.setattr(ivf_mod, "ivf_topk_batch_packed", spy)
     auto = sorted(map(tuple, p.search_batch(q, limit=5).collect()))
-    assert seen["probe_sets"] is not None
+    assert seen["query_set"] is not None
     assert p.ann_serving_regime()["regime"] == "probe"
     monkeypatch.undo()
     forced = sorted(map(tuple, p.search_batch(q, limit=5, route="probe").collect()))
@@ -266,3 +266,33 @@ def test_last_route_stamp_is_construction_deep(spark, monkeypatch):
     with pytest.raises(Exception):
         frame.collect()
     assert p.last_route["served"] == "brute"  # and it stays
+
+
+@pytest.mark.parametrize(
+    "kind, route",
+    [(None, "brute"), ("ivf", "probe"), ("ivfsq", "auto"), ("ivfpq", "auto")],
+)
+def test_search_batch_serving_edge_cases(spark, kind, route):
+    """Every kernel route — brute, IVF probe, SQ and IVF-PQ — serves
+    the edge cases: an empty query set returns an empty frame, a zero
+    query vector scores 0.0 everywhere and ranks the lowest ids first,
+    and a limit above the corpus size returns every row."""
+    p = _project(spark)
+    if kind is not None:
+        p.build_ann_index(num_clusters=8, kind=kind)  # 8 ≤ NPROBES: all probed
+    n = p.vectors.count()
+    q = _queries(p, 2)
+
+    empty = p.search_batch(q.limit(0), limit=3, route=route)
+    assert empty.columns == ["query_id", "vec_id", "cos_sim", "rn"]
+    assert empty.collect() == []
+
+    zero = spark.createDataFrame(
+        [(7, [0.0] * 64)], "query_id long, query_vec array<double>"
+    )
+    got = p.search_batch(zero, limit=5, route=route).orderBy("rn").collect()
+    lowest = [r.vec_id for r in p.vectors.orderBy("vec_id").limit(5).collect()]
+    assert [(r.vec_id, r.cos_sim) for r in got] == [(v, 0.0) for v in lowest]
+
+    every = p.search_batch(q, limit=n + 5, route=route)
+    assert every.count() == 2 * n

@@ -72,12 +72,13 @@ def test_refined_recall_on_testdata(emb, index):
 def test_partial_probe_subsets_full(emb, index):
     """Probing fewer clusters returns a subset of the all-probe ADC
     candidate universe — monotonicity of the probe filter."""
-    from mcp_vector_search_spark.operators.ivfpq import ivfpq_topk
+    from mcp_vector_search_spark.operators.ivfpq import ivfpq_pack, ivfpq_topk_packed
 
     q = _queries(emb, 2)
     encoded, centroids, codebooks = index
-    full = ivfpq_topk(encoded, centroids, codebooks, q, 50, nprobes=8)
-    part = ivfpq_topk(encoded, centroids, codebooks, q, 50, nprobes=2)
+    packed = ivfpq_pack(encoded)
+    full = ivfpq_topk_packed(packed, centroids, codebooks, q, 50, nprobes=8)
+    part = ivfpq_topk_packed(packed, centroids, codebooks, q, 50, nprobes=2)
     fs = {(r.query_id, r.vec_id, r.adc_score) for r in full.collect()}
     # every partial-probe hit must appear in the full scoring with the
     # same ADC score (scores are probe-set independent)
@@ -91,9 +92,9 @@ def test_partial_probe_subsets_full(emb, index):
 
 
 def test_string_ids(spark, emb):
-    """The grouped ADC kernel derives id dtypes from the input schema
+    """The per-row ADC source derives id dtypes from the input schema
     (ADVICE r2) — a string-keyed corpus must work end-to-end."""
-    from mcp_vector_search_spark.operators.ivfpq import ivfpq_build, ivfpq_topk
+    from mcp_vector_search_spark.operators.ivfpq import ivfpq_build, ivfpq_topk_refined
 
     s = emb.limit(64).select(
         F.concat(F.lit("doc-"), F.col("vec_id")).alias("vec_id"), "embedding"
@@ -103,26 +104,27 @@ def test_string_ids(spark, emb):
         F.concat(F.lit("q-"), F.col("vec_id")).alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    out = ivfpq_topk(encoded, centroids, codebooks, q, 5, nprobes=4).collect()
+    out = ivfpq_topk_refined(s, encoded, centroids, codebooks, q, 5, nprobes=4).collect()
     assert len(out) == 10
     assert all(r.vec_id.startswith("doc-") and r.query_id.startswith("q-") for r in out)
 
 
 def test_ivfpq_packed_codes_parity(spark):
     """`ivfpq_pack` + `ivfpq_topk_packed` return BIT-IDENTICAL rows to
-    the per-row ADC scan (r5: codes packing is a layout change, never
-    an answer change), and the refined path accepts the packed layout
-    for its shortlist."""
+    the kernel's per-row ADC source (r5: codes packing is a layout
+    change, never an answer change), and the refined path accepts
+    either layout for its shortlist."""
     from pyspark.sql import functions as F
 
     from mcp_vector_search_spark import io
+    from mcp_vector_search_spark.operators import kernel
     from mcp_vector_search_spark.operators.ivfpq import (
         ivfpq_build,
         ivfpq_pack,
-        ivfpq_topk,
         ivfpq_topk_packed,
         ivfpq_topk_refined,
     )
+    from mcp_vector_search_spark.operators.pq import _collect_codebooks
 
     emb = io.table(spark, SF_DIR, "embeddings")
     enc, cents, cbs = ivfpq_build(emb, num_clusters=8, m=16, k_codes=64)
@@ -137,7 +139,12 @@ def test_ivfpq_packed_codes_parity(spark):
     queries = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    a = sorted(map(tuple, ivfpq_topk(enc, cents, cbs, queries, 10, nprobes=6).collect()))
+    qs = kernel.collect_queries(queries, centroids=cents, nprobes=6)
+    per_row = kernel.score_topk(
+        enc, kernel.rows("vec_id", "codes", "cluster_id"), qs, 10,
+        kernel.pq_codec(qs, _collect_codebooks(cbs)), "adc_score",
+    )
+    a = sorted(map(tuple, per_row.collect()))
     b = sorted(
         map(tuple, ivfpq_topk_packed(packed, cents, cbs, queries, 10, nprobes=6).collect())
     )

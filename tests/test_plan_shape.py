@@ -60,7 +60,7 @@ def test_kg_boost_broadcasts_matched_nodes(spark):
 
 
 def test_vectorized_topk_shuffles_candidates_only(spark):
-    """The np kernel's shuffle input is the mapInPandas candidate
+    """The np kernel's shuffle input is the mapInArrow candidate
     stream (O(batches·nq·k)), never the |V|×|Q| cross product — the
     plan has exactly one exchange (the rank window) above the Python
     stage."""
@@ -71,7 +71,7 @@ def test_vectorized_topk_shuffles_candidates_only(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     plan = _plan(topk_per_query_np(emb, q, 5))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Join" not in plan  # scoring happens in the kernel, not a join
     # exactly one exchange node: the rank-window shuffle above the
     # kernel (formatted plans print each node in both the tree and the
@@ -83,7 +83,7 @@ def test_vectorized_topk_shuffles_candidates_only(spark):
 
 def test_api_search_batch_uses_np_kernel(spark):
     """VERDICT r2 #5: the façade's batch search must land on the
-    vectorized partial-top-k kernel (MapInPandas, no scored-pair join),
+    vectorized partial-top-k kernel (MapInArrow, no scored-pair join),
     never the |Q|×|V| HOF path."""
     from mcp_vector_search_spark.api import SparkProject
 
@@ -93,20 +93,20 @@ def test_api_search_batch_uses_np_kernel(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     plan = _plan(proj.search_batch(q, 5))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Join" not in plan
 
     # with an ANN index built (r5: the PACKED block layout), the probe
     # plan scans the cached pack through the probe filter — the filter
     # lands inside the InMemoryTableScan, scoring is one shuffle-free
-    # MapInPandas, and the pack's one-time FlatMapGroupsInPandas
+    # MapInArrow, and the pack's one-time FlatMapGroupsInPandas
     # build exists only BELOW the cache boundary, never re-executed
     # per query. r9: route="probe" pins this layout plan explicitly —
     # route="auto" on this sub-crossover corpus now picks the brute
     # kernel by the measured regime curve (tests/test_ann_routing.py)
     proj.build_ann_index(num_clusters=4)
     plan2 = _plan(proj.search_batch(q, 5, route="probe"))
-    assert "MapInPandas" in plan2
+    assert "MapInArrow" in plan2
     assert "InMemoryTableScan" in plan2
     assert "CartesianProduct" not in plan2
     served = plan2.split("InMemoryRelation")[0]  # the executed portion
@@ -114,14 +114,14 @@ def test_api_search_batch_uses_np_kernel(spark):
     # auto on the same project: the routed brute plan is still the
     # vectorized kernel, never a scored-pair join
     plan3 = _plan(proj.search_batch(q, 5))
-    assert "MapInPandas" in plan3
+    assert "MapInArrow" in plan3
     assert "Join" not in plan3
 
 
 def test_ivf_np_kernel_is_shuffle_free_below_rank_window(spark):
     """The probed-cluster scan must reach the Python kernel WITHOUT an
     exchange (the r3 fix: groupBy(cluster_id).applyInPandas shuffled
-    every probed row; mapInPandas with within-batch cluster runs does
+    every probed row; mapInArrow with within-batch cluster runs does
     not) — the only exchange in the plan is the rank window above the
     candidate stream, and the probe filter sits on the scan side."""
     import re
@@ -134,7 +134,7 @@ def test_ivf_np_kernel_is_shuffle_free_below_rank_window(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     plan = _plan(ivf_topk_batch_np(assigned, centroids, q, 5, nprobes=3))
-    assert "MapInPandas" in plan and "Join" not in plan
+    assert "MapInArrow" in plan and "Join" not in plan
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1, plan
     assert "cluster_id IN" in plan or "cluster_id#" in plan  # probe pre-filter
 

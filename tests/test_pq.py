@@ -117,134 +117,3 @@ def test_string_ids_survive_the_arrow_kernels(spark):
     out = pq_adc_topk(codes, cb, q, 3).collect()
     assert len(out) == 6
     assert all(isinstance(r.vec_id, str) and isinstance(r.query_id, str) for r in out)
-
-
-def test_opq_rotation_is_orthogonal_and_balances_variance(spark, emb):
-    """ISSUES.md #1 fix path: the OPQ rotation is orthogonal (inner
-    products — hence ADC semantics — preserved exactly) and spreads
-    variance across subspaces more evenly than the identity split."""
-    import numpy as np
-
-    from mcp_vector_search_spark.operators.pq import _unit_rows, opq_rotation
-
-    pdf = emb.select("embedding").limit(400).toPandas()
-    X = _unit_rows(pdf["embedding"])
-    m = 16
-    R = opq_rotation(X, m)
-    d = X.shape[1]
-    assert np.allclose(R @ R.T, np.eye(d), atol=1e-9)
-    # inner products preserved
-    Xr = X @ R.T
-    assert np.allclose(Xr @ Xr.T, X @ X.T, atol=1e-9)
-    # balanced-allocation objective: the permuted PCA basis spreads
-    # variance across subspaces FAR more evenly than the raw
-    # eigenvalue-ordered split (which stacks the top eigenvalues into
-    # the first subspace). On this near-isotropic synthetic corpus the
-    # identity split is already balanced — the rotation exists for
-    # anisotropic real embeddings; what must hold universally is the
-    # allocation beating the unpermuted PCA order.
-    dsub = d // m
-
-    def spread(Y):
-        v = np.array(
-            [Y[:, s * dsub : (s + 1) * dsub].var(axis=0).sum() for s in range(m)]
-        )
-        return v.max() / max(v.min(), 1e-12)
-
-    lam, U = np.linalg.eigh(np.cov(X, rowvar=False))
-    U = U[:, np.argsort(lam)[::-1]]
-    assert spread(Xr) <= spread(X @ U) * 0.9
-
-
-def test_opq_refined_recall_not_worse_than_plain(spark, emb):
-    """OPQ-rotated PQ at the reference refine_factor=5 must match or
-    beat the identity-split recall at the same budget (test scale)."""
-    from mcp_vector_search_spark.operators.pq import (
-        pq_encode,
-        pq_topk_refined,
-        pq_train,
-        pq_train_rotated,
-    )
-    from mcp_vector_search_spark.operators.topk import topk_per_query
-
-    queries = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    brute = {
-        (r.query_id, r.vec_id)
-        for r in topk_per_query(emb, queries, 5).collect()
-    }
-
-    def recall(codebooks, rotation):
-        codes = pq_encode(emb, codebooks, rotation=rotation)
-        got = {
-            (r.query_id, r.vec_id)
-            for r in pq_topk_refined(
-                emb, codes, codebooks, queries, 5, rerank_factor=5,
-                rotation=rotation,
-            ).collect()
-        }
-        return len(brute & got) / len(brute)
-
-    plain = recall(pq_train(emb, m=16, k=32), None)
-    cb_r, R = pq_train_rotated(emb, m=16, k=32)
-    rotated = recall(cb_r, R)
-    assert rotated >= plain - 1e-9
-
-
-def test_aniso_fit_eta1_equals_plain_lloyds():
-    """η=1 collapses the anisotropic objective to the k-means one:
-    assignment adds a zero penalty and the closed-form update solves
-    (n·I)c = Σx — the plain centroid mean. Same seed ⇒ same init ⇒
-    the two fits must agree to solver precision."""
-    import numpy as np
-
-    from mcp_vector_search_spark.operators.pq import (
-        _fit_codebooks,
-        _fit_codebooks_aniso,
-    )
-
-    rng = np.random.default_rng(3)
-    X = rng.normal(size=(400, 16))
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
-    plain = _fit_codebooks(X, m=4, k=8, iters=6, seed=11)
-    aniso = _fit_codebooks_aniso(X, m=4, k=8, iters=6, seed=11, eta=1.0)
-    assert len(plain) == len(aniso)
-    for (s1, c1, v1), (s2, c2, v2) in zip(plain, aniso):
-        assert (s1, c1) == (s2, c2)
-        np.testing.assert_allclose(v1, v2, rtol=1e-9, atol=1e-12)
-
-
-def test_aniso_fit_penalizes_parallel_error():
-    """With η≫1 the fitted centroids sacrifice orthogonal error to cut
-    the parallel (score-corrupting) component: measured parallel MSE
-    under the anisotropic fit must not exceed the plain fit's."""
-    import numpy as np
-
-    from mcp_vector_search_spark.operators.pq import (
-        _fit_codebooks,
-        _fit_codebooks_aniso,
-    )
-
-    rng = np.random.default_rng(5)
-    X = rng.normal(size=(600, 8))
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
-
-    def par_mse(fit, m):
-        dsub = X.shape[1] // m
-        C = np.zeros((m, 16, dsub))
-        for s, c, v in fit:
-            C[s, c] = v
-        tot = 0.0
-        for s in range(m):
-            Xs = X[:, s * dsub : (s + 1) * dsub]
-            nrm = np.maximum(np.linalg.norm(Xs, axis=1), 1e-12)
-            d2 = ((Xs[:, None, :] - C[s][None, :, :]) ** 2).sum(axis=2)
-            a = np.argmin(d2, axis=1)
-            r = Xs - C[s][a]
-            tot += float(((r * Xs).sum(axis=1) / nrm) ** 2 @ np.ones(len(X)))
-        return tot
-
-    plain = _fit_codebooks(X, m=2, k=16, iters=10, seed=21)
-    aniso = _fit_codebooks_aniso(X, m=2, k=16, iters=10, seed=21, eta=8.0)
-    assert par_mse(aniso, 2) <= par_mse(plain, 2) * 1.001

@@ -45,3 +45,28 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     rows = df.collect()
     assert len(rows) > 0 and "rrf_score" in df.columns
+
+
+def test_fused_family_gate_releases_caches_when_a_leg_raises(spark, monkeypatch):
+    """Every frame the fused-family gate caches is unpersisted on the
+    way out, also when a codec leg raises mid-comparison."""
+    import mcp_vector_search_spark.operators.sq as sq_mod
+    from mcp_vector_search_spark.registry import _fused_family_rows
+
+    frame_cls = type(spark.range(1))
+    real_cache = frame_cls.cache
+    cached = []
+
+    def recording_cache(self):
+        cached.append(real_cache(self))
+        return cached[-1]
+
+    def failing_leg(*a, **k):
+        raise RuntimeError("sq leg failed")
+
+    monkeypatch.setattr(frame_cls, "cache", recording_cache)
+    monkeypatch.setattr(sq_mod, "sq_topk_packed", failing_leg)
+    with pytest.raises(RuntimeError, match="sq leg failed"):
+        _fused_family_rows(spark, SF_DIR, ("ivf", "sq"))
+    assert len(cached) >= 6  # the corpus, the assignment, two packs per codec
+    assert [df for df in cached if df.is_cached] == []

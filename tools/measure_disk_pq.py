@@ -42,7 +42,6 @@ sys.path.insert(0, "/root/repo")
 from bench import _du, _inflate_embeddings, _inflated_queries, _noop, _quiesce  # noqa: E402
 from mcp_vector_search_spark import io as eio  # noqa: E402
 from mcp_vector_search_spark.operators.ivf import (  # noqa: E402
-    _driver_probe_sets,
     ivf_build_sampled,
     ivf_pack_fused,
     read_ivf_layout,
@@ -53,6 +52,7 @@ from mcp_vector_search_spark.operators.ivfpq import (  # noqa: E402
     ivfpq_build_packed,
     ivfpq_topk_packed,
 )
+from mcp_vector_search_spark.operators.kernel import collect_queries  # noqa: E402
 from mcp_vector_search_spark.operators.layout import (  # noqa: E402
     read_ivfpq_layout,
     write_ivfpq_layout,
@@ -120,7 +120,7 @@ def main() -> None:
         flat_df = spark.read.parquet(flat_p)
         f64_df, f64_cents = read_ivf_layout(spark, f"{d}/packed_f64")
         adc_df, adc_cents, adc_cbs = read_ivfpq_layout(spark, f"{d}/packed_pq")
-        _, _, probe = _driver_probe_sets(hq2, f64_cents, 20, "query_id", "query_vec")
+        probe = collect_queries(hq2, centroids=f64_cents, nprobes=20).probes
         out["q2_probed_clusters"] = len(probe)
         out["gap_since_flat_write_sec"] = round(time.time() - flat_written, 1)
 

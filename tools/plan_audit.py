@@ -38,7 +38,7 @@ AUDIT = [
     ("lm_perplexity", "two count aggregates (map-side partials) + per-event joins on term/gram keys"),
     ("dup_spans", "two equi-key shuffles on the window hash (HAVING agg + semi-join back); island merge is a doc-partitioned window"),
     ("lang_id", "pure per-row column expressions into one small groupBy — no joins, no windows"),
-    ("ivf_packed", "r5: packed-block layout gate — pack groupBy + probe-filtered block scoring; the serving form caches the packed frame so only the filter+MapInPandas+rank window execute per batch"),
+    ("ivf_packed", "r5: packed-block layout gate — pack groupBy + probe-filtered block scoring; the serving form caches the packed frame so only the filter+MapInArrow+rank window execute per batch"),
     ("hybrid_batch", "r5: N hybrid pipelines in one program — one scoring scan fans out per-query scores via explode, one rank window per leg, O(|Q|*k) fusion joins"),
     ("hybrid_batch_tbl", "r6: table-driven batch — query set broadcast-joined to postings; only union-term idf rows broadcast; plan width independent of batch size"),
     ("hybrid_batch_ann", "r6: serving-from-artifacts batch — postings-index BM25 leg + packed-IVF vector leg (probe filter prunes non-probed blocks before any deserialize)"),
