@@ -16,6 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the directories `save_ann_index` writes per layout kind, next to the
+# `kind/` manifest
+LAYOUT_PARTS = {
+    "ivf": ("blocks", "centroids"),
+    "ivfpq": ("blocks", "centroids", "codebooks"),
+    "ivfsq": ("blocks", "bounds"),
+}
+
 
 class SparkProject:
     """One indexed project = (documents, vectors[, chunk metadata])."""
@@ -508,7 +516,9 @@ class SparkProject:
         """Read the layout's one-row kind manifest; None ONLY when the
         manifest is missing (pre-manifest layouts / torn saves) — any
         other read failure surfaces here, not cryptically at query
-        time (r6 review #3)."""
+        time (r6 review #3). A `kind/` directory holding no data file
+        (a crash inside the manifest's overwrite) is a missing
+        manifest too."""
         from pyspark.errors import AnalysisException
 
         from mcp_vector_search_spark.io import recover_swap
@@ -523,9 +533,15 @@ class SparkProject:
                 raise ValueError(f"kind manifest at {path}/kind is empty")
             return row["kind"]
         except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
+            missing = ("PATH_NOT_FOUND", "Path does not exist", "UNABLE_TO_INFER_SCHEMA")
+            if not any(m in str(e) for m in missing):
                 raise
             return None
+
+    def _path_exists(self, path: str) -> bool:
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        return bool(fs.exists(jpath))
 
     def _require_float_ivf(self, path: str) -> None:
         """Maintenance ops below run on float IVF layouts only: PQ/SQ
@@ -867,6 +883,16 @@ class SparkProject:
                 raise ValueError(
                     f"no ANN layout kind manifest at {path} — nothing "
                     "to report a serving regime for"
+                )
+            # nor may a manifest that outlived its layout's data
+            torn = [
+                part for part in LAYOUT_PARTS[kind]
+                if not self._path_exists(f"{path}/{part}")
+            ]
+            if torn:
+                raise ValueError(
+                    f"ANN layout at {path} is torn: its kind={kind!r} "
+                    f"manifest stands but {', '.join(torn)} is missing"
                 )
             if kind in ("ivfpq", "ivfsq"):
                 return {"kind": kind, "on_disk": True, "regime": "codec"}

@@ -30,8 +30,6 @@ unique regardless of iteration order; ties cannot occur.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -45,9 +43,8 @@ from pyspark.sql.window import Window
 # runs unchanged. 500k symmetrized rows ≈ a few MB through Arrow —
 # far under driver memory, while a duplicate-pair graph that big is
 # already far above anything the detectors emit at bench scale.
-CC_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "500000")
-)
+# Callers that need another bound pass `driver_max_edges=`.
+CC_DRIVER_MAX_EDGES = 500_000
 
 
 def _cc_driver(sym: DataFrame) -> DataFrame:
@@ -104,9 +101,9 @@ def connected_components(
 
     Count-routed (r12, guide §1.2 — the per-round driver actions were
     the cost, not the data): at or under `driver_max_edges`
-    symmetrized rows (default `CC_DRIVER_MAX_EDGES`, env
-    SPARK_GRAFT_CC_DRIVER_MAX_EDGES) the closure is one driver-side
-    union-find pass over the already-materialized slim edge list —
+    symmetrized rows (default `CC_DRIVER_MAX_EDGES`) the closure is
+    one driver-side union-find pass over the already-materialized
+    slim edge list —
     the duplicate graphs the detectors emit are tiny relative to the
     corpus, and the propagation loop's ~2 shuffles + 1 collect PER
     ROUND cost ~6 s at sf0.1 on 45 output rows. Above the bound the

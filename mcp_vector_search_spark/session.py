@@ -21,6 +21,36 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Share of physical RAM the driver heap may take when this process
+# creates the JVM: local mode runs every executor thread inside the
+# driver, and the other half stays with Python workers and the OS.
+DRIVER_MEM_FRACTION = 0.5
+
+
+def machine_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, which a
+    container or `taskset` narrows below the host's core count)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # platforms without affinity masks
+        return os.cpu_count() or 1
+
+
+def machine_ram_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def session_defaults() -> tuple[str, str]:
+    """(local thread count, driver heap) for a session this process
+    creates. `SPARK_GRAFT_CPUS` and `SPARK_GRAFT_DRIVER_MEM` override
+    them for a deployment; otherwise they come from the machine: every
+    usable CPU, and `DRIVER_MEM_FRACTION` of physical RAM in MiB."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(machine_cpus())
+    heap_mb = int(machine_ram_bytes() * DRIVER_MEM_FRACTION) >> 20
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{heap_mb}m"
+    return cpus, mem
+
+
 def get_spark(
     app_name: str = "mcp-vector-search-spark",
     master: str | None = None,
@@ -34,32 +64,23 @@ def get_spark(
     operator in this package is written to be correct under default
     configs and merely *faster* under these.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, mem = session_defaults()
     parts = str(shuffle_partitions or cpus)
-    # local-mode default driver heap is 1g — far below what a 32-thread
-    # local "cluster" needs for cached vector layouts. Only effective
-    # when this process creates the JVM (driver-harness sessions keep
-    # their own setting).
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-    # r12 optimization round, measured on the join/shuffle-heavy gate
-    # subset (minhash, dup_clusters, hybrid, kg_edges, closure; guide
-    # §2.3/§3.1): zstd shuffle+spill compression beat the lz4 default
-    # by ~25-30% wall (subset totals 32.1/39.3 s lz4 vs 21.6/26.6 s
-    # zstd across interleaved fresh sessions), and allowing shuffled-
-    # hash join where its size conditions hold took another ~10% on
-    # join paths (27.7 s). Both are scale-general (smaller shuffle
-    # bytes / no sort when one side hashes), not local-core tuning;
-    # env-overridable for clusters that prefer otherwise.
-    io_codec = os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd")
-    prefer_smj = os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false")
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.driver.memory", mem)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.io.compression.codec", io_codec)
-        .config("spark.sql.join.preferSortMergeJoin", prefer_smj)
+        # r12 optimization round, measured on the join/shuffle-heavy
+        # gate subset (minhash, dup_clusters, hybrid, kg_edges,
+        # closure): zstd shuffle+spill compression beat the lz4
+        # default by ~25-30% wall, and allowing shuffled-hash join
+        # where its size conditions hold took another ~10% on join
+        # paths. Both are scale-general (smaller shuffle bytes / no
+        # sort when one side hashes); `extra_conf` overrides them.
+        .config("spark.io.compression.codec", "zstd")
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.shuffle.partitions", parts)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -4,6 +4,9 @@ the plan per batch, instead of layout presence always probing."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -227,6 +230,44 @@ def test_ann_serving_regime_persisted_path(spark, tmp_path):
     # an absent/typo'd path must refuse, not report a healthy layout
     with pytest.raises(ValueError, match="no ANN layout kind manifest"):
         p.ann_serving_regime(path=str(tmp_path / "nope"))
+
+
+def _empty_manifest(path):
+    # what a crash inside the manifest's overwrite leaves
+    shutil.rmtree(f"{path}/kind")
+    os.mkdir(f"{path}/kind")
+
+
+def _drop_blocks(path):
+    shutil.rmtree(f"{path}/blocks")
+
+
+@pytest.mark.parametrize(
+    "tear, load_error, load_match, regime_match",
+    [
+        (_empty_manifest, ValueError, "has no kind manifest — pass kind= explicitly",
+         "no ANN layout kind manifest"),
+        (_drop_blocks, Exception, None, "torn"),
+    ],
+    ids=["manifest_without_data", "blocks_deleted"],
+)
+def test_torn_layout_refused(spark, tmp_path, tear, load_error, load_match,
+                             regime_match):
+    """A torn persisted layout gets a refusal from both load and the
+    regime report, and the standing index keeps serving the same rows."""
+    p = _project(spark)
+    p.build_ann_index(num_clusters=8, kind="ivf")
+    path = str(tmp_path / "layout")
+    p.save_ann_index(path)
+    q = _queries(p)
+    served = sorted(map(tuple, p.search_batch(q, limit=3, route="probe").collect()))
+    tear(path)
+    with pytest.raises(load_error, match=load_match):
+        p.load_ann_index(path)
+    with pytest.raises(ValueError, match=regime_match) as refused:
+        p.ann_serving_regime(path=path)
+    assert path in str(refused.value)
+    assert sorted(map(tuple, p.search_batch(q, limit=3, route="probe").collect())) == served
 
 
 def test_last_route_stamp_is_construction_deep(spark, monkeypatch):
