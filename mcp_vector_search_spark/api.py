@@ -13,6 +13,8 @@ registry queries underneath.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -928,31 +930,36 @@ class SparkProject:
         }
 
     def search_hybrid(
-        self, query: str, query_vec: DataFrame, limit: int = 10, alpha: float = 0.7
+        self,
+        query: str,
+        query_vec: Sequence[float] | DataFrame,
+        limit: int = 10,
+        alpha: float = 0.7,
     ) -> DataFrame:
         """BM25 ⊕ vector RRF fusion (tool `search_hybrid`). The query
         is preprocessed like `search_code` — postings terms are
         lowercase tokens, so raw-cased input would silently empty the
-        BM25 leg.
+        BM25 leg. `query_vec` is the query vector as a sequence of
+        floats or as a 1-row (query_vec) DataFrame.
 
         After `start_serving()`, queries route through the warm
-        `HybridServer` (cached tokenized corpus + memoized stats +
-        serving session shape — sub-second at sf0.1, identical
-        results)."""
+        `HybridServer` (cached tokenized corpus + cached unit vectors
+        + memoized stats + serving session shape; a frame is read
+        once with `.first()` and the vector scored as a literal — two
+        Spark jobs per call, identical results)."""
         from mcp_vector_search_spark.functions.query import preprocess_query
+        from mcp_vector_search_spark.plans.hybrid import hybrid_search, query_frame
 
         terms = preprocess_query(query).split()
         if self._hybrid_server is not None:
             return self._hybrid_server.search(
                 terms, query_vec, k=limit, alpha=alpha
             )
-        from mcp_vector_search_spark.plans.hybrid import hybrid_search
-
         return hybrid_search(
             self.docs,
             self.vectors,
             terms,
-            query_vec,
+            query_frame(self.spark, query_vec),
             k=limit,
             alpha=alpha,
         )
@@ -960,11 +967,12 @@ class SparkProject:
     def start_serving(self, tune_session: bool = True) -> None:
         """Enter warm single-query serving mode (r6, VERDICT r5 #6):
         builds the `HybridServer` state once — cached tokenized corpus,
-        cached vectors, memoized BM25 corpus scalars — and (by
-        default) tunes the session for interactive queries (AQE off,
-        few shuffle partitions; restored by `stop_serving`). Subsequent
-        `search_hybrid` calls are sub-second at sf0.1 with unchanged
-        results."""
+        cached unit-normalized vectors, memoized BM25 corpus scalars —
+        and (by default) tunes the session for interactive queries
+        (AQE off, few shuffle partitions; restored by `stop_serving`).
+        Each later `search_hybrid` call runs two Spark jobs (the BM25
+        stats lookup and the answer) with no Python worker and no
+        broadcast, and returns the cold path's rows."""
         if self._hybrid_server is None:
             from mcp_vector_search_spark.plans.hybrid import HybridServer
 
@@ -1080,15 +1088,17 @@ class SparkProject:
         )
 
     def search_context(
-        self, query: str, query_vec: DataFrame, limit: int = 10
+        self, query: str, query_vec: Sequence[float] | DataFrame, limit: int = 10
     ) -> DataFrame:
         """Full pipeline incl. rescoring + MMR (tool `search_context`);
-        requires chunk metadata."""
+        requires chunk metadata. `query_vec` as in `search_hybrid`."""
+        from mcp_vector_search_spark.plans.hybrid import query_frame
         from mcp_vector_search_spark.plans.search import full_search
 
         assert self.chunk_meta is not None, "search_context needs chunk_meta"
         return full_search(
-            self.docs, self.chunk_meta, self.vectors, query, query_vec, k=limit
+            self.docs, self.chunk_meta, self.vectors, query,
+            query_frame(self.spark, query_vec), k=limit,
         )
 
     # ----------------------------------------------------------- dedup

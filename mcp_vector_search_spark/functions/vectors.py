@@ -13,6 +13,9 @@ JVM-side, no Python boundary, vectorizable by codegen.
 
 from __future__ import annotations
 
+import math
+from collections.abc import Sequence
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -62,6 +65,21 @@ def normalized(df, vec_col: str, out_col: str, drop_norm: bool = True):
         out_col, unit_expr(F.col(vec_col), F.col("_nrm"))
     )
     return out.drop("_nrm") if drop_norm else out
+
+
+def unit_vector(vec: Sequence[float]) -> list[float]:
+    """Driver-side twin of `normalized` for ONE vector: float64, the
+    norm accumulated sequentially in array order, each element divided
+    by it, zero norm → the zero vector. Bit-identical to the column
+    path (same IEEE operations in the same order), so a query
+    normalized here and scored as a literal ranks exactly like one
+    normalized in the plan."""
+    xs = [float(x) for x in vec]
+    acc = 0.0
+    for x in xs:
+        acc += x * x
+    nrm = math.sqrt(acc)
+    return [x / nrm if nrm != 0.0 else 0.0 for x in xs]
 
 
 def distance_to_similarity(d: Column) -> Column:

@@ -215,26 +215,23 @@ class McpAdapter:
             )
         return self._ancestry_closure
 
-    def _query_vec(self, text: str) -> DataFrame:
-        """1-row (query_vec) frame for the vector legs — embeds the
-        query through `embed_batch` with the adapter's `model_name`,
-        i.e. the SAME (guarded-real / deterministic-fake) path the
-        corpus embedding uses, at the corpus dim. Construct the
-        adapter with the corpus encoder's model_name when serving a
-        real-embedded corpus; the dim probe alone cannot make the fake
-        match a real vector space (r6 review #6)."""
-        from mcp_vector_search_spark.functions.embed import embed_batch
+    def _query_vec(self, text: str) -> list[float]:
+        """The query vector for the vector legs, embedded on the driver
+        by `embed_texts` with the adapter's `model_name` — the SAME
+        (guarded-real / deterministic-fake) function `embed_batch`
+        runs for the corpus, at the corpus dim — so a warm call starts
+        no Spark job for it. Construct the adapter with the corpus
+        encoder's model_name when serving a real-embedded corpus; the
+        dim probe alone cannot make the fake match a real vector
+        space (r6 review #6)."""
+        from mcp_vector_search_spark.functions.embed import embed_texts
 
         if self._dim is None:
             row = self.project.vectors.select("embedding").first()
             if row is None:
                 raise ValueError("vector index is empty — embed_chunks first")
             self._dim = len(row["embedding"])
-        q = self.project.spark.createDataFrame([(0, text)], "qid long, q string")
-        return embed_batch(
-            q, id_col="qid", text_col="q", dim=self._dim,
-            model_name=self.model_name,
-        ).select(F.col("embedding").alias("query_vec"))
+        return embed_texts([text], self._dim, self.model_name)[0]
 
     # ----------------------------------------------------- dispatch
 

@@ -50,12 +50,32 @@ def knn_brute_force(
     """
     v = _normalized(vectors, vec_col, "_u")
     q = _normalized(query, query_vec_col, "_uq")
-    sim = dot(F.col("_u"), F.col("_uq"))
+    return cosine_topk(
+        v.join(F.broadcast(q)), F.col("_uq"), k, id_col, round_to,
+        drop=(query_vec_col, vec_col, "_uq"),
+    )
+
+
+def cosine_topk(
+    units: DataFrame,
+    query_unit: Column,
+    k: int,
+    id_col: str = "vec_id",
+    round_to: int | None = 6,
+    drop: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one exact single-query cosine tail: score `dot(_u,
+    query_unit)` → round → order (ties → lower `id_col`) → limit k.
+    `units` carries the unit-vector column `_u`; `query_unit` is the
+    joined query's unit column (`knn_brute_force`) or a literal of a
+    vector normalized on the driver (`HybridServer`). `_u` and `drop`
+    are dropped from the output, which adds `cos_sim`."""
+    sim = dot(F.col("_u"), query_unit)
     if round_to is not None:
         sim = F.round(sim, round_to)
-    scored = v.join(F.broadcast(q)).withColumn("cos_sim", sim)
     return (
-        scored.drop(query_vec_col, vec_col, "_u", "_uq")
+        units.withColumn("cos_sim", sim)
+        .drop("_u", *drop)
         .orderBy(F.desc("cos_sim"), F.asc(id_col))
         .limit(k)
     )

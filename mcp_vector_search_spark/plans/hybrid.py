@@ -15,6 +15,8 @@ stage is O(k), independent of corpus size.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -26,9 +28,9 @@ from mcp_vector_search_spark.operators.topk import knn_brute_force, rank_by
 
 def hybrid_search(
     docs: DataFrame,
-    vectors: DataFrame,
+    vectors: DataFrame | None,
     query_terms: list[str],
-    query: DataFrame,
+    query: DataFrame | None,
     k: int = 10,
     over_retrieve: int = 2,
     alpha: float = 0.7,
@@ -51,12 +53,11 @@ def hybrid_search(
     `bm25_tokenized` (from `Bm25ServingStats.tokenized`) additionally
     reuses a cached tokenized corpus — the warm-serving pieces
     `HybridServer` wires together. `vec_leg_ranked` (r12) is the
-    vector-leg twin of `bm25_stats` for multi-variant callers: the
-    vector leg depends only on (query vector, k·over_retrieve), so
-    query-expansion re-derived an IDENTICAL knn subtree per variant —
-    pass `rank_by(knn_brute_force(vectors, query, k·over_retrieve))`
-    once instead (`full_search` materializes it: ≤ k·over_retrieve
-    rows).
+    vector-leg twin of `bm25_stats`: a ranked (doc_id, rank) leg of ≤
+    k·over_retrieve rows built by the caller (`rank_vec_leg` over a
+    single-query cosine top-k); `HybridServer` passes its leg scored
+    against cached unit vectors, and `vectors`/`query` are then
+    unused.
     """
     n_leg = k * over_retrieve
 
@@ -76,15 +77,23 @@ def hybrid_search(
     )
     vec_leg = vec_leg_ranked
     if vec_leg is None:
-        vec_leg = rank_by(
-            knn_brute_force(vectors, query, n_leg, vec_col=vec_col, id_col=vec_id_col)
-            .withColumnRenamed(vec_id_col, "doc_id")
-            .select("doc_id", "cos_sim"),
-            "cos_sim",
-            "doc_id",
+        vec_leg = rank_vec_leg(
+            knn_brute_force(vectors, query, n_leg, vec_col=vec_col, id_col=vec_id_col),
+            vec_id_col,
         )
     fused = rrf_fuse(vec_leg, bm_leg, id_col="doc_id", alpha=alpha)
     return fused.orderBy(F.desc("rrf_score"), F.asc("doc_id")).limit(k)
+
+
+def rank_vec_leg(topk: DataFrame, vec_id_col: str = "vec_id") -> DataFrame:
+    """A single-query cosine top-k (`knn_brute_force`/`cosine_topk`
+    output) as the ranked (doc_id, cos_sim, rank) vector leg RRF
+    fuses."""
+    return rank_by(
+        topk.withColumnRenamed(vec_id_col, "doc_id").select("doc_id", "cos_sim"),
+        "cos_sim",
+        "doc_id",
+    )
 
 
 def hybrid_search_batch(
@@ -527,29 +536,33 @@ def hybrid_search_batch_ann(
 class HybridServer:
     """Warm single-query hybrid serving (VERDICT r5 #6): the state +
     session shape that makes the interactive `hybrid_search` path
-    sub-second at sf0.1, closing the one BASELINE row ("sub-second
-    search", reference README) previously met only as batch
-    throughput.
+    sub-second, closing the one BASELINE row ("sub-second search",
+    reference README) previously met only as batch throughput.
 
-    The measured 2.1-2.4 s warm floor decomposed as (BENCH_NOTES r6):
-    BM25 leg ~1.2 s (of which a per-query stats scan ~0.7-1.3 s),
-    vector leg ~0.45 s, fusion/rank ~0.5 s, job-launch floor ~0.05 s —
-    job-count overhead, not compute. Three fixes, applied here:
+    A warm `search` is two Spark jobs — the BM25 stats lookup and the
+    answer — with no Python worker and no broadcast. The per-query
+    work that does not depend on the query lives here, built once:
 
     1. stats state: `Bm25ServingStats` — cached vocab + memoized
        corpus scalars; per-query stats = one tiny lookup job;
     2. shared scans: the scoring scan reads the cached tokenized
-       corpus (no per-query re-tokenize), the vector leg reads the
-       cached vectors frame;
-    3. serving session shape: AQE off + few shuffle partitions while
+       corpus (no per-query re-tokenize); the vector leg reads the
+       cached UNIT vectors (vec_id, _u), normalized once here instead
+       of per call on the driver and on every executor;
+    3. the query as a literal: `search` unit-normalizes the query
+       vector on the driver (`unit_vector`, bit-identical to the
+       column path) and scores `dot(_u, lit(uq))` through the same
+       `cosine_topk` tail `knn_brute_force` uses — no 1-row query
+       frame, no broadcast join;
+    4. serving session shape: AQE off + few shuffle partitions while
        serving — per-stage adaptive re-planning and 32-partition
-       shuffles are pure scheduling overhead on 20-row leg frames
-       (measured: 1.3-1.5 s → 0.59-0.97 s). Original confs are
-       restored by `close()`.
+       shuffles are pure scheduling overhead on 20-row leg frames.
+       Original confs are restored by `close()`.
 
-    Results are identical to `hybrid_search(...)` by construction —
-    the same code path runs, fed the precomputed pieces (pinned in
-    tests/test_topk_fusion.py). For query SETS use
+    Results are identical to `hybrid_search(...)`: the same fusion
+    path runs, fed the precomputed pieces and a vector leg with the
+    same cos_sim floats (pinned in tests/test_topk_fusion.py). A
+    closed server refuses `search`. For query SETS use
     `hybrid_search_batch`/`_indexed`; this class is the 1-query
     interactive shape the reference serves from its in-memory index.
     """
@@ -564,14 +577,20 @@ class HybridServer:
         vec_id_col: str = "vec_id",
         tune_session: bool = True,
     ):
+        from mcp_vector_search_spark.functions.vectors import normalized
         from mcp_vector_search_spark.operators.bm25 import Bm25ServingStats
 
         self._docs = docs
-        self._vectors = vectors.cache()
-        self._vectors.count()
-        self._cols = (id_col, text_col, vec_col, vec_id_col)
+        self._units = (
+            normalized(vectors.select(vec_id_col, vec_col), vec_col, "_u")
+            .select(vec_id_col, "_u")
+            .cache()
+        )
+        self._units.count()
+        self._cols = (id_col, text_col, vec_id_col)
         self._stats = Bm25ServingStats(docs, id_col=id_col, text_col=text_col)
         self._spark = docs.sparkSession
+        self._closed = False
         self._saved_confs: dict[str, str] = {}
         if tune_session:
             for key, val in (
@@ -584,37 +603,79 @@ class HybridServer:
     def search(
         self,
         query_terms: list[str],
-        query: DataFrame,
+        query: Sequence[float] | DataFrame,
         k: int = 10,
         over_retrieve: int = 2,
         alpha: float = 0.7,
     ) -> DataFrame:
-        id_col, text_col, vec_col, vec_id_col = self._cols
+        """Top-k fused (doc_id, rrf_score). `query` is the query vector
+        as a sequence of floats, or a 1-row (query_vec) DataFrame,
+        which is read once with `.first()`."""
+        import numpy as np
+
+        from mcp_vector_search_spark.functions.vectors import unit_vector
+        from mcp_vector_search_spark.operators.topk import cosine_topk
+
+        if self._closed:
+            raise ValueError("HybridServer is closed: its caches are released")
+        id_col, text_col, vec_id_col = self._cols
+        # a float64 ndarray crosses py4j as ONE double[] literal; a list
+        # would build one Column per element (~20 ms a call at 64 dims)
+        uq = np.asarray(unit_vector(query_values(query)), dtype="float64")
+        vec_leg = rank_vec_leg(
+            cosine_topk(self._units, F.lit(uq), k * over_retrieve, vec_id_col),
+            vec_id_col,
+        )
         return hybrid_search(
             self._docs,
-            self._vectors,
+            None,
             query_terms,
-            query,
+            None,
             k=k,
             over_retrieve=over_retrieve,
             alpha=alpha,
             id_col=id_col,
             text_col=text_col,
-            vec_col=vec_col,
-            vec_id_col=vec_id_col,
             bm25_stats=self._stats.stats_for(query_terms),
             bm25_tokenized=self._stats.tokenized,
+            vec_leg_ranked=vec_leg,
         )
 
     def close(self) -> None:
+        """Restore the session confs and release the caches; a second
+        call does nothing."""
+        if self._closed:
+            return
+        self._closed = True
         for key, val in self._saved_confs.items():
             self._spark.conf.set(key, val)
         self._saved_confs.clear()
         self._stats.unpersist()
-        self._vectors.unpersist()
+        self._units.unpersist()
 
     def __enter__(self):
         return self
 
     def __exit__(self, *exc):
         self.close()
+
+
+def query_values(query: Sequence[float] | DataFrame) -> list[float]:
+    """A query vector given as a sequence of floats or as a 1-row
+    (query_vec) DataFrame → its floats (the frame is read once)."""
+    if isinstance(query, DataFrame):
+        row = query.select("query_vec").first()
+        if row is None:
+            raise ValueError("query frame has no rows")
+        return list(row[0])
+    return [float(x) for x in query]
+
+
+def query_frame(spark, query: Sequence[float] | DataFrame) -> DataFrame:
+    """A query vector given as a sequence of floats or as a 1-row
+    (query_vec) DataFrame → the 1-row frame the cold paths join."""
+    if isinstance(query, DataFrame):
+        return query
+    return spark.createDataFrame(
+        [([float(x) for x in query],)], "query_vec array<double>"
+    )

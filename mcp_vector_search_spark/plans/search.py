@@ -159,15 +159,12 @@ def full_search(
     # them with a driver thread (r12; guide §2.6), results identical.
     from concurrent.futures import ThreadPoolExecutor
 
-    from mcp_vector_search_spark.operators.topk import knn_brute_force, rank_by
+    from mcp_vector_search_spark.operators.topk import knn_brute_force
+    from mcp_vector_search_spark.plans.hybrid import rank_vec_leg
 
     def _vec_leg():
-        return rank_by(
+        return rank_vec_leg(
             knn_brute_force(vectors, query_vec, k * 3 * 2)
-            .withColumnRenamed("vec_id", "doc_id")
-            .select("doc_id", "cos_sim"),
-            "cos_sim",
-            "doc_id",
         ).localCheckpoint(eager=True)
 
     with ThreadPoolExecutor(max_workers=2) as pool:

@@ -374,3 +374,51 @@ def test_facade_spread_rejects_unknown_mode(spark):
         SparkProject(spark, docs, vecs, spread=1)
     with pytest.raises(ValueError, match="spread must be"):
         SparkProject(spark, docs, vecs, spread=0)
+
+
+def test_embed_texts_equals_embed_batch_rows(spark, docs):
+    """The driver-side per-text function and the batch mapInPandas path
+    produce the same floats for the same text (exact equality)."""
+    from mcp_vector_search_spark.functions.embed import embed_texts
+
+    for dim in (4, 8):
+        batch = {r.doc_id: r.embedding for r in embed_batch(docs, dim=dim).collect()}
+        for r in docs.select("doc_id", "text").collect():
+            assert embed_texts([r.text], dim)[0] == batch[r.doc_id]
+    assert embed_texts([], 4) == []
+
+
+def test_sentence_transformer_constructed_once_per_process(monkeypatch):
+    """`load_sentence_transformer` is cached per model name: repeated
+    per-query embeds construct the model once. A stub module stands in
+    for sentence-transformers, so nothing is downloaded."""
+    import sys
+    import types
+
+    from mcp_vector_search_spark.functions.embed import (
+        embed_texts,
+        load_sentence_transformer,
+    )
+
+    built = []
+
+    class StubModel:
+        def __init__(self, name):
+            built.append(name)
+
+        def encode(self, texts, batch_size=64, show_progress_bar=False):
+            return [[float(len(t)), 1.0] for t in texts]
+
+    stub = types.ModuleType("sentence_transformers")
+    stub.SentenceTransformer = StubModel
+    monkeypatch.setitem(sys.modules, "sentence_transformers", stub)
+    load_sentence_transformer.cache_clear()
+    try:
+        for text in ("alpha", "beta", "gamma"):
+            assert embed_texts([text], model_name="stub-model") == [[float(len(text)), 1.0]]
+        assert load_sentence_transformer("stub-model") is load_sentence_transformer("stub-model")
+        assert built == ["stub-model"]
+        embed_texts(["delta"], model_name="other-model")
+        assert built == ["stub-model", "other-model"]
+    finally:
+        load_sentence_transformer.cache_clear()

@@ -320,3 +320,102 @@ def test_corpus_attrition_round_trips(spark, tmp_path):
     proj2 = SparkProject.from_corpus(spark, str(p), "jsonl")
     out2 = McpAdapter(proj2).call_tool("corpus_attrition", {})
     assert out2["ok"] and out2["attrition"] is None and "hint" in out2
+
+
+import pytest
+
+
+@pytest.fixture(scope="module")
+def served(spark):
+    """An adapter over a project in warm serving mode; serving stops
+    (confs restored, caches released) when the module's tests end."""
+    ad = _adapter(spark)
+    ad.project.start_serving()
+    yield ad
+    ad.project.stop_serving()
+
+
+def _cold_rows(ad, query, vec, k):
+    """The cold `hybrid_search` answer for the same terms and vector."""
+    from mcp_vector_search_spark.functions.query import preprocess_query
+    from mcp_vector_search_spark.plans.hybrid import hybrid_search, query_frame
+
+    p = ad.project
+    out = hybrid_search(
+        p.docs, p.vectors, preprocess_query(query).split(),
+        query_frame(p.spark, vec), k=k,
+    ).collect()
+    return [[r.doc_id, r.rrf_score] for r in out]
+
+
+def test_served_hybrid_edge_cases_match_cold_path(served, monkeypatch):
+    """Empty query, stopword-only query (no term in the corpus, so the
+    BM25 leg is empty) and a zero query vector (every cosine 0, no ANSI
+    divide-by-zero) each return `ok` on the served MCP path, with the
+    cold path's rows."""
+    from mcp_vector_search_spark.functions import embed
+    from mcp_vector_search_spark.functions.query import preprocess_query
+    from mcp_vector_search_spark.operators.bm25 import bm25_oneshot_stats
+
+    k = 5
+    for query in ("", "of and to is in"):
+        terms = preprocess_query(query).split()
+        assert bm25_oneshot_stats(served.project.docs, terms)["idf"] == {}
+        r = served.call_tool("search_hybrid", {"query": query, "limit": k})
+        assert r["ok"], r
+        assert len(r["rows"]) == k  # vector-only rows
+        assert r["rows"] == _cold_rows(served, query, served._query_vec(query), k)
+
+    monkeypatch.setattr(
+        embed, "embed_texts", lambda texts, dim, model_name=None: [[0.0] * dim for _ in texts]
+    )
+    zero = served._query_vec("data query")
+    assert not any(zero)
+    r = served.call_tool("search_hybrid", {"query": "data query", "limit": k})
+    assert r["ok"], r
+    assert r["rows"] == _cold_rows(served, "data query", zero, k)
+
+
+def _node_names(plan) -> list[str]:
+    """Operator names of an executed plan tree, not descending into
+    the plans that built cached relations."""
+    names = [plan.nodeName()]
+    children = plan.children()
+    for i in range(children.size()):
+        names += _node_names(children.apply(i))
+    return names
+
+
+def test_warm_served_call_is_two_jobs_without_python_or_broadcast(served, monkeypatch):
+    """A warm MCP search_hybrid call after start_serving runs exactly
+    two Spark jobs (BM25 stats lookup + the answer): the query is
+    embedded on the driver and scored as a literal, so its plan has no
+    Python-evaluation node and no broadcast exchange."""
+    from mcp_vector_search_spark import mcp_adapter
+
+    sc = served.project.spark.sparkContext
+    args = {"query": "data query fast", "limit": 5}
+    assert served.call_tool("search_hybrid", args)["ok"]  # warm
+    answered = []
+    real_payload = mcp_adapter.df_payload
+
+    def spy(df, max_rows=200):
+        answered.append(df)
+        return real_payload(df, max_rows)
+
+    monkeypatch.setattr(mcp_adapter, "df_payload", spy)
+    group = "warm-served-search-hybrid"
+    sc.setJobGroup(group, "one warm search_hybrid call")
+    try:
+        r = served.call_tool("search_hybrid", args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r["ok"], r
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+    (df,) = answered
+    names = _node_names(df.limit(51)._jdf.queryExecution().executedPlan())
+    assert "InMemoryTableScan" in names
+    for banned in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "BroadcastExchange"):
+        assert banned not in names, names

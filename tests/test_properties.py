@@ -8,7 +8,7 @@ Spark job, so the budget is max_examples≈8 per property.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -261,3 +261,25 @@ def test_ngram_repetition_fractions_match_counter(spark, xs, n):
         top_ngram_fraction(g).alias("t"), dup_ngram_fraction(g).alias("d")
     ).collect()[0]
     assert (got["t"], got["d"]) == (want_top, want_dup)
+
+
+@given(
+    st.lists(
+        st.floats(allow_nan=False, allow_infinity=False), min_size=1, max_size=16
+    )
+)
+@example([0.0, 0.0, 0.0])
+@example([0.0, -0.0])
+@example([1.0] + [1e-8] * 10)
+@_settings
+def test_unit_vector_matches_normalized(spark, vec):
+    """The driver-side unit helper is bit-identical to the column
+    `normalized()` it stands in for on the serving path, zero vector
+    included (exact equality, not approx). The [1, 1e-8, …] example
+    pins the accumulation order: summed in array order the small
+    squares vanish into 1.0, a compensated or pairwise sum keeps
+    them."""
+    from mcp_vector_search_spark.functions.vectors import normalized, unit_vector
+
+    df = spark.createDataFrame([(vec,)], "v array<double>")
+    assert normalized(df, "v", "u").first()["u"] == unit_vector(vec)

@@ -8,6 +8,7 @@ from mcp_vector_search_spark.operators.topk import (
     rank_by,
     topk_per_query,
 )
+from tests.conftest import SF_DIR
 
 
 def _vectors(spark):
@@ -331,6 +332,30 @@ def test_hybrid_server_matches_hybrid_search(spark):
             assert served == plain
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts0
+
+
+def test_hybrid_server_refuses_search_after_close(spark):
+    """A closed HybridServer has released its caches and restored the
+    session confs: `search` raises a ValueError naming the closed
+    server instead of running on unpersisted frames, and a second
+    `close()` is a no-op."""
+    import pytest
+
+    from mcp_vector_search_spark import io
+    from mcp_vector_search_spark.plans.hybrid import HybridServer
+
+    docs = io.table(spark, SF_DIR, "documents")
+    emb = io.table(spark, SF_DIR, "embeddings")
+    aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
+    srv = HybridServer(docs, emb)
+    qv = list(emb.first()["embedding"])
+    assert srv.search(["data"], qv, k=3).count() == 3
+    srv.close()
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
+    with pytest.raises(ValueError, match="HybridServer is closed"):
+        srv.search(["data"], qv, k=3)
+    srv.close()
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
 
 
 def test_rrf_fuse_zero_max_guard(spark):
