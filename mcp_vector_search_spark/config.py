@@ -39,10 +39,6 @@ MODEL_SPECIFICATIONS: dict[str, dict] = {
 }
 
 
-def model_spec(name: str) -> dict:
-    return MODEL_SPECIFICATIONS[name]
-
-
 def load_custom_synonyms(path: str) -> dict[str, list[str]]:
     """Merge a user synonyms JSON (reference
     ``.mcp-vector-search/synonyms.json``, ``query_expander.py:54-115``)

@@ -18,10 +18,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def seeded_md5(token: Column, seed: int) -> Column:
-    return F.md5(F.concat(token, F.lit(f"#{seed}")))
-
-
 def token_hash_pairs(tokens: Column) -> Column:
     """array<struct<h1:long, h2:long>> — ONE md5 per element, parsed
     into two 40-bit halves: the seed material for the Carter-Wegman

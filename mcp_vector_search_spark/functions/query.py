@@ -233,108 +233,3 @@ def result_quality(
         ).alias("coverage"),
     )
     return agg
-
-
-# Query-type rules (reference ``core/query_analyzer.py:20-91``): first
-# matching bucket wins, same trigger vocabularies and order.
-QUERY_TYPE_RULES: list[tuple[str, list[str], str]] = [
-    ("function_search", ["function", "method", "def", "func"],
-     "Try searching for specific function names or patterns"),
-    ("class_search", ["class", "object", "type"],
-     "Include class inheritance or interface information"),
-    ("error_handling", ["error", "exception", "bug", "fix"],
-     "Include error types or exception names"),
-    ("testing", ["test", "spec", "mock"],
-     "Specify test framework or testing patterns"),
-    ("configuration", ["config", "setting", "option"],
-     "Include configuration file types or setting names"),
-]
-
-RELATED_TERMS: dict[str, list[str]] = {
-    "auth": ["login", "user", "session", "token"],
-    "database": ["query", "model", "schema", "connection"],
-    "api": ["endpoint", "request", "response", "handler"],
-    "test": ["mock", "assert", "spec", "unit"],
-    "error": ["exception", "handle", "catch", "debug"],
-}
-
-
-def analyze_query(query: str) -> dict:
-    """Query analysis (reference ``query_analyzer.py:20-91``): type
-    bucket, confidence from word count (1 word or >10 → low), and the
-    pattern hints (call parens, CamelCase, dot notation). Pure driver
-    function — it runs per query string, not per row."""
-    analysis: dict = {
-        "original_query": query,
-        "processed_query": preprocess_query(query),
-        "query_type": "general",
-        "suggestions": [],
-        "confidence": "medium",
-    }
-    ql = query.lower()
-    for qtype, triggers, hint in QUERY_TYPE_RULES:
-        if any(w in ql for w in triggers):
-            analysis["query_type"] = qtype
-            analysis["suggestions"].append(hint)
-            break
-    words = query.split()
-    if len(words) == 1 or len(words) > 10:
-        analysis["confidence"] = "low"
-        analysis["suggestions"].append(
-            "Try adding more descriptive words for better results"
-            if len(words) == 1
-            else "Consider simplifying your query for better matching"
-        )
-    else:
-        analysis["confidence"] = "high"
-    if re.search(r"\b\w+\(\)", query):
-        analysis["suggestions"].append(
-            "Function call detected - searching for function definitions"
-        )
-    if re.search(r"\b[A-Z][a-zA-Z]*\b", query):
-        analysis["suggestions"].append(
-            "CamelCase detected - searching for class or type names"
-        )
-    if re.search(r"\b\w+\.\w+", query):
-        analysis["suggestions"].append(
-            "Dot notation detected - searching for method calls or properties"
-        )
-    return analysis
-
-
-def suggest_related_queries(query: str, results=None, limit: int = 5) -> list[str]:
-    """Related-query suggestions (reference
-    ``query_analyzer.py:93-163``). With no results: the query's own
-    words plus the curated related-term table. With a results
-    DataFrame (name/parent/source columns as produced by the chunk
-    frames): distinct function/class names and file-stem words from
-    the top rows — a bounded collect, exactly the top-k the reference
-    iterates. Original query words are excluded, order preserved."""
-    suggestions: list[str] = []
-    words = query.lower().split()
-    if results is None or (hasattr(results, "isEmpty") and results.isEmpty()):
-        if len(words) > 1:
-            suggestions.extend(words[:3])
-        for w in words:
-            if w in RELATED_TERMS:
-                suggestions.extend(RELATED_TERMS[w][:2])
-    else:
-        rows = results.limit(25).collect()
-        fn = [r["name"] for r in rows
-              if "name" in r and r["name"] and r.asDict().get("chunk_type") in
-              (None, "function", "method")]
-        cls = [r.asDict().get("parent") for r in rows if r.asDict().get("parent")]
-        suggestions.extend(list(dict.fromkeys(fn))[:3])
-        suggestions.extend(list(dict.fromkeys(cls))[:3])
-        stems: list[str] = []
-        for r in rows[:5]:
-            src = r.asDict().get("source") or ""
-            stem = src.rsplit("/", 1)[-1].rsplit(".", 1)[0]
-            stems.extend(stem.split("_") if "_" in stem else [stem])
-        suggestions.extend(list(dict.fromkeys(s for s in stems if s))[:3])
-    qw = set(words)
-    out: list[str] = []
-    for s in suggestions:
-        if s and s.lower() not in qw and s not in out:
-            out.append(s)
-    return out[:limit]

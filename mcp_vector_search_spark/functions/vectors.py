@@ -86,12 +86,3 @@ def distance_to_similarity(d: Column) -> Column:
     """Reference score mapping `sim = max(0, 1 - d/2)` for cosine
     distance in [0,2] (``core/search.py:1033-1036``)."""
     return F.greatest(F.lit(0.0), F.lit(1.0) - d / F.lit(2.0))
-
-
-def assert_dim(df, col_name: str, dim: int) -> None:
-    """Dimension check at write time (reference: vectors_backend dim
-    check ``vectors_backend.py:531-537``). Cheap: an aggregate over
-    `size()`, no data movement beyond one pass."""
-    bad = df.filter(F.size(F.col(col_name)) != dim).limit(1).count()
-    if bad:
-        raise ValueError(f"column {col_name!r} contains vectors with dim != {dim}")

@@ -135,16 +135,6 @@ def spread_if_raw(df: DataFrame, min_partitions: int | None = None) -> DataFrame
     return spread(df, min_partitions)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every corpus table as a temp view for spark.sql use."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def delete_path(spark: SparkSession, path: str) -> bool:
     """Recursively delete `path` through the Hadoop FileSystem API —
     storage-agnostic (HDFS/S3A/local), unlike shutil/os which silently
@@ -249,28 +239,6 @@ def atomic_swap_dir(tmp: str, path: str) -> None:
         shutil.rmtree(old)
 
 
-def upsert_parquet(
-    spark: SparkSession, updates: DataFrame, path: str, key_cols: list[str]
-) -> None:
-    """K1/K2 upsert sink (reference delete-by-key + append,
-    ``chunks_backend.py:269-551`` / ``vectors_backend.py:482-677``)
-    without Delta: existing rows whose key collides are replaced,
-    everything else kept, staged to `<path>.tmp` and swapped (the
-    reference's atomic-rebuild pattern, ST5). On Delta this whole
-    function is one MERGE."""
-    recover_swap(path)
-    if os.path.exists(path):
-        existing = spark.read.parquet(path)
-        kept = existing.join(updates.select(*key_cols), key_cols, "left_anti")
-        merged = kept.unionByName(updates)
-    else:
-        merged = updates
-    tmp = path + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    atomic_swap_dir(tmp, path)
-    write_schema_version(path)
-
-
 # ---------------------------------------------------------------- schema versioning
 
 SCHEMA_VERSION = 1
@@ -308,72 +276,6 @@ def check_schema_version(path: str, expected: int = SCHEMA_VERSION) -> bool:
     return found is None or found == expected
 
 
-def read_evolved(spark: SparkSession, path: str, target_schema) -> DataFrame:
-    """Additive schema evolution (reference ``core/schema.py``):
-    columns in `target_schema` missing on disk come back as typed
-    nulls, extra on-disk columns are dropped, column order follows the
-    target. `target_schema` is a StructType or DDL string."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType, _parse_datatype_string
-
-    if isinstance(target_schema, str):
-        target_schema = _parse_datatype_string(target_schema)
-    assert isinstance(target_schema, StructType)
-    df = spark.read.parquet(path)
-    have = set(df.columns)
-    cols = [
-        F.col(f.name) if f.name in have else F.lit(None).cast(f.dataType).alias(f.name)
-        for f in target_schema.fields
-    ]
-    return df.select(*cols)
-
-
-def upsert_delta(
-    spark: SparkSession, updates: DataFrame, path: str, key_cols: list[str]
-) -> str:
-    """K1/K2 upsert as a real Delta MERGE when delta-spark is
-    importable (one `MERGE INTO ... WHEN MATCHED UPDATE WHEN NOT
-    MATCHED INSERT` — ACID, no staged swap needed); falls back to
-    `upsert_parquet` ONLY when delta-spark is absent. A real MERGE
-    failure (duplicate source keys, transient executor loss) must
-    PROPAGATE: swallowing it and rewriting the directory as plain
-    parquet would read past the transaction log — resurrecting
-    deleted rows — and destroy _delta_log. Returns which path ran
-    ('delta' | 'parquet') so callers/tests can see the dispatch."""
-    try:
-        from delta.tables import DeltaTable
-    except ImportError:
-        upsert_parquet(spark, updates, path, key_cols)
-        return "parquet"
-
-    if DeltaTable.isDeltaTable(spark, path):
-        cond = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("t")
-            .merge(updates.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-    else:
-        # the path may hold a plain-parquet table built by earlier
-        # upsert_parquet calls (delta-spark installed later): treating
-        # it as "no table" and overwriting would silently drop every
-        # previously-upserted non-colliding row. Keep the same upsert
-        # semantics through the parquet path instead (r6 review #3).
-        try:
-            spark.read.parquet(path)
-            exists = True
-        except Exception:
-            exists = False
-        if exists:
-            upsert_parquet(spark, updates, path, key_cols)
-            return "parquet"
-        updates.write.format("delta").mode("overwrite").save(path)
-    return "delta"
-
-
 # --------------------------------------------- versioned manifest table
 #
 # Delta-lite for environments without delta-spark (VERDICT r3 Missing
@@ -394,8 +296,7 @@ def upsert_delta(
 #
 # The 100 TB shape is the same copy-on-write + manifest design as
 # Delta/Iceberg; what's deliberately omitted is column-level MERGE
-# pushdown and log checkpointing — `upsert_delta` above dispatches to
-# the real thing when the library exists.
+# pushdown and log checkpointing.
 
 
 class VersionConflict(RuntimeError):
@@ -578,112 +479,3 @@ def vacuum_versioned(path: str, keep_last: int = 1) -> list[str]:
                     removed.append(rel)
         os.unlink(mf)
     return removed
-
-
-def export_results(df: DataFrame, path: str, fmt: str = "json", max_rows: int = 1000) -> None:
-    """K5 export sink (reference JSON/CSV/Markdown/D3 exporters,
-    ``cli/export.py``, ``cli/commands/visualize/exporters/``).
-
-    json/csv are distributed writes (coalesce upstream for one file).
-    md renders a Markdown table, d3 renders force-graph JSON
-    ({nodes, links} from (src, dst[, weight]) rows) — both driver-side
-    over at most `max_rows` collected rows, matching the reference's
-    report renderers which format top-N results, never corpora.
-    """
-    if fmt == "json":
-        df.write.mode("overwrite").json(path)
-    elif fmt == "csv":
-        df.write.mode("overwrite").option("header", True).csv(path)
-    elif fmt == "md":
-        rows = df.limit(max_rows).collect()
-        cols = df.columns
-
-        def mdesc(v) -> str:
-            # '|' splits the cell, a newline breaks the row — escape
-            # both (the html branch already escapes; md must too)
-            return (
-                ""
-                if v is None
-                else str(v).replace("|", "\\|").replace("\n", "<br>")
-            )
-
-        lines = [
-            "| " + " | ".join(mdesc(c) for c in cols) + " |",
-            "| " + " | ".join("---" for _ in cols) + " |",
-        ]
-        for r in rows:
-            lines.append("| " + " | ".join(mdesc(v) for v in r) + " |")
-        with open(path, "w") as f:
-            f.write("\n".join(lines) + "\n")
-    elif fmt == "html":
-        rows = df.limit(max_rows).collect()
-        cols = df.columns
-
-        def esc(v) -> str:
-            return (
-                ""
-                if v is None
-                else str(v).replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-            )
-
-        body = "\n".join(
-            "<tr>" + "".join(f"<td>{esc(v)}</td>" for v in r) + "</tr>" for r in rows
-        )
-        head = "<tr>" + "".join(f"<th>{esc(c)}</th>" for c in cols) + "</tr>"
-        with open(path, "w") as f:
-            f.write(
-                "<!doctype html><html><body><table>\n"
-                f"<thead>{head}</thead>\n<tbody>\n{body}\n</tbody>"
-                "</table></body></html>\n"
-            )
-    elif fmt == "d3":
-        import json
-
-        if not {"src", "dst"} <= set(df.columns):
-            # ValueError, not assert: asserts vanish under python -O
-            # and the row comprehension below would fail opaquely
-            raise ValueError("d3 export needs (src, dst[, weight]) columns")
-        rows = df.limit(max_rows).collect()
-        nodes = sorted({r["src"] for r in rows} | {r["dst"] for r in rows})
-        payload = {
-            "nodes": [{"id": n} for n in nodes],
-            "links": [
-                {
-                    "source": r["src"],
-                    "target": r["dst"],
-                    "value": r["weight"] if "weight" in df.columns else 1,
-                }
-                for r in rows
-            ],
-        }
-        with open(path, "w") as f:
-            json.dump(payload, f)
-    else:
-        raise ValueError(f"unsupported export format {fmt!r}")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 16,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Bucketed-layout sink: the co-located-join lever at scale.
-
-    Writing both sides of a hot equi-join bucketed (and optionally
-    sorted) by the join key pays the shuffle ONCE at write time;
-    every subsequent join/aggregation on that key reads co-located
-    buckets and skips the exchange entirely — on a 100 TB chunks ⋈
-    vectors join that's the difference between a full-cluster shuffle
-    and a local merge. Parquet + saveAsTable because bucket metadata
-    lives in the catalog.
-    """
-    w = (
-        df.write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(num_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table_name)

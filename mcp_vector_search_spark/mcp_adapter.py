@@ -21,7 +21,6 @@ Two tool classes are declined honestly with a structured error:
 
 from __future__ import annotations
 
-import json
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -521,6 +520,7 @@ class McpAdapter:
             from mcp_vector_search_spark.sources.git_source import (
                 StaleClosureError,
                 ancestor_set_df,
+                entities_at_commit,
             )
 
             try:
@@ -545,7 +545,7 @@ class McpAdapter:
             # the try starts HERE because anc_df exists from here)
             try:
                 edges = self._edges().filter(F.col("dst") == a["entity_name"])
-                live = chunks.join(anc_df, "commit_sha", "left_semi")
+                live = entities_at_commit(chunks, anc_df)
                 edges = edges.join(
                     live.select(F.col("name").alias("src")).distinct(),
                     "src", "left_semi",
@@ -554,17 +554,3 @@ class McpAdapter:
             finally:
                 anc_df.unpersist()
         raise ValueError(f"unhandled tool {name}")  # pragma: no cover
-
-
-def call_tool_json(adapter: McpAdapter, request: str) -> str:
-    """One stdio-frame worth of plumbing: JSON request
-    {"name": ..., "arguments": {...}} → JSON response. Malformed
-    frames come back as structured errors — the same
-    never-kill-the-loop contract `call_tool` keeps."""
-    try:
-        req = json.loads(request)
-    except json.JSONDecodeError as e:
-        return json.dumps({"ok": False, "error": f"bad JSON: {e}"})
-    if not isinstance(req, dict) or not isinstance(req.get("name"), str):
-        return json.dumps({"ok": False, "error": "request needs a string 'name'"})
-    return json.dumps(adapter.call_tool(req["name"], req.get("arguments")))

@@ -48,24 +48,12 @@ def build_postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     return toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
 
 
-def build_doc_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """doc_stats(doc_id, dl) — document length in tokens; no shuffle
-    (per-row expression). Includes token-less docs with dl=0 (exact
-    BM25Okapi corpus semantics); the fast path below derives the same
-    stats from postings instead."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(tokenize(text_col)).cast("double").alias("dl"),
-    )
-
-
 def doc_stats_from_postings(postings: DataFrame) -> DataFrame:
     """doc_stats derived from postings (dl = Σ tf) — skips a second
     tokenize pass over the corpus; the postings shuffle is far cheaper
     than re-tokenizing 100 TB of text. Token-less docs are absent
     (they're absent from postings), which only shifts N/avgdl when a
-    corpus actually contains empty docs — document or fall back to
-    `build_doc_stats` there."""
+    corpus actually contains empty docs."""
     return postings.groupBy("doc_id").agg(F.sum("tf").cast("double").alias("dl"))
 
 

@@ -471,7 +471,7 @@ def ivf_pack(
     )
     np_dtype = np.dtype(dtype)
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cid = int(key[0])
         # id-sorted blocks: the layout (and any tie-broken partial
         # top-k over it) is reproducible across shuffles and runs

@@ -247,7 +247,7 @@ def ivfpq_pack(
         f"vec_ids array<{idt}>, codes binary"
     )
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cid = int(key[0])
         pdf = pdf.sort_values(id_col)
         Cm = np.stack(pdf["codes"].to_numpy())

@@ -240,7 +240,7 @@ def repack_codec_blocks(
         f"{dtype_ddl}vec_ids array<{elem}>, {blob_col} binary"
     )
 
-    def repack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def repack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         part = int(key[0])
         if dtype_col:
             # a stream can legitimately mix widths within a partition
@@ -346,20 +346,6 @@ def compact_codec_layout(
     return n_before, n_after
 
 
-def compact_ivfpq_layout(spark: SparkSession, layout_path: str) -> tuple[int, int]:
-    return compact_codec_layout(
-        spark, layout_path, "cluster_id", "m", "codes", dtype_col="dtype",
-        require_meta=("centroids", "codebooks"),
-    )
-
-
-def compact_sq_layout(spark: SparkSession, layout_path: str) -> tuple[int, int]:
-    return compact_codec_layout(
-        spark, layout_path, "bucket", "d", "codes",
-        dtype_col=None, fixed_dtype="uint8", require_meta=("bounds",),
-    )
-
-
 def load_local_meta(spark: SparkSession, layout_path: str, name: str) -> DataFrame:
     """A layout metadata table as a lineage-free LOCAL frame — loaded
     once at sink creation (metadata is immutable for a layout's
@@ -383,61 +369,3 @@ def write_stream_blocks(
         .mode("overwrite")
         .parquet(f"{layout_path}/blocks")
     )
-
-
-def ivfpq_layout_sink(spark: SparkSession, layout_path: str,
-                      vec_col: str = "embedding", id_col: str = "vec_id"):
-    """foreachBatch writer for a STREAM-MAINTAINED IVF-PQ code layout
-    (r6 — the codes analogue of `streaming.incremental.ann_layout_sink`):
-    each micro-batch of raw vectors is encoded map-side against the
-    layout's standing quantizer pair (`ivfpq_encode` — no refit),
-    packed, and written into its own (cluster_id, batch_id)
-    partitions with dynamic partition overwrite, so a replayed batch
-    overwrites itself instead of double-appending. Quantizer state is
-    loaded ONCE at sink creation as lineage-free local frames.
-
-        stream.writeStream.foreachBatch(
-            ivfpq_layout_sink(spark, layout_path))
-    """
-    from mcp_vector_search_spark.operators.ivfpq import ivfpq_pack_fused
-
-    cents = load_local_meta(spark, layout_path, "centroids")
-    cbs = load_local_meta(spark, layout_path, "codebooks")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        # r7: fused encode+pack — the three corpus-wide Python passes
-        # (assign, encode, pack) collapse to one map-side pass plus the
-        # block-row repack merge, and per-row unit/code arrays never
-        # cross the Arrow boundary; bit-identical blocks
-        # (tests/test_ivfpq.py)
-        packed = ivfpq_pack_fused(
-            batch_df, cents, cbs, vec_col=vec_col, id_col=id_col
-        )
-        write_stream_blocks(packed, layout_path, "cluster_id", batch_id)
-
-    return write
-
-
-def sq_layout_sink(spark: SparkSession, layout_path: str,
-                   vec_col: str = "embedding", id_col: str = "vec_id"):
-    """foreachBatch writer for a stream-maintained SQ code layout:
-    micro-batches encode against the layout's PINNED bounds (loaded
-    once, lineage-free — encoding against drifted bounds silently
-    corrupts decode, the same invariant `write_sq_layout` append
-    guards), pack into hash-bucketed blocks, and land in per-batch
-    (bucket, batch_id) partitions with replay-idempotent dynamic
-    overwrite."""
-    from mcp_vector_search_spark.operators.sq import sq_pack_fused
-
-    bounds = load_local_meta(spark, layout_path, "bounds")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        # r7: fused encode+pack — one map-side pass per micro-batch,
-        # block blobs only across the shuffle (bit-identical blocks,
-        # tests/test_sq.py)
-        packed = sq_pack_fused(
-            batch_df, bounds, vec_col=vec_col, id_col=id_col
-        )
-        write_stream_blocks(packed, layout_path, "bucket", batch_id)
-
-    return write

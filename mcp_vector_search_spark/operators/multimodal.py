@@ -7,10 +7,10 @@ The pattern for a 100 TB multimodal corpus: media stays an opaque
 the decode/feature step is a `mapInPandas` over Arrow batches — the
 only Python hop in the pipeline, vectorized per batch.
 
-The actual image/audio decode libraries are not in this container, so
-`decode_image` raises NotImplementedError and the default extractor is
-a clearly-marked deterministic fake over the raw bytes; the Spark-side
-plumbing (schema, batching, partitioning) is real and tested.
+No image/audio decode library is a dependency, so the default
+extractor is a clearly-marked deterministic fake over the raw bytes;
+the Spark-side plumbing (schema, batching, partitioning) is real and
+tested.
 """
 
 from __future__ import annotations
@@ -33,18 +33,6 @@ def attach_fake_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
         (F.octet_length(F.col(text_col)) % 640).cast("int").alias("width"),
         (F.octet_length(F.col(text_col)) % 480).cast("int").alias("height"),
     )
-
-
-def decode_image(data: bytes):
-    """Real decode path — requires an image library not present in this
-    environment. STUB (SURVEY §7: gate heavy deps behind import-try)."""
-    try:
-        import PIL.Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "image decoding needs pillow; use the deterministic fake extractor"
-        ) from e
-    raise NotImplementedError("wire PIL decode here when the dependency exists")
 
 
 def _fake_features(blob: bytes) -> list[float]:

@@ -223,30 +223,6 @@ def sample_exact(docs: DataFrame, n: int, id_col: str = "doc_id", salt: str = "t
     )
 
 
-def shuffle_corpus(
-    docs: DataFrame,
-    num_partitions: int,
-    id_col: str = "doc_id",
-    salt: str = "shuffle",
-    key_col: str = "_shuffle_key",
-) -> DataFrame:
-    """Deterministic global shuffle for training order: sort the corpus
-    by md5(id + salt) with `repartitionByRange` + per-partition sort —
-    partition p holds a contiguous hash range, rows sorted within, so
-    partitions written in index order read back as ONE reproducible
-    global permutation. No single global sort task at any size; a new
-    salt is a fresh epoch permutation with zero state.
-
-    The hash key column stays in the output (callers drop it after the
-    write) — it doubles as the resume cursor for interrupted epochs."""
-    key = F.md5(F.concat(F.col(id_col).cast("string"), F.lit("#" + salt)))
-    return (
-        docs.withColumn(key_col, key)
-        .repartitionByRange(num_partitions, key_col)
-        .sortWithinPartitions(key_col)
-    )
-
-
 def pack_sequences(
     docs: DataFrame,
     max_tokens: int,
@@ -326,11 +302,3 @@ def bin_texts(
         F.sum(token_col).cast("long").alias("total_tok"),
         assembled.alias("text"),
     )
-
-
-def write_training_shards(bins: DataFrame, path: str) -> None:
-    """Persist assembled bins as shard-partitioned JSONL — the final
-    artifact of the curation pipeline. Each shard directory is one
-    training-reader unit; within a shard, files carry (bin_id, n_docs,
-    total_tok, text) rows."""
-    bins.write.mode("overwrite").partitionBy("shard").json(path)

@@ -221,7 +221,7 @@ def sq_pack(
         f"vec_ids array<{idt}>, codes binary"
     )
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         bkt = int(key[0])
         pdf = pdf.sort_values(id_col)
         Cm = np.ascontiguousarray(np.stack(pdf["codes"].to_numpy()).astype(np.uint8))

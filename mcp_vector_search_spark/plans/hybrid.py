@@ -142,18 +142,28 @@ def hybrid_search_batch(
     TABLE, not a literal.
     """
     n_leg = k * over_retrieve
-    bm_leg = _expr_bm_leg(
+    bm_leg = expr_bm_leg(
         docs, term_sets, stats, n_leg, id_col, text_col, query_id_col,
         qid_type_src=query_vecs,
     )
-    return _batch_fuse(
+    return batch_fuse(
         bm_leg,
         _brute_vec_leg(vectors, query_vecs, n_leg, vec_col, vec_id_col, query_id_col),
         k, alpha, query_id_col,
     )
 
 
-def _expr_bm_leg(
+def _require_unique_qids(term_sets: list[tuple[int, list[str]]]) -> None:
+    """A duplicate id emits two entries per doc: the BM25 leg doubles
+    that query's rows and every downstream rank/fusion score is
+    silently corrupted — fail loudly instead."""
+    qids = [qid for qid, _ in term_sets]
+    if len(set(qids)) != len(qids):
+        dupes = sorted({q for q in qids if qids.count(q) > 1})
+        raise ValueError(f"duplicate query_ids in term_sets: {dupes}")
+
+
+def expr_bm_leg(
     docs: DataFrame,
     term_sets: list[tuple[int, list[str]]],
     stats: dict | None,
@@ -185,13 +195,7 @@ def _expr_bm_leg(
         bm25_oneshot_stats,
     )
 
-    qids = [qid for qid, _ in term_sets]
-    if len(set(qids)) != len(qids):
-        # a duplicate id emits two struct entries per doc: the BM25 leg
-        # doubles that query's rows and every downstream rank/fusion
-        # score is silently corrupted — fail loudly instead (ADVICE r5)
-        dupes = sorted({q for q in qids if qids.count(q) > 1})
-        raise ValueError(f"duplicate query_ids in term_sets: {dupes}")
+    _require_unique_qids(term_sets)
     all_terms = list(dict.fromkeys(t for _, ts in term_sets for t in ts))
     if stats is None:
         stats = bm25_oneshot_stats(
@@ -285,7 +289,7 @@ def _brute_vec_leg(
     )
 
 
-def _batch_fuse(
+def batch_fuse(
     bm_leg: DataFrame,
     vec_leg: DataFrame,
     k: int,
@@ -385,7 +389,7 @@ def hybrid_search_batch_indexed(
         postings, doc_stats, term_stats, term_sets, query_vecs, n_leg,
         query_id_col, term_buckets,
     )
-    return _batch_fuse(
+    return batch_fuse(
         bm_leg,
         _brute_vec_leg(vectors, query_vecs, n_leg, vec_col, vec_id_col, query_id_col),
         k, alpha, query_id_col,
@@ -410,10 +414,7 @@ def _indexed_bm_leg(
     from mcp_vector_search_spark.operators.bm25 import B, K1
     from mcp_vector_search_spark.operators.topk import id_type
 
-    qids = [qid for qid, _ in term_sets]
-    if len(set(qids)) != len(qids):
-        dupes = sorted({q for q in qids if qids.count(q) > 1})
-        raise ValueError(f"duplicate query_ids in term_sets: {dupes}")
+    _require_unique_qids(term_sets)
     if term_buckets:
         # hard-fail on an unbucketed frame rather than silently skip:
         # a caller who passes a bucket count believes pruning (and its
@@ -530,7 +531,7 @@ def hybrid_search_batch_ann(
         F.col(vec_id_col).alias("doc_id"),
         F.col("rn").alias("_rank_a"),
     )
-    return _batch_fuse(bm_leg, vec_leg, k, alpha, query_id_col)
+    return batch_fuse(bm_leg, vec_leg, k, alpha, query_id_col)
 
 
 class HybridServer:

@@ -187,21 +187,21 @@ def full_search(
     # equality checked at three SFs), and the shared ranked vector leg
     # replicates per variant as a ≤k·3·2-row crossJoin instead of
     # max_variants identical knn subtrees.
-    from mcp_vector_search_spark.plans.hybrid import _batch_fuse, _expr_bm_leg
+    from mcp_vector_search_spark.plans.hybrid import batch_fuse, expr_bm_leg
 
     term_sets = [(i, v.split()) for i, v in enumerate(variants)]
     n_leg = k * 3 * 2
     vids = docs.sparkSession.createDataFrame(
         [(i,) for i in range(len(variants))], "query_id int"
     )
-    bm_leg = _expr_bm_leg(
+    bm_leg = expr_bm_leg(
         docs, term_sets, stats, n_leg, "doc_id", "text", "query_id",
         qid_type_src=vids, tokenized=tok,
     )
     rep_vec_leg = vids.crossJoin(
         vec_ranked.select("doc_id", F.col("rank").alias("_rank_a"))
     )
-    fused = _batch_fuse(bm_leg, rep_vec_leg, k * 3, alpha, "query_id")
+    fused = batch_fuse(bm_leg, rep_vec_leg, k * 3, alpha, "query_id")
     legs = fused.select("doc_id", "rrf_score")
     merged = max_score_merge(legs, "doc_id", "rrf_score")
 

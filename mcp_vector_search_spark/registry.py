@@ -117,10 +117,6 @@ _LINES = (
 )
 
 
-def _terms_in() -> str:
-    return ", ".join(f"'{t}'" for t in QUERY_TERMS)
-
-
 def _bm25_shared_over(src: str) -> str:
     """The BM25 index CTE chain over an arbitrary (doc_id, text)
     source relation — `bm25_incr` points it at the post-upsert/delete
@@ -700,10 +696,6 @@ def q_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hotspots(_docs(spark, sf_dir), n=5).withColumn(
         "hotspot_rank", F.col("hotspot_rank").cast("long")
     )
-
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return quality_score(_docs(spark, sf_dir))
 
 
 def q_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1397,12 +1389,12 @@ def q_bm25_expanded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `_rank_b ≤ k` are EXACTLY `bm25_topk`'s top-k (same round-6
     # score, same matched>0 filter, same doc_id tiebreak; old-vs-new
     # exceptAll = 0 both ways at sf0.001/0.01/0.1).
-    from mcp_vector_search_spark.plans.hybrid import _expr_bm_leg
+    from mcp_vector_search_spark.plans.hybrid import expr_bm_leg
 
     vids = spark.createDataFrame(
         [(i,) for i in range(len(variants))], "query_id int"
     )
-    legs = _expr_bm_leg(
+    legs = expr_bm_leg(
         docs, [(i, v.split()) for i, v in enumerate(variants)], stats,
         KNN_K, "doc_id", "text", "query_id", qid_type_src=vids,
         tokenized=tok,
@@ -2043,14 +2035,6 @@ def q_blame_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F6 YAKE-analog keyword extraction: top-3 tokens per doc by
-    (tf DESC, first-position ASC, token ASC)."""
-    from mcp_vector_search_spark.functions.text import top_keywords
-
-    return top_keywords(_docs(spark, sf_dir), n=3)
-
-
 def q_identifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6 identifier-term extraction: camel/snake/ACRONYM regexes +
     backtick code refs over a deterministically case-mixed text
@@ -2280,18 +2264,6 @@ def q_debt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dir_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mcp_vector_search_spark.operators.smells import directory_rollup
-
-    files = _docs(spark, sf_dir).select(
-        F.concat(
-            F.lit("src/"), F.col("lang"), F.lit("/"), F.col("source"), F.lit(".txt")
-        ).alias("path"),
-        "n_chars",
-    )
-    return directory_rollup(files)
-
-
 def q_rrf_trimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4: semantic ⊕ keyword ⊕ quality strategies fused with
     unweighted RRF + min-score floor."""
@@ -2352,14 +2324,6 @@ def q_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mmr_diversify(
         cand, k=10, diversity=0.3, id_col="vec_id", score_col="cos_sim"
     ).withColumn("mmr_rank", F.col("mmr_rank").cast("long"))
-
-
-def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        F.octet_length("text").cast("long").alias("n_bytes"),
-        F.ascii(F.substring("text", 1, 1)).cast("long").alias("first_byte"),
-    )
 
 
 # synthesized doc paths exercising every classifier pass (extension,

@@ -45,8 +45,6 @@ table).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,11 +66,6 @@ _SUFFIX_FMT = {
     ".txt": "text",
     ".txt.gz": "text",
 }
-
-# JSON-encoding overhead over raw text bytes (escaping + key/metadata
-# framing), measured ~1.15-1.25 on prose; used only to SIZE shards
-_JSONL_OVERHEAD = 1.2
-
 
 def _infer_format(path: str) -> str:
     low = path.rstrip("/").lower()
@@ -287,9 +280,9 @@ def write_corpus(
     """Write a corpus for downstream (training-loader) consumption.
 
     ``shards`` controls output file count via a round-robin
-    repartition — size shards with :func:`shard_count_for` so each
-    lands near the loader's sweet spot (and so gzip members stay
-    small enough that a future re-read isn't one-task-per-100GB).
+    repartition — size shards so each lands near the loader's sweet
+    spot (and so gzip members stay small enough that a future re-read
+    isn't one-task-per-100GB).
     ``compression``: any Spark codec name ("gzip", "bzip2", "zstd",
     "snappy", "none"); for text formats prefer small-membered gzip or
     splittable-at-rest parquet+zstd over giant .gz files.
@@ -317,26 +310,3 @@ def write_corpus(
         writer.orc(path)
     else:  # text: single string column required by the writer
         writer.text(path)
-
-
-def shard_count_for(
-    df: DataFrame,
-    target_mb: int = 256,
-    *,
-    text_col: str = "text",
-    sample_fraction: float | None = None,
-) -> int:
-    """Shard count that puts ~``target_mb`` of JSONL per output file.
-
-    One aggregate over ``octet_length(text)`` (scaled up from a
-    ``sample_fraction`` when given — at 100 TB, sample; the estimate
-    needs one significant digit, not a full scan). The ~1.2× JSONL
-    framing overhead is folded in. Conservative on purpose: a shard
-    landing at 300 MB is fine, a 100 GB gzip member is not.
-    """
-    probe = df.sample(fraction=sample_fraction, seed=13) if sample_fraction else df
-    row = probe.select(
-        F.sum(F.octet_length(F.col(text_col))).alias("b")
-    ).collect()[0]
-    total = (row["b"] or 0) / (sample_fraction or 1.0) * _JSONL_OVERHEAD
-    return max(1, math.ceil(total / (target_mb * 1024 * 1024)))

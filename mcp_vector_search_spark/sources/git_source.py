@@ -23,7 +23,6 @@ import subprocess
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 COMMITS_SCHEMA = (
     "commit_sha string, parent_sha string, parent_shas array<string>,"
@@ -74,15 +73,6 @@ def current_branch(repo_path: str) -> str:
         text=True,
         check=True,
     ).stdout.strip()
-
-
-def commit_order(commits: DataFrame) -> DataFrame:
-    """Attach a (ts, sha) display position. NOTE: on a branchy DAG
-    this is NOT an ancestry order — it exists for stable presentation
-    (changelogs, pagination). Ancestry questions go through
-    `commit_ancestry` / `ancestors_of`, never through `pos`."""
-    w = Window.orderBy("ts", "commit_sha")
-    return commits.withColumn("pos", F.row_number().over(w))
 
 
 def _parent_map(commits: DataFrame) -> dict[str, list[str]]:
@@ -366,17 +356,13 @@ def commit_ancestry_distributed(commits: DataFrame, max_iters: int = 64) -> Data
     )
 
 
-def entities_at_commit(
-    entities: DataFrame, commits: DataFrame, commit_sha: str
-) -> DataFrame:
+def entities_at_commit(entities: DataFrame, ancestors: DataFrame) -> DataFrame:
     """G6 get_entities_at_commit: entities whose creating commit is an
     ancestor of the asked commit — TRUE DAG ancestry (a side-branch
     commit sees its own branch + the trunk below the fork, never
     unrelated commits that merely happened earlier). `entities`
-    carries a `commit_sha` column; the ancestor set (one BFS, tiny)
-    broadcasts into a semi-join."""
-    anc = ancestors_of(commits, commit_sha)
-    anc_df = entities.sparkSession.createDataFrame(
-        [(a,) for a in anc], "commit_sha string"
-    )
-    return entities.join(F.broadcast(anc_df), "commit_sha", "left_semi")
+    carries a `commit_sha` column; `ancestors` is the asked commit's
+    ancestor set as `ancestor_set_df` returns it. A plain semi-join, no
+    forced broadcast: one commit's ancestor set can be nearly the
+    whole history."""
+    return entities.join(ancestors, "commit_sha", "left_semi")

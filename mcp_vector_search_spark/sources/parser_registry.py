@@ -25,7 +25,6 @@ from dataclasses import dataclass, field
 @dataclass(frozen=True)
 class LanguageSpec:
     language: str
-    extensions: tuple[str, ...]
     boundary_re: str  # line pattern that starts a new chunk
     branch_keywords: tuple[str, ...] = field(
         default=("if", "elif", "else", "for", "while", "case", "catch", "and", "or")
@@ -49,28 +48,13 @@ def for_language(language: str) -> LanguageSpec:
     return _SPECS.get(language, _SPECS["text"])
 
 
-def for_extension(ext: str) -> LanguageSpec:
-    e = ext.lower().lstrip(".")
-    for spec in _SPECS.values():
-        if e in spec.extensions:
-            return spec
-    return _SPECS["text"]
-
-
 def registered_languages() -> list[str]:
     return sorted(_SPECS)
-
-
-def spec_rows() -> list[tuple[str, str]]:
-    """(language, boundary_re) rows — broadcast-join this against a
-    files frame to chunk a mixed-language corpus in one pass."""
-    return [(s.language, s.boundary_re) for s in _SPECS.values()]
 
 
 for _spec in [
     LanguageSpec(
         "python",
-        ("py", "pyi"),
         r"^(def |class |async def )",
         kind_rules=(
             ("class", r"^class (\w+)"),
@@ -79,7 +63,6 @@ for _spec in [
     ),
     LanguageSpec(
         "javascript",
-        ("js", "jsx", "mjs"),
         r"^(function |class |const \w+ = (async )?\(|export (default )?(function|class) )",
         kind_rules=(
             ("class", r"^(?:export )?(?:default )?class (\w+)"),
@@ -89,7 +72,6 @@ for _spec in [
     ),
     LanguageSpec(
         "typescript",
-        ("ts", "tsx"),
         r"^(function |class |interface |type \w+ =|const \w+ = (async )?\(|export )",
         kind_rules=(
             ("interface", r"^(?:export )?interface (\w+)"),
@@ -101,7 +83,6 @@ for _spec in [
     ),
     LanguageSpec(
         "go",
-        ("go",),
         r"^(func |type \w+ (struct|interface))",
         kind_rules=(
             ("method", r"^func \([^)]*\) (\w+)"),
@@ -112,7 +93,6 @@ for _spec in [
     ),
     LanguageSpec(
         "java",
-        ("java",),
         r"^\s*(public |private |protected ).*[({]$",
         kind_rules=(
             ("interface", r"\binterface (\w+)"),
@@ -127,7 +107,6 @@ for _spec in [
     # (reference extracts them as method chunks, tests/test_rust_parser.py)
     LanguageSpec(
         "rust",
-        ("rs",),
         r"^\s*(pub(\([^)]*\))? )?(fn |struct |enum |impl |trait |mod )",
         kind_rules=(
             ("struct", r"^(?:pub(?:\([^)]*\))? )?struct (\w+)"),
@@ -142,19 +121,16 @@ for _spec in [
     ),
     LanguageSpec(
         "c",
-        ("c", "h"),
         r"^\w[\w\s\*]*\([^;]*$",
         kind_rules=(("function", r"(\w+)\s*\("),),
     ),
     LanguageSpec(
         "cpp",
-        ("cpp", "cc", "hpp", "cxx"),
         r"^[\w:<>~][\w\s\*:<>,&~]*\([^;]*$",
         kind_rules=(("function", r"([\w~]+)\s*\("),),
     ),
     LanguageSpec(
         "ruby",
-        ("rb",),
         r"^\s*(def |class |module )",
         kind_rules=(
             ("module", r"^\s*module (\w+)"),
@@ -167,7 +143,6 @@ for _spec in [
     # extracts both, tests/test_php_parser.py)
     LanguageSpec(
         "php",
-        ("php", "phtml"),
         r"^\s*((abstract |final )?class |interface |trait "
         r"|((public|private|protected|static|final|abstract) +)*function )",
         kind_rules=(
@@ -186,7 +161,6 @@ for _spec in [
     # (the `{` sits on the next line).
     LanguageSpec(
         "csharp",
-        ("cs",),
         r"^\s*(namespace \w"
         r"|((public|private|protected|internal|static|abstract|sealed|partial) +)*"
         r"(class|interface|struct|enum|record) "
@@ -206,7 +180,6 @@ for _spec in [
     # name and an arg list; call sites fail the `type SP name(` shape
     LanguageSpec(
         "dart",
-        ("dart",),
         r"^\s*(abstract +)?(class|mixin|enum|extension) "
         r"|^\s*(static +)?([A-Z_$][\w<>, ?]*|void|int|double|bool|num|dynamic)"
         r" +[_$a-zA-Z]\w*\(",
@@ -225,7 +198,6 @@ for _spec in [
     # here — divergence pinned in tests/test_ast_parity.py)
     LanguageSpec(
         "html",
-        ("html", "htm"),
         r"^\s*<(h[1-6]|section|article|header|footer|main|nav)\b",
         kind_rules=(
             ("section", r"id=\"([^\"]+)\""),
@@ -235,7 +207,6 @@ for _spec in [
     ),
     LanguageSpec(
         "swift",
-        ("swift",),
         r"^\s*(func |class |struct |enum |extension )",
         kind_rules=(
             ("function", r"^\s*func (\w+)"),
@@ -247,7 +218,6 @@ for _spec in [
     ),
     LanguageSpec(
         "kotlin",
-        ("kt", "kts"),
         r"^\s*(fun |class |object |interface )",
         kind_rules=(
             ("function", r"^\s*fun (\w+)"),
@@ -258,7 +228,6 @@ for _spec in [
     ),
     LanguageSpec(
         "text",
-        ("txt", "md", "rst"),
         r"^#{1,6} |^={3,}$",
         kind_rules=(("heading", r"^#{1,6} +(.*)$"),),
     ),

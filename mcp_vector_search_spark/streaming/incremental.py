@@ -295,28 +295,6 @@ def versioned_upsert_sink(
     return write
 
 
-def streaming_dedup(changes: DataFrame, watermark_delay: str = "10 minutes") -> DataFrame:
-    """Streaming exact-dedup: content fingerprints deduped within the
-    watermark horizon (`dropDuplicatesWithinWatermark` — state is
-    bounded by event time, unlike a plain dropDuplicates whose state
-    grows forever). The batch analog is `exact_duplicates`; this is
-    the arrival-stream half of the training-data dedup surface: docs
-    whose fingerprint already streamed by within the horizon are
-    suppressed at ingest.
-
-    `changes` must carry (doc_id, text, ts TIMESTAMP). Corrupt rows
-    (null text/ts) are filtered first — distinct corrupt records would
-    otherwise collapse onto one NULL fingerprint and suppress each
-    other (same guard the batch path applies in process_batch).
-    """
-    clean = changes.filter(F.col("text").isNotNull() & F.col("ts").isNotNull())
-    fp = clean.withColumn("fingerprint", doc_fingerprint("text"))
-    return (
-        fp.withWatermark("ts", watermark_delay)
-        .dropDuplicatesWithinWatermark(["fingerprint"])
-    )
-
-
 # --- streaming ANN indexing (r5): the arrival-stream half of the ----
 # --- IVF layout lifecycle (operators/ivf.py ivf_assign/ivf_pack) ----
 

@@ -434,23 +434,6 @@ def test_csharp_boundaries(spark):
     assert "User Find(long id);" not in firsts
 
 
-def test_registry_covers_reference_languages():
-    """Every language the reference registry maps
-    (parsers/registry.py parser_map) resolves to a non-text spec here,
-    under the same extensions."""
-    from mcp_vector_search_spark.sources.parser_registry import for_extension
-
-    expect = {
-        ".py": "python", ".js": "javascript", ".jsx": "javascript",
-        ".mjs": "javascript", ".ts": "typescript", ".tsx": "typescript",
-        ".java": "java", ".cs": "csharp", ".go": "go", ".rs": "rust",
-        ".dart": "dart", ".php": "php", ".rb": "ruby",
-        ".html": "html", ".htm": "html", ".txt": "text", ".md": "text",
-    }
-    for ext, lang in expect.items():
-        assert for_extension(ext).language == lang, (ext, lang)
-
-
 def _ml_typed(spark, lang: str, src: str) -> set[tuple[str, str]]:
     """{(chunk_type, name)} of boundary-opened chunks (r6 typing)."""
     from mcp_vector_search_spark.sources.code_chunker import (

@@ -7,8 +7,8 @@ from mcp_vector_search_spark.operators.bm25 import (
     EPSILON,
     K1,
     bm25_topk,
-    build_doc_stats,
     build_postings,
+    doc_stats_from_postings,
 )
 
 
@@ -57,5 +57,5 @@ def test_bm25_matches_okapi_reference(spark, docs):
 def test_postings_and_doc_stats(spark, docs):
     p = build_postings(docs).filter("doc_id = 0 and term = 'the'").first()
     assert p.tf == 2
-    dl = {r.doc_id: r.dl for r in build_doc_stats(docs).collect()}
-    assert dl[0] == 9.0 and dl[5] == 0.0
+    dl = {r.doc_id: r.dl for r in doc_stats_from_postings(build_postings(docs)).collect()}
+    assert dl[0] == 9.0 and 5 not in dl  # token-less docs have no postings

@@ -9,7 +9,6 @@ from mcp_vector_search_spark.functions.embed import (
     embed_with_cache,
     fake_embed_expr,
 )
-from mcp_vector_search_spark.io import export_results, upsert_parquet
 
 
 def test_expr_and_batch_embeddings_agree(spark, docs):
@@ -32,26 +31,6 @@ def test_embed_with_cache_skips_hits(spark, docs):
     emb2, cache2 = embed_with_cache(docs, cache1)
     assert emb2.count() == docs.count()
     assert cache2.count() == cache1.count()
-
-
-def test_upsert_parquet_roundtrip(spark, tmp_path):
-    path = str(tmp_path / "t.parquet")
-    v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    upsert_parquet(spark, v1, path, ["id"])
-    v2 = spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string")
-    upsert_parquet(spark, v2, path, ["id"])
-    got = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert got == {1: "a", 2: "B", 3: "c"}
-
-
-def test_export_results(spark, tmp_path):
-    df = spark.createDataFrame([(1, "x")], "id long, v string")
-    p = str(tmp_path / "out_json")
-    export_results(df, p, "json")
-    assert spark.read.json(p).count() == 1
-    p2 = str(tmp_path / "out_csv")
-    export_results(df, p2, "csv")
-    assert spark.read.option("header", True).csv(p2).count() == 1
 
 
 def test_versioned_upsert_time_travel_and_conflict(spark, tmp_path):
@@ -106,21 +85,16 @@ def test_recover_swap_restores_renamed_aside_table(spark, tmp_path):
     restarting the table from the current batch."""
     import os
 
-    from mcp_vector_search_spark.io import recover_swap, upsert_parquet
+    from mcp_vector_search_spark.io import recover_swap
 
     path = str(tmp_path / "t.parquet")
-    df = spark.createDataFrame([(1, "a")], "id long, v string")
-    upsert_parquet(spark, df, path, ["id"])
+    spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(path)
     # simulate the crash window: table renamed aside, new one not yet in
     os.rename(path, path + ".old")
     assert recover_swap(path) is True
     assert spark.read.parquet(path).count() == 1
-    # upsert after a simulated crash merges with the RECOVERED data
-    os.rename(path, path + ".old")
-    upsert_parquet(
-        spark, spark.createDataFrame([(2, "b")], "id long, v string"), path, ["id"]
-    )
-    assert spark.read.parquet(path).count() == 2
+    # an intact table is left alone
+    assert recover_swap(path) is False
 
 
 def test_read_versioned_no_commits_raises(spark, tmp_path):
@@ -149,20 +123,6 @@ def test_txn_map_survives_vacuum(spark, tmp_path):
     upsert_versioned(spark, d(3), path, ["id"], meta={"scope": "B", "batch_id": 1})
     vacuum_versioned(path, keep_last=1)  # prunes v1/v2 manifests
     assert latest_txn(path) == {"A": 0, "B": 1}
-
-
-def test_md_export_escapes_pipes_and_newlines(spark, tmp_path):
-    from mcp_vector_search_spark.io import export_results
-
-    df = spark.createDataFrame(
-        [("a|b", "line1\nline2")], "x string, y string"
-    )
-    out = str(tmp_path / "r.md")
-    export_results(df, out, fmt="md")
-    text = open(out).read()
-    lines = text.strip().splitlines()
-    assert len(lines) == 3  # header, separator, ONE data row
-    assert "a\\|b" in lines[2] and "line1<br>line2" in lines[2]
 
 
 def test_latest_txn_fallback_for_pre_txn_manifests(spark, tmp_path):

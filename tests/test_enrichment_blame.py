@@ -90,21 +90,3 @@ def test_extract_identifiers(spark):
     assert r["ids"]["camel"] == ["getValue"]
     assert r["ids"]["acronyms"] == ["HTTP2"]
     assert r["refs"] == ["ref_x"]
-
-
-def test_kg_persist_roundtrip(spark, tmp_path):
-    """K4: batch-load the constructed KG into parquet via the upsert
-    sink; a second upsert replaces colliding edges (MERGE semantics)."""
-    from mcp_vector_search_spark.io import upsert_parquet
-
-    edges = spark.createDataFrame(
-        [(1, 2, "calls"), (2, 3, "calls")], "src long, dst long, rel string"
-    )
-    path = str(tmp_path / "kg_edges")
-    upsert_parquet(spark, edges, path, ["src", "dst"])
-    update = spark.createDataFrame([(1, 2, "imports")], "src long, dst long, rel string")
-    upsert_parquet(spark, update, path, ["src", "dst"])
-    got = {
-        (r["src"], r["dst"]): r["rel"] for r in spark.read.parquet(path).collect()
-    }
-    assert got == {(1, 2): "imports", (2, 3): "calls"}

@@ -5,7 +5,7 @@ import subprocess
 from pyspark.sql import functions as F
 
 from mcp_vector_search_spark.sources.git_source import (
-    commit_order,
+    ancestor_set_df,
     entities_at_commit,
     git_log_df,
 )
@@ -29,8 +29,7 @@ def test_git_log_and_ancestry(spark, tmp_path):
     repo = _init_repo(tmp_path / "repo")
     commits = git_log_df(spark, str(repo))
     assert commits.count() == 3
-    ordered = commit_order(commits)
-    rows = ordered.orderBy("pos").collect()
+    rows = commits.orderBy("ts", "commit_sha").collect()
     assert [r.subject for r in rows] == ["c0", "c1", "c2"]
     assert rows[0].parent_sha is None and rows[2].parent_sha == rows[1].commit_sha
 
@@ -39,7 +38,7 @@ def test_git_log_and_ancestry(spark, tmp_path):
         [(f"e{i}", r.commit_sha) for i, r in enumerate(rows)],
         "entity_id string, commit_sha string",
     )
-    at_c1 = entities_at_commit(entities, ordered, rows[1].commit_sha)
+    at_c1 = entities_at_commit(entities, ancestor_set_df(commits, rows[1].commit_sha))
     assert sorted(r.entity_id for r in at_c1.collect()) == ["e0", "e1"]
 
 
@@ -95,7 +94,7 @@ def test_branchy_ancestry_beats_first_parent(spark, tmp_path):
         [("e_c0", c0), ("e_c1", c1), ("e_b1", b1)],
         "entity_id string, commit_sha string",
     )
-    at_b1 = entities_at_commit(entities, commits, b1)
+    at_b1 = entities_at_commit(entities, ancestor_set_df(commits, b1))
     assert sorted(r.entity_id for r in at_b1.collect()) == ["e_b1", "e_c0"]
     # (timestamp ordering would have wrongly included e_c1: ts(c1) < ts(b1))
 
@@ -114,6 +113,9 @@ def test_branchy_ancestry_beats_first_parent(spark, tmp_path):
     assert by_commit[b1] == {b1, c0}
     assert by_commit[c1] == {c1, c0}
     assert by_commit[merge_sha] == {merge_sha, c1, b1, c0}
+    # served from the persisted closure: the same entities
+    from_closure = entities_at_commit(entities, ancestor_set_df(None, b1, closure=anc))
+    assert sorted(r.entity_id for r in from_closure.collect()) == ["e_b1", "e_c0"]
 
 
 def test_repo_nodes_full_graph(spark, tmp_path):

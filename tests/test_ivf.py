@@ -358,3 +358,22 @@ def test_ivf_pack_fused_bit_identical_to_two_step(spark):
     )
     b = sorted(map(tuple, ivf_topk_batch_packed(packed2, cents2, queries, 5).collect()))
     assert a == b
+
+
+def test_ivf_pack_infers_grouped_map_eval_type(spark):
+    """Both parameters of the packing function are annotated, so
+    `applyInPandas` infers the grouped-map eval type instead of warning
+    TYPE_HINT_SHOULD_BE_SPECIFIED on every pack."""
+    import warnings
+
+    from mcp_vector_search_spark.operators.ivf import ivf_pack
+
+    assigned = spark.createDataFrame(
+        [(0, 0, [1.0, 0.0]), (1, 0, [0.0, 1.0])],
+        "vec_id long, cluster_id int, embedding array<double>",
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        packed = ivf_pack(assigned)
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
+    assert [r.n for r in packed.collect()] == [2]

@@ -120,25 +120,34 @@ def test_api_save_load_ann_index_roundtrip(spark, tmp_path):
         p3.save_ann_index(str(tmp_path / "none"))
 
 
+def _compact_sq(spark, path):
+    from mcp_vector_search_spark.operators.layout import compact_codec_layout
+
+    return compact_codec_layout(
+        spark, path, "bucket", "d", "codes",
+        dtype_col=None, fixed_dtype="uint8", require_meta=("bounds",),
+    )
+
+
 def test_ivfpq_streaming_sink_and_compaction(spark, tmp_path):
-    """r6 codec lifecycle symmetry: ivfpq_layout_sink appends
-    micro-batches encoded against the standing quantizer pair
+    """r6 codec lifecycle symmetry: micro-batches encoded against the
+    standing quantizer pair land as per-batch block fragments
     (replay-idempotent via dynamic partition overwrite), then
-    compact_ivfpq_layout merges the per-batch fragments with
-    bit-identical serving."""
+    compaction merges the fragments with bit-identical serving."""
     import math
 
     from mcp_vector_search_spark import io
     from mcp_vector_search_spark.operators.ivfpq import (
         ivfpq_build,
         ivfpq_pack,
+        ivfpq_pack_fused,
         ivfpq_topk_packed,
     )
     from mcp_vector_search_spark.operators.layout import (
-        compact_ivfpq_layout,
-        ivfpq_layout_sink,
+        compact_codec_layout,
         read_ivfpq_layout,
         write_ivfpq_layout,
+        write_stream_blocks,
     )
 
     emb = io.table(spark, SF_DIR, "embeddings")
@@ -147,7 +156,10 @@ def test_ivfpq_streaming_sink_and_compaction(spark, tmp_path):
     path = str(tmp_path / "pq_stream")
     write_ivfpq_layout(ivfpq_pack(enc), cents, cbs, path)
 
-    sink = ivfpq_layout_sink(spark, path)
+    def sink(batch, batch_id):
+        packed = ivfpq_pack_fused(batch, cents, cbs)
+        write_stream_blocks(packed, path, "cluster_id", batch_id)
+
     for i, lo in enumerate(range(300, 500, 50)):
         sink(emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 50)), i)
     sink(emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 350)), 0)  # replay
@@ -164,7 +176,10 @@ def test_ivfpq_streaming_sink_and_compaction(spark, tmp_path):
         map(tuple, ivfpq_topk_packed(pk, c2, cb2, queries, 5, nprobes=8).collect())
     )
 
-    got_before, got_after = compact_ivfpq_layout(spark, path)
+    got_before, got_after = compact_codec_layout(
+        spark, path, "cluster_id", "m", "codes",
+        require_meta=("centroids", "codebooks"),
+    )
     assert got_before == n_before
     pk2, c3, cb3 = read_ivfpq_layout(spark, path)
     per_part = {
@@ -181,19 +196,20 @@ def test_ivfpq_streaming_sink_and_compaction(spark, tmp_path):
 
 
 def test_sq_streaming_sink_and_compaction(spark, tmp_path):
-    """SQ half of the codec streaming lifecycle: sink encodes against
-    the layout's pinned bounds (replay-idempotent), compaction merges
-    per-batch bucket fragments with serve-result equality."""
+    """SQ half of the codec streaming lifecycle: micro-batches encode
+    against the layout's pinned bounds (replay-idempotent), compaction
+    merges per-batch bucket fragments with serve-result equality."""
     from mcp_vector_search_spark import io
     from mcp_vector_search_spark.operators.layout import (
-        compact_sq_layout,
+        compact_codec_layout,
         read_sq_layout,
-        sq_layout_sink,
         write_sq_layout,
+        write_stream_blocks,
     )
     from mcp_vector_search_spark.operators.sq import (
         sq_encode,
         sq_pack,
+        sq_pack_fused,
         sq_topk_packed,
         sq_train,
     )
@@ -203,7 +219,10 @@ def test_sq_streaming_sink_and_compaction(spark, tmp_path):
     bounds = sq_train(emb)  # bounds over the FULL corpus: appends stay in-range
     path = str(tmp_path / "sq_stream")
     write_sq_layout(sq_pack(sq_encode(base, bounds)), bounds, path)
-    sink = sq_layout_sink(spark, path)
+
+    def sink(batch, batch_id):
+        write_stream_blocks(sq_pack_fused(batch, bounds), path, "bucket", batch_id)
+
     for i, lo in enumerate(range(300, 500, 100)):
         sink(emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 100)), i)
     sink(emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400)), 0)  # replay
@@ -215,7 +234,7 @@ def test_sq_streaming_sink_and_compaction(spark, tmp_path):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     before = sorted(map(tuple, sq_topk_packed(pk, b2, q, 5).collect()))
-    nb, na = compact_sq_layout(spark, path)
+    nb, na = _compact_sq(spark, path)
     pk2, b3 = read_sq_layout(spark, path)
     after = sorted(map(tuple, sq_topk_packed(pk2, b3, q, 5).collect()))
     assert after == before and na < nb
@@ -333,10 +352,7 @@ def test_compact_abort_cleans_staged_tmp_on_uri_path(spark, tmp_path, monkeypatc
 
     from mcp_vector_search_spark import io
     from mcp_vector_search_spark.operators import layout as layout_mod
-    from mcp_vector_search_spark.operators.layout import (
-        compact_sq_layout,
-        write_sq_layout,
-    )
+    from mcp_vector_search_spark.operators.layout import write_sq_layout
     from mcp_vector_search_spark.operators.sq import sq_encode, sq_pack, sq_train
 
     emb = io.table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 200)
@@ -359,7 +375,7 @@ def test_compact_abort_cleans_staged_tmp_on_uri_path(spark, tmp_path, monkeypatc
 
     monkeypatch.setattr(layout_mod, "repack_codec_blocks", racing)
     with pytest.raises(RuntimeError, match="quiesce"):
-        compact_sq_layout(spark, path)
+        _compact_sq(spark, path)
     # staged dir cleaned through the FS API, not a silent rmtree no-op
     assert not (local / "blocks.tmp").exists()
     # the standing layout is untouched and still serves

@@ -84,14 +84,6 @@ def test_data_tools_end_to_end(spark):
     r = ad.call_tool("search_similar", {"file_path": src, "limit": 3})
     assert r["ok"] and len(r["rows"]) == 3
 
-    # JSON round-trip plumbing
-    from mcp_vector_search_spark.mcp_adapter import call_tool_json
-
-    out = json.loads(
-        call_tool_json(ad, json.dumps({"name": "get_project_status"}))
-    )
-    assert out["ok"]
-
 
 def test_contract_errors_are_structured(spark):
     ad = _adapter(spark)
@@ -169,13 +161,6 @@ def test_save_report_contained_and_hostile_json(spark, tmp_path):
         "save_report", {"content": "x", "output_path": "../../escape.md"}
     )
     assert bad["ok"] is False and "escapes" in bad["error"]
-
-    import json as _json
-
-    from mcp_vector_search_spark.mcp_adapter import call_tool_json
-
-    assert _json.loads(call_tool_json(ad, "not json"))["ok"] is False
-    assert _json.loads(call_tool_json(ad, '{"arguments": {}}'))["ok"] is False
 
 
 def test_advertised_args_are_honored(spark):

@@ -86,39 +86,3 @@ def test_result_quality_empty_results_all_zeros(spark):
     assert r.high_quality == 0 and r.medium_quality == 0 and r.low_quality == 0
     assert r.diversity == 0.0
     assert r.coverage == 0.0
-
-
-def test_analyze_query_types_and_confidence():
-    from mcp_vector_search_spark.functions.query import analyze_query
-
-    a = analyze_query("find the function that parses chunks")
-    assert a["query_type"] == "function_search" and a["confidence"] == "high"
-    assert any("function names" in s for s in a["suggestions"])
-
-    b = analyze_query("auth")
-    assert b["confidence"] == "low"
-
-    c = analyze_query("handle DatabaseError.retry() gracefully")
-    assert c["query_type"] == "error_handling"
-    sug = " ".join(c["suggestions"])
-    assert "Function call" in sug and "CamelCase" in sug and "Dot notation" in sug
-
-
-def test_suggest_related_queries_paths(spark):
-    from mcp_vector_search_spark.functions.query import suggest_related_queries
-
-    # no results: own words + curated related terms, query words excluded
-    s = suggest_related_queries("auth database broken", None)
-    assert "login" in s and "query" in s
-    assert "auth" not in s  # original words excluded
-
-    # with results: names/parents/file stems surface
-    rows = [
-        ("parse_chunks", "function", "Indexer", "src/chunk_utils.py"),
-        ("embed_batch", "method", "Embedder", "src/embed_runner.py"),
-    ]
-    df = spark.createDataFrame(
-        rows, "name string, chunk_type string, parent string, source string"
-    )
-    s2 = suggest_related_queries("vector stuff", df)
-    assert "parse_chunks" in s2 and "Indexer" in s2

@@ -117,34 +117,6 @@ def test_pack_sequences_oversize_doc_gets_own_bin(spark):
     assert [r["bin_id"] for r in out] == [1, 2, 3]
 
 
-def test_shuffle_corpus_is_reproducible_global_permutation(spark):
-    from pyspark.sql.functions import spark_partition_id
-
-    from mcp_vector_search_spark.operators.sampling import shuffle_corpus
-
-    docs = _corpus(spark, 500)
-    out = shuffle_corpus(docs, 4)
-    rows = out.select(
-        spark_partition_id().alias("pid"), "doc_id", "_shuffle_key"
-    ).collect()
-    # partitions hold disjoint contiguous hash ranges, sorted within
-    by_pid: dict[int, list[str]] = {}
-    for r in rows:
-        by_pid.setdefault(r["pid"], []).append(r["_shuffle_key"])
-    for keys in by_pid.values():
-        assert keys == sorted(keys)
-    bounds = sorted((min(k), max(k)) for k in by_pid.values() if k)
-    for (_, hi), (lo2, _) in zip(bounds, bounds[1:]):
-        assert hi <= lo2
-    # concatenating partitions in index order = the global md5 order
-    concat = [k for pid in sorted(by_pid) for k in by_pid[pid]]
-    assert concat == sorted(concat)
-    # epochs: a different salt gives a different permutation, same set
-    a = [r["doc_id"] for r in shuffle_corpus(docs, 4).collect()]
-    b = [r["doc_id"] for r in shuffle_corpus(docs, 4, salt="epoch2").collect()]
-    assert sorted(a) == sorted(b) and a != b
-
-
 def test_token_mixture_sample_hits_budget_shares(spark):
     """Kept tokens per domain track weight·budget in expectation, a
     weight-0 domain drops entirely, and an under-budget domain is

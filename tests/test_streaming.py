@@ -73,45 +73,6 @@ def test_incremental_stream_end_to_end(spark, tmp_path):
     assert doc1 and all("changed" in t and "gamma" not in t for t in doc1)
 
 
-def test_streaming_dedup(spark, tmp_path):
-    """Duplicate content arriving within the watermark horizon is
-    suppressed; distinct content passes."""
-    from mcp_vector_search_spark.streaming.incremental import streaming_dedup
-
-    input_dir = str(tmp_path / "din")
-    out_dir = str(tmp_path / "dout")
-    ckpt = str(tmp_path / "dckpt")
-    _write_batch(
-        input_dir,
-        "d1.jsonl",
-        [
-            {"doc_id": 1, "text": "alpha beta", "ts": "2024-01-01 00:00:00"},
-            {"doc_id": 2, "text": "alpha  beta", "ts": "2024-01-01 00:01:00"},
-            {"doc_id": 3, "text": "gamma delta", "ts": "2024-01-01 00:02:00"},
-        ],
-    )
-    changes = (
-        spark.readStream.schema("doc_id long, text string, ts string")
-        .json(input_dir)
-        .selectExpr("doc_id", "text", "cast(ts as timestamp) as ts")
-    )
-    q = (
-        streaming_dedup(changes)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(out_dir).collect()
-    # docs 1 and 2 tokenize to the same fingerprint -> one survives
-    fps = [r["fingerprint"] for r in rows]
-    assert len(fps) == 2 and len(set(fps)) == 2
-    assert {r["doc_id"] for r in rows} <= {1, 2, 3}
-    assert 3 in {r["doc_id"] for r in rows}
-
-
 def test_process_batch_replay_and_tie_coherence(spark, tmp_path):
     """Replaying the same micro-batch (same batch_id) must not
     duplicate chunk rows, and intra-batch redeliveries of one doc_id
