@@ -943,10 +943,11 @@ class SparkProject:
         floats or as a 1-row (query_vec) DataFrame.
 
         After `start_serving()`, queries route through the warm
-        `HybridServer` (cached tokenized corpus + cached unit vectors
-        + memoized stats + serving session shape; a frame is read
-        once with `.first()` and the vector scored as a literal — two
-        Spark jobs per call, identical results)."""
+        `HybridServer`: cached tokenized corpus, cached unit vectors
+        and memoized term stats; a frame is read once with `.first()`
+        and the vector scored as a literal. The two legs run as two
+        concurrent single-stage Spark jobs and are fused on the
+        driver, with identical results; the returned frame is local."""
         from mcp_vector_search_spark.functions.query import preprocess_query
         from mcp_vector_search_spark.plans.hybrid import hybrid_search, query_frame
 
@@ -964,24 +965,22 @@ class SparkProject:
             alpha=alpha,
         )
 
-    def start_serving(self, tune_session: bool = True) -> None:
+    def start_serving(self) -> None:
         """Enter warm single-query serving mode (r6, VERDICT r5 #6):
         builds the `HybridServer` state once — cached tokenized corpus,
-        cached unit-normalized vectors, memoized BM25 corpus scalars —
-        and (by default) tunes the session for interactive queries
-        (AQE off, few shuffle partitions; restored by `stop_serving`).
-        Each later `search_hybrid` call runs two Spark jobs (the BM25
-        stats lookup and the answer) with no Python worker and no
-        broadcast, and returns the cold path's rows."""
+        cached unit-normalized vectors, memoized BM25 corpus scalars
+        and term stats, one worker thread. Each later `search_hybrid`
+        call runs its two legs as two concurrent single-stage Spark
+        jobs (plus one tiny lookup job when a query term is new),
+        fuses them on the driver, and returns the cold path's rows. No
+        session conf is changed."""
         if self._hybrid_server is None:
             from mcp_vector_search_spark.plans.hybrid import HybridServer
 
-            self._hybrid_server = HybridServer(
-                self.docs, self.vectors, tune_session=tune_session
-            )
+            self._hybrid_server = HybridServer(self.docs, self.vectors)
 
     def stop_serving(self) -> None:
-        """Leave serving mode: restore session confs, release caches."""
+        """Leave serving mode: stop the worker thread, release caches."""
         if self._hybrid_server is not None:
             self._hybrid_server.close()
             self._hybrid_server = None

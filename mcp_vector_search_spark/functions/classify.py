@@ -81,10 +81,6 @@ RULES: list[tuple[str, str, str]] = [
 
 DEFAULT_CATEGORY = "other"
 
-# every category the ladder can emit (the reference's 23 + the
-# always-on readme/license/roadmap/security/other buckets)
-ALL_CATEGORIES = sorted({cat for _, _, cat in RULES} | {DEFAULT_CATEGORY})
-
 
 def categorize_path(path_col: str) -> Column:
     """`when`-ladder over a path column → category string."""

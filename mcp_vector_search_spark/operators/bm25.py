@@ -803,11 +803,17 @@ class Bm25ServingStats:
 
     `stats_for(terms)` returns the same dict shape (and the same
     values — pinned in tests) as `bm25_oneshot_stats(docs, terms)`.
+    Each term's idf, or its absence from the corpus, is memoized, so
+    a query runs the lookup job only for terms no earlier query had:
+    a session's queries draw on a small working vocabulary, and a
+    repeated term costs no job. The memo starts over when a query
+    would grow it past `MEMO_MAX` terms, and `unpersist` clears it.
     Also exposes `tokenized`: the cached (id, toks, _dl) frame the
     serving scoring scan reuses instead of re-tokenizing the corpus
     per query."""
 
     SENTINEL = "#doc#"
+    MEMO_MAX = 65_536
 
     def __init__(
         self,
@@ -817,6 +823,7 @@ class Bm25ServingStats:
         epsilon: float = EPSILON,
     ):
         self._epsilon = epsilon
+        self._idf: dict[str, float | None] = {}  # term → idf; None = absent
         self.tokenized = (
             docs.select(F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks"))
             .withColumn("_dl", F.size("toks").cast("double"))
@@ -851,28 +858,48 @@ class Bm25ServingStats:
         )
 
     def stats_for(self, query_terms: list[str]) -> dict:
-        """The `bm25_oneshot_stats` dict for `query_terms`, from one
-        tiny job over the cached vocab."""
+        """The `bm25_oneshot_stats` dict for `query_terms`; terms not
+        in the memo are looked up in one tiny job over the cached
+        vocab."""
         import math
 
         q = list(dict.fromkeys(query_terms))
-        idf = {}
-        if self.n_docs:
-            for r in self._vocab.filter(F.col("term").isin(q)).collect():
+        unseen = [t for t in q if t not in self._idf]
+        if unseen and self.n_docs:
+            if len(self._idf) + len(unseen) > self.MEMO_MAX:
+                self._idf.clear()
+                unseen = q
+            found = {}
+            for r in self._vocab.filter(F.col("term").isin(unseen)).collect():
                 if r.term == self.SENTINEL:
                     continue
                 ir = math.log((self.n_docs - r.df + 0.5) / (r.df + 0.5))
-                idf[r.term] = self._epsilon * self.avg_idf if ir < 0 else ir
+                found[r.term] = self._epsilon * self.avg_idf if ir < 0 else ir
+            for t in unseen:
+                self._idf[t] = found.get(t)
         return {
             "n_docs": self.n_docs,
             "avgdl": self.avgdl,
             "avg_idf": self.avg_idf,
-            "idf": idf,
+            "idf": {t: self._idf[t] for t in q if self._idf.get(t) is not None},
         }
 
     def unpersist(self) -> None:
+        self._idf.clear()
         self.tokenized.unpersist()
         self._vocab.unpersist()
+
+
+def _sql_double(x: float) -> str:
+    """A double as an exact SQL literal: Spark parses the decimal back
+    with `Double.parseDouble`, which returns the double `repr` came
+    from."""
+    return f"({float(x)!r}D)".replace("e", "E")
+
+
+def _sql_string(s: str) -> str:
+    """A string as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def bm25_topk(
@@ -960,24 +987,28 @@ def bm25_topk(
             F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks")
         ).withColumn("_dl", F.size("toks").cast("double"))
 
-    def _tf(term: str):
-        # 1-arg lambda in a fresh scope: a default-arg closure would make
-        # PySpark treat it as the (element, index) 2-arg filter form
-        return F.size(F.filter("toks", lambda x: x == F.lit(term))).cast("double")
-
-    tf_cols = [_tf(t).alias(f"_tf{i}") for i, t in enumerate(terms)]
-    d = d.select("doc_id", "_dl", *tf_cols)
-    matched = sum((F.col(f"_tf{i}") for i in range(len(terms))), F.lit(0.0))
-    d = d.filter(matched > 0)
-    norm = k1 * (1 - b + b * F.col("_dl") / F.lit(avgdl))
-    score = sum(
-        (
-            F.lit(idf[t]) * F.col(f"_tf{i}") * (k1 + 1) / (F.col(f"_tf{i}") + norm)
-            for i, t in enumerate(terms)
-        ),
-        F.lit(0.0),
+    # The scoring expressions are SQL text: one parse on the JVM instead
+    # of ~200 py4j round trips per term through the Column API (a 1-4
+    # term leg builds in ~30 ms instead of ~80 on 4 vCPU). The scores
+    # are compared bit for bit (served vs cold rows, the oracle gates),
+    # so the text must keep this operation order and exact literals:
+    #   tf_i  = size(filter(toks, x -> x = term_i))
+    #   score = 0 + Σ idf_i·tf_i·(k1+1) / (tf_i + k1·(1 - b + b·_dl/avgdl))
+    zero = _sql_double(0.0)
+    d = d.selectExpr("doc_id", "_dl", *(
+        f"CAST(size(filter(toks, x -> x = {_sql_string(t)})) AS DOUBLE) AS _tf{i}"
+        for i, t in enumerate(terms)
+    ))
+    d = d.filter(" + ".join([zero, *(f"_tf{i}" for i in range(len(terms)))]) + f" > {zero}")
+    norm = (
+        f"((((_dl * {_sql_double(b)}) / {_sql_double(avgdl)}) + {_sql_double(1 - b)})"
+        f" * {_sql_double(k1)})"
     )
-    scored = d.select("doc_id", F.round(score, 6).alias("score"))
+    score = " + ".join([zero, *(
+        f"((({_sql_double(idf[t])} * _tf{i}) * {_sql_double(k1 + 1)}) / (_tf{i} + {norm}))"
+        for i, t in enumerate(terms)
+    )])
+    scored = d.selectExpr("doc_id", f"round({score}, 6) AS score")
     if min_score is not None:
         scored = scored.filter(F.col("score") > min_score)
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -14,6 +14,9 @@ the heavy lifting stays in the retrieval legs.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -71,6 +74,31 @@ def rrf_fuse(
     if round_to is not None:
         out = out.withColumn("rrf_score", F.round("rrf_score", round_to))
     return out.select(id_col, "rrf_score")
+
+
+def sql_round(x: float, digits: int = 6) -> float:
+    """`F.round(x, digits)` of a double, on the driver: Spark rounds
+    HALF_UP the decimal that `Double.toString(x)` spells, and `repr`
+    spells the same decimal for the RRF scores it meets (pinned over
+    every rank pair and max in tests/test_topk_fusion.py). Unlike
+    `nputil.round_half_up`, no float scaling step is involved."""
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits), ROUND_HALF_UP))
+
+
+def rrf_fuse_lists(ids_a: Sequence, ids_b: Sequence, alpha: float = 0.7) -> list[tuple]:
+    """`rrf_fuse` on the driver, over two legs given as id lists in
+    rank order (rank = position + 1) → [(id, rrf_score)] sorted by
+    score descending, then id ascending — the order and the float
+    values the DataFrame path ends in: the same IEEE operations in the
+    same order, max-normalized (0 when the max is 0), rounded like
+    `F.round` to 6 places."""
+    raw: dict = {}
+    for weight, ids in ((alpha, ids_a), (1.0 - alpha, ids_b)):
+        for rank, i in enumerate(ids, 1):
+            raw[i] = raw.get(i, 0.0) + weight / (RRF_K + rank)
+    top = max(raw.values(), default=0.0)
+    fused = [(i, sql_round(r / top) if top > 0 else 0.0) for i, r in raw.items()]
+    return sorted(fused, key=lambda t: (-t[1], t[0]))
 
 
 def rrf_multi(

@@ -18,7 +18,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from mcp_vector_search_spark.operators.nputil import round_half_up
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mcp_vector_search_spark.functions.vectors import dot, l2_norm, unit_expr
+from mcp_vector_search_spark.functions.vectors import dot
 
 
 def _normalized(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:

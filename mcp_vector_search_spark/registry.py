@@ -25,9 +25,7 @@ from pyspark.sql import functions as F
 
 from mcp_vector_search_spark import io
 from mcp_vector_search_spark.functions.text import (
-    distinct_token_ratio,
     doc_fingerprint,
-    punct_ratio,
     tokenize,
     word_ngrams,
 )
@@ -44,7 +42,6 @@ from mcp_vector_search_spark.operators.dedup import (
     jaccard_verify,
     minhash_candidates,
     neighbor_jaccard,
-    shingle_sets,
 )
 from mcp_vector_search_spark.operators.events import hourly_rollup, lag_delta, sessionize
 from mcp_vector_search_spark.operators.graph import bfs_min_hops, call_graph, instability

@@ -59,3 +59,23 @@ def test_postings_and_doc_stats(spark, docs):
     assert p.tf == 2
     dl = {r.doc_id: r.dl for r in doc_stats_from_postings(build_postings(docs)).collect()}
     assert dl[0] == 9.0 and 5 not in dl  # token-less docs have no postings
+
+
+def test_bm25_sql_literals_round_trip(spark):
+    """bm25_topk writes its scoring expressions as SQL text, so every
+    idf, avgdl and BM25 constant passes through a SQL double literal
+    and every term through a string literal: each must parse back to
+    exactly the Python value (exponent forms, negatives, subnormals,
+    quotes and backslashes included)."""
+    from mcp_vector_search_spark.operators.bm25 import _sql_double, _sql_string
+
+    doubles = [0.0, -0.0, 0.1 + 0.2, -0.2843965333530472, 1e-05, 2.5e20,
+               5e-324, 1.7976931348623157e308, 55.878, K1, 1 - B]
+    strings = ["data", "don't", "back\\slash", "'", "ünï"]
+    row = spark.range(1).selectExpr(
+        *(f"{_sql_double(x)} AS d{i}" for i, x in enumerate(doubles)),
+        *(f"{_sql_string(s)} AS s{i}" for i, s in enumerate(strings)),
+    ).first()
+    for i, x in enumerate(doubles):
+        assert row[f"d{i}"] == x and math.copysign(1, row[f"d{i}"]) == math.copysign(1, x)
+    assert [row[f"s{i}"] for i in range(len(strings))] == strings

@@ -362,9 +362,14 @@ def test_served_hybrid_edge_cases_match_cold_path(served, monkeypatch):
 
 
 def _node_names(plan) -> list[str]:
-    """Operator names of an executed plan tree, not descending into
-    the plans that built cached relations."""
+    """Operator names of an executed plan tree, through the adaptive
+    wrapper and its query stages, not descending into the plans that
+    built cached relations."""
     names = [plan.nodeName()]
+    if names[0] == "AdaptiveSparkPlan":
+        return names + _node_names(plan.executedPlan())
+    if names[0].endswith("QueryStage"):
+        return names + _node_names(plan.plan())
     children = plan.children()
     for i in range(children.size()):
         names += _node_names(children.apply(i))
@@ -372,35 +377,58 @@ def _node_names(plan) -> list[str]:
 
 
 def test_warm_served_call_is_two_jobs_without_python_or_broadcast(served, monkeypatch):
-    """A warm MCP search_hybrid call after start_serving runs exactly
-    two Spark jobs (BM25 stats lookup + the answer): the query is
-    embedded on the driver and scored as a literal, so its plan has no
-    Python-evaluation node and no broadcast exchange."""
-    from mcp_vector_search_spark import mcp_adapter
+    """A warm MCP search_hybrid call after start_serving whose terms
+    an earlier call already had runs exactly two Spark jobs that run
+    one stage each (the stages that built the caches they read are
+    skipped) and shuffle nothing: the BM25 leg and the vector leg,
+    each a TakeOrderedAndProject plan with no Python-evaluation node
+    and no broadcast exchange (the query is embedded on the driver and
+    scored as a literal; the term stats come from the memo; fusion and
+    the answer frame are local). A call with one unseen term adds
+    exactly one job, that term's stats lookup."""
+    from mcp_vector_search_spark.plans import hybrid
 
     sc = served.project.spark.sparkContext
     args = {"query": "data query fast", "limit": 5}
     assert served.call_tool("search_hybrid", args)["ok"]  # warm
-    answered = []
-    real_payload = mcp_adapter.df_payload
+    legs = []
+    for name in ("bm25_topk", "cosine_topk"):
+        def spy(*a, _real=getattr(hybrid, name), **kw):
+            legs.append(_real(*a, **kw))
+            return legs[-1]
 
-    def spy(df, max_rows=200):
-        answered.append(df)
-        return real_payload(df, max_rows)
+        monkeypatch.setattr(hybrid, name, spy)
 
-    monkeypatch.setattr(mcp_adapter, "df_payload", spy)
-    group = "warm-served-search-hybrid"
-    sc.setJobGroup(group, "one warm search_hybrid call")
-    try:
-        r = served.call_tool("search_hybrid", args)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert r["ok"], r
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    def jobs_of_call(group, call_args):
+        sc.setJobGroup(group, "one warm search_hybrid call")
+        try:
+            r = served.call_tool("search_hybrid", call_args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert r["ok"], r
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return sc.statusTracker().getJobIdsForGroup(group)
 
-    (df,) = answered
-    names = _node_names(df.limit(51)._jdf.queryExecution().executedPlan())
-    assert "InMemoryTableScan" in names
-    for banned in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "BroadcastExchange"):
-        assert banned not in names, names
+    jobs = jobs_of_call("warm-served-search-hybrid", args)
+    assert len(jobs) == 2
+    store = sc._jsc.sc().statusStore()
+    ran = []
+    for j in jobs:
+        for sid in sc.statusTracker().getJobInfo(j).stageIds:
+            stage = store.lastStageAttempt(sid)
+            assert stage.shuffleReadBytes() == 0 and stage.shuffleWriteBytes() == 0
+            if stage.status().toString() != "SKIPPED":
+                ran.append(sid)
+    assert len(ran) == 2
+
+    assert len(legs) == 2
+    for df in legs:
+        names = _node_names(df._jdf.queryExecution().executedPlan())
+        assert "TakeOrderedAndProject" in names
+        assert "InMemoryTableScan" in names
+        for banned in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+                       "BroadcastExchange", "Exchange"):
+            assert banned not in names, names
+
+    unseen = {"query": "data query fast quokkaqz", "limit": 5}
+    assert len(jobs_of_call("warm-served-unseen-term", unseen)) == 3

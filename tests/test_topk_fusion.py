@@ -288,10 +288,11 @@ def test_hybrid_batch_indexed_term_bucket_pruning(spark, tmp_path):
 
 def test_hybrid_server_matches_hybrid_search(spark):
     """HybridServer (warm single-query serving, VERDICT r5 #6) returns
-    exactly hybrid_search's rows — the same code path runs, fed the
-    cached tokenized corpus and memoized stats — and its serving-tuned
-    session confs are restored by close(). Bm25ServingStats.stats_for
-    matches bm25_oneshot_stats for the same terms."""
+    exactly hybrid_search's rows, in order — the legs run as two
+    collects fused on the driver — and leaves every session conf as it
+    was, also while serving. Bm25ServingStats.stats_for matches
+    bm25_oneshot_stats for the same terms, also when a repeated term
+    is answered from its memo."""
     from pyspark.sql import functions as F
 
     from mcp_vector_search_spark import io
@@ -306,7 +307,8 @@ def test_hybrid_server_matches_hybrid_search(spark):
     emb = io.table(spark, sf, "embeddings")
 
     stats = Bm25ServingStats(docs)
-    for terms in (["data", "query"], ["window", "merge", "zzzznotaterm"]):
+
+    def check(terms):
         a = stats.stats_for(terms)
         b = bm25_oneshot_stats(docs, terms)
         assert a["n_docs"] == b["n_docs"] and a["avgdl"] == b["avgdl"]
@@ -314,35 +316,160 @@ def test_hybrid_server_matches_hybrid_search(spark):
         assert set(a["idf"]) == set(b["idf"])
         for t in a["idf"]:
             assert abs(a["idf"][t] - b["idf"][t]) < 1e-12
+
+    for terms in (["data", "query"], ["window", "merge", "zzzznotaterm"],
+                  ["query", "zzzznotaterm", "window"]):
+        check(terms)
+    # a query that would grow the memo past its cap starts it over
+    stats.MEMO_MAX = 3
+    for terms in (["stream", "filter"], ["stream", "data"], ["window"]):
+        check(terms)
+    assert set(stats._idf) == {"window"}
     stats.unpersist()
 
-    aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
-    parts0 = spark.conf.get("spark.sql.shuffle.partitions")
+    confs = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = [spark.conf.get(c) for c in confs]
     with HybridServer(docs, emb) as srv:
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+        assert [spark.conf.get(c) for c in confs] == before
         for vid, terms in ((3, ["window", "merge"]), (7, ["stream", "filter"])):
             qv = emb.filter(F.col("vec_id") == vid).select(
                 F.col("embedding").alias("query_vec")
             )
-            served = {(r.doc_id, r.rrf_score) for r in srv.search(terms, qv).collect()}
-            plain = {
+            served = [(r.doc_id, r.rrf_score) for r in srv.search(terms, qv).collect()]
+            plain = [
                 (r.doc_id, r.rrf_score)
                 for r in hybrid_search(docs, emb, terms, qv).collect()
-            }
+            ]
             assert served == plain
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
-    assert spark.conf.get("spark.sql.shuffle.partitions") == parts0
+            assert [spark.conf.get(c) for c in confs] == before
+    assert [spark.conf.get(c) for c in confs] == before
+
+
+def _edge_corpus(spark, id_type: str):
+    """12 short docs and 3-d vectors with score ties in both legs; ids
+    are longs or zero-padded strings of the same numbers."""
+    words = ["alpha", "beta", "gamma", "delta"]
+    ids = list(range(12))
+    if id_type == "string":
+        ids = [f"d{i:02d}" for i in ids]
+    docs = spark.createDataFrame(
+        [(d, " ".join(words[j] for j in range(4) if (i >> j) & 1) or "omega")
+         for i, d in enumerate(ids)],
+        f"doc_id {id_type}, text string",
+    )
+    vecs = spark.createDataFrame(
+        [(d, [float(i % 3), float(i % 2), 1.0]) for i, d in enumerate(ids)],
+        f"vec_id {id_type}, embedding array<double>",
+    )
+    return docs, vecs
+
+
+def test_hybrid_server_edge_cases_match_hybrid_search(spark):
+    """Served rows equal cold `hybrid_search` rows, in order, at the
+    edges: empty terms, only absent terms, a zero query vector, k
+    above the corpus size, alpha 0 and 1, and string ids — the served
+    frame keeps the id type."""
+    from mcp_vector_search_spark.plans.hybrid import (
+        HybridServer,
+        hybrid_search,
+        query_frame,
+    )
+
+    cases = [
+        ([], [1.0, 0.0, 1.0], 5, 0.7),
+        (["zzz", "yyy"], [1.0, 0.0, 1.0], 5, 0.7),
+        (["alpha", "gamma"], [0.0, 0.0, 0.0], 5, 0.7),
+        (["beta"], [2.0, 1.0, 1.0], 40, 0.7),
+        (["alpha", "delta"], [1.0, 1.0, 1.0], 6, 0.0),
+        (["alpha", "delta"], [1.0, 1.0, 1.0], 6, 1.0),
+        (["zzz"], [1.0, 1.0, 1.0], 6, 1.0),
+    ]
+    for id_type in ("long", "string"):
+        docs, vecs = _edge_corpus(spark, id_type)
+        with HybridServer(docs, vecs) as srv:
+            for terms, q, k, alpha in cases:
+                out = srv.search(terms, q, k=k, alpha=alpha)
+                assert out.schema.simpleString() == (
+                    f"struct<doc_id:{'bigint' if id_type == 'long' else id_type},"
+                    "rrf_score:double>"
+                )
+                served = [tuple(r) for r in out.collect()]
+                cold = [tuple(r) for r in hybrid_search(
+                    docs, vecs, terms, query_frame(spark, q), k=k, alpha=alpha
+                ).collect()]
+                assert served == cold, (id_type, terms, q, k, alpha)
+                assert len(served) == min(k, 12)
+
+
+def test_driver_rrf_rounding_matches_f_round(spark):
+    """`sql_round`, the driver fusion's 6-dp rounding, equals F.round
+    on every max-normalized RRF score a 20-row-per-leg fusion can
+    produce: each (rank_a, rank_b) ∈ {1..20, missing}² divided by each
+    possible max, for alpha 0.3, 0.5 and 0.7. Spark computes the grid
+    with rrf_fuse's expressions in one job; the driver recomputes the
+    same floats and must round each one to F.round's value. The JDK's
+    Double.toString, which F.round's decimal comes from, is not always
+    the shortest repr before JDK 19, so only this grid shows that
+    `repr` spells the same decimal here."""
+    from mcp_vector_search_spark.operators.fusion import RRF_K, sql_round
+
+    alphas = (0.3, 0.5, 0.7)
+    n = 21  # index 20 = missing from that leg
+
+    def rank(i):
+        return F.when(i < 20, i + 1)
+
+    def raw(alpha, ra, rb):
+        return F.coalesce(F.lit(alpha) / (F.lit(RRF_K) + ra), F.lit(0.0)) + F.coalesce(
+            (F.lit(1.0) - alpha) / (F.lit(RRF_K) + rb), F.lit(0.0)
+        )
+
+    i = F.col("id")
+    alpha = F.element_at(F.array(*map(F.lit, alphas)), (i / n**4).cast("int") + 1)
+    r_raw = raw(alpha, rank(i % n), rank((i / n).cast("long") % n))
+    m_raw = raw(alpha, rank((i / n**2).cast("long") % n), rank((i / n**3).cast("long") % n))
+    grid = (
+        spark.range(len(alphas) * n**4, numPartitions=4)
+        .select(r_raw.alias("r"), m_raw.alias("m"))
+        .filter((F.col("m") > 0) & (F.col("r") <= F.col("m")))
+        .select((F.col("r") / F.col("m")).alias("x"))
+        .select("x", F.round("x", 6).alias("rounded"))
+        .toArrow()
+    )
+
+    def py_raw(a, ra, rb):
+        return (a / (RRF_K + ra + 1) if ra < 20 else 0.0) + (
+            (1.0 - a) / (RRF_K + rb + 1) if rb < 20 else 0.0
+        )
+
+    want_x = []
+    for a in alphas:
+        raws = [py_raw(a, ra, rb) for rb in range(n) for ra in range(n)]
+        want_x += [r / m for m in raws for r in raws if m > 0 and r <= m]
+    got_x = grid.column("x").to_pylist()
+    assert got_x == want_x
+    bad = [
+        (x, got, sql_round(x))
+        for x, got in zip(got_x, grid.column("rounded").to_pylist())
+        if sql_round(x) != got
+    ]
+    assert not bad, bad[:10]
 
 
 def test_hybrid_server_refuses_search_after_close(spark):
-    """A closed HybridServer has released its caches and restored the
-    session confs: `search` raises a ValueError naming the closed
+    """A closed HybridServer has released its caches and stopped its
+    worker thread: `search` raises a ValueError naming the closed
     server instead of running on unpersisted frames, and a second
-    `close()` is a no-op."""
+    `close()` is a no-op. No session conf changes at any point."""
+    import threading
+
     import pytest
 
     from mcp_vector_search_spark import io
     from mcp_vector_search_spark.plans.hybrid import HybridServer
+
+    def leg_threads():
+        return [t for t in threading.enumerate() if t.name.startswith("hybrid-server-leg")]
 
     docs = io.table(spark, SF_DIR, "documents")
     emb = io.table(spark, SF_DIR, "embeddings")
@@ -350,11 +477,14 @@ def test_hybrid_server_refuses_search_after_close(spark):
     srv = HybridServer(docs, emb)
     qv = list(emb.first()["embedding"])
     assert srv.search(["data"], qv, k=3).count() == 3
+    assert leg_threads()
     srv.close()
+    assert not leg_threads()
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
     with pytest.raises(ValueError, match="HybridServer is closed"):
         srv.search(["data"], qv, k=3)
     srv.close()
+    assert not leg_threads()
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
 
 
