@@ -943,11 +943,12 @@ class SparkProject:
         floats or as a 1-row (query_vec) DataFrame.
 
         After `start_serving()`, queries route through the warm
-        `HybridServer`: cached tokenized corpus, cached unit vectors
-        and memoized term stats; a frame is read once with `.first()`
-        and the vector scored as a literal. The two legs run as two
-        concurrent single-stage Spark jobs and are fused on the
-        driver, with identical results; the returned frame is local."""
+        `HybridServer`: pinned tokenized corpus, pinned unit vectors
+        and term stats loaded at start; a frame is read once with
+        `.first()` and the vector scored as a literal. The two legs
+        run as two concurrent single-stage Spark jobs and are fused on
+        the driver, with identical results; the returned frame is
+        local."""
         from mcp_vector_search_spark.functions.query import preprocess_query
         from mcp_vector_search_spark.plans.hybrid import hybrid_search, query_frame
 
@@ -967,12 +968,14 @@ class SparkProject:
 
     def start_serving(self) -> None:
         """Enter warm single-query serving mode (r6, VERDICT r5 #6):
-        builds the `HybridServer` state once — cached tokenized corpus,
-        cached unit-normalized vectors, memoized BM25 corpus scalars
-        and term stats, one worker thread. Each later `search_hybrid`
-        call runs its two legs as two concurrent single-stage Spark
-        jobs (plus one tiny lookup job when a query term is new),
-        fuses them on the driver, and returns the cold path's rows. No
+        builds the `HybridServer` state once — tokenized corpus and
+        unit-normalized vectors pinned over local checkpoints, BM25
+        corpus scalars and the idf of the highest-df vocabulary terms,
+        one worker thread. Each later `search_hybrid` call runs its two
+        legs as two concurrent single-stage Spark jobs, fuses them on
+        the driver, and returns the cold path's rows; only a
+        vocabulary too large to load whole adds one tiny lookup job
+        the first time a term outside the loaded part appears. No
         session conf is changed."""
         if self._hybrid_server is None:
             from mcp_vector_search_spark.plans.hybrid import HybridServer
@@ -980,7 +983,8 @@ class SparkProject:
             self._hybrid_server = HybridServer(self.docs, self.vectors)
 
     def stop_serving(self) -> None:
-        """Leave serving mode: stop the worker thread, release caches."""
+        """Leave serving mode: stop the worker thread, release every
+        cache and checkpoint serving pinned."""
         if self._hybrid_server is not None:
             self._hybrid_server.close()
             self._hybrid_server = None

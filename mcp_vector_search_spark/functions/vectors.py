@@ -29,6 +29,17 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def dot_sql(a: str, b: str) -> str:
+    """`dot` as SQL text over two array expressions written in SQL:
+    the same expression tree (float64 products summed in array order
+    from 0.0), so the same bits, built with one parse instead of a
+    py4j call per Column operation."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+        " 0.0D, (acc, v) -> acc + v)"
+    )
+
+
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 

@@ -133,6 +133,30 @@ def spread_if_raw(df: DataFrame, min_partitions: int | None = None) -> DataFrame
     return spread(df, min_partitions)
 
 
+def pin(df: DataFrame) -> DataFrame:
+    """`df` computed once and cached over a local checkpoint, for state
+    that many later queries read. The cached plan is `InMemoryRelation
+    ← Scan ExistingRDD`: the lineage's exchanges (a `spread`
+    repartition, say) are cut off, so a query that needs no exchange
+    of its own is planned without an `AdaptiveSparkPlan` wrapper and
+    its `TableCacheQueryStage`. Pins two copies; `unpin` releases
+    both."""
+    out = df.localCheckpoint(eager=True).cache()
+    try:
+        out.count()
+    except BaseException:
+        unpin(out)
+        raise
+    return out
+
+
+def unpin(df: DataFrame) -> None:
+    """Release what `pin` holds: the cache and the checkpoint blocks
+    under it."""
+    df.unpersist()
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def delete_path(spark: SparkSession, path: str) -> bool:
     """Recursively delete `path` through the Hadoop FileSystem API —
     storage-agnostic (HDFS/S3A/local), unlike shutil/os which silently

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mcp_vector_search_spark.functions.literals import sql_array, sql_double, sql_string
 from mcp_vector_search_spark.functions.text import tokenize
 
 K1 = 1.5
@@ -795,22 +796,24 @@ def bm25_oneshot_stats(
 
 class Bm25ServingStats:
     """Warm-serving statistics state (VERDICT r5 #6): the vocabulary
-    table and corpus scalars of `bm25_oneshot_stats`, built ONCE and
-    kept in the session cache, so each subsequent query's stats cost
-    is one filtered lookup of ≤|terms| rows in the cached vocab
-    instead of a fresh corpus scan + two aggregates (~0.7-1.3 s of
-    the measured 2.1-2.4 s warm-hybrid floor at sf0.1).
+    table and corpus scalars of `bm25_oneshot_stats`, built ONCE, so no
+    query pays a corpus scan and two aggregates for its stats.
 
     `stats_for(terms)` returns the same dict shape (and the same
     values — pinned in tests) as `bm25_oneshot_stats(docs, terms)`.
-    Each term's idf, or its absence from the corpus, is memoized, so
-    a query runs the lookup job only for terms no earlier query had:
-    a session's queries draw on a small working vocabulary, and a
-    repeated term costs no job. The memo starts over when a query
-    would grow it past `MEMO_MAX` terms, and `unpersist` clears it.
-    Also exposes `tokenized`: the cached (id, toks, _dl) frame the
-    serving scoring scan reuses instead of re-tokenizing the corpus
-    per query."""
+    Construction loads the idf of the `MEMO_MAX` highest-df vocabulary
+    terms. When the whole vocabulary fits, that is every term the
+    corpus has, a term outside it is known absent, and `stats_for`
+    never runs a job. Otherwise the vocabulary stays cached, a term
+    outside the preload is looked up once in one tiny job over it,
+    and the lookup memo (not the preload) starts over when a query
+    would grow it past `MEMO_MAX` terms.
+
+    Also exposes `tokenized`: the (doc_id, toks, _dl) frame, pinned
+    over a local checkpoint (`io.pin`), that the serving scoring scan
+    reuses instead of re-tokenizing the corpus per query. `unpersist`
+    releases every cache this holds; a constructor that raises
+    releases what it had pinned."""
 
     SENTINEL = "#doc#"
     MEMO_MAX = 65_536
@@ -822,13 +825,23 @@ class Bm25ServingStats:
         text_col: str = "text",
         epsilon: float = EPSILON,
     ):
+        from mcp_vector_search_spark.io import pin
+
         self._epsilon = epsilon
-        self._idf: dict[str, float | None] = {}  # term → idf; None = absent
-        self.tokenized = (
+        self._idf: dict[str, float] = {}  # preloaded term → idf
+        self._looked: dict[str, float | None] = {}  # looked up; None = absent
+        self._vocab: DataFrame | None = None  # cached only while incomplete
+        self.tokenized = pin(
             docs.select(F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks"))
             .withColumn("_dl", F.size("toks").cast("double"))
-            .cache()
         )
+        try:
+            self._load()
+        except BaseException:
+            self.unpersist()
+            raise
+
+    def _load(self) -> None:
         self._vocab = (
             self.tokenized.filter(F.size("toks") > 0)
             .select(
@@ -844,62 +857,73 @@ class Bm25ServingStats:
         doc_row = self._vocab.filter(F.col("term") == self.SENTINEL).first()
         if doc_row is None:
             self.n_docs, self.avgdl, self.avg_idf = 0.0, 0.0, 0.0
+            self._release_vocab()
             return
         self.n_docs = float(doc_row["df"])
         self.avgdl = float(doc_row["avgdl"] or 0.0)
+        terms = self._vocab.filter(F.col("term") != self.SENTINEL)
         idf_raw = F.log(
             (F.lit(self.n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
         )
-        self.avg_idf = float(
-            self._vocab.filter(F.col("term") != self.SENTINEL)
-            .agg(F.avg(idf_raw))
-            .first()[0]
-            or 0.0
+        self.avg_idf = float(terms.agg(F.avg(idf_raw)).first()[0] or 0.0)
+        top = (
+            terms.select("term", "df")
+            .orderBy(F.desc("df"), F.asc("term"))
+            .limit(self.MEMO_MAX + 1)
+            .collect()
         )
+        self._idf = {r.term: self._idf_of(r.df) for r in top[: self.MEMO_MAX]}
+        if len(top) <= self.MEMO_MAX:
+            self._release_vocab()
 
-    def stats_for(self, query_terms: list[str]) -> dict:
-        """The `bm25_oneshot_stats` dict for `query_terms`; terms not
-        in the memo are looked up in one tiny job over the cached
-        vocab."""
+    def _idf_of(self, df: float) -> float:
         import math
 
+        ir = math.log((self.n_docs - df + 0.5) / (df + 0.5))
+        return self._epsilon * self.avg_idf if ir < 0 else ir
+
+    def _release_vocab(self) -> None:
+        if self._vocab is not None:
+            self._vocab.unpersist()
+            self._vocab = None
+
+    def stats_for(self, query_terms: list[str]) -> dict:
+        """The `bm25_oneshot_stats` dict for `query_terms`. Only when
+        the vocabulary did not fit the preload do terms outside it and
+        the lookup memo run one tiny job over the cached vocab."""
         q = list(dict.fromkeys(query_terms))
-        unseen = [t for t in q if t not in self._idf]
-        if unseen and self.n_docs:
-            if len(self._idf) + len(unseen) > self.MEMO_MAX:
-                self._idf.clear()
-                unseen = q
-            found = {}
-            for r in self._vocab.filter(F.col("term").isin(unseen)).collect():
-                if r.term == self.SENTINEL:
-                    continue
-                ir = math.log((self.n_docs - r.df + 0.5) / (r.df + 0.5))
-                found[r.term] = self._epsilon * self.avg_idf if ir < 0 else ir
+        outside = [t for t in q if t not in self._idf]
+        unseen = [t for t in outside if t not in self._looked]
+        if unseen and self._vocab is not None:
+            if len(self._looked) + len(unseen) > self.MEMO_MAX:
+                self._looked.clear()
+                unseen = outside
+            found = {
+                r.term: self._idf_of(r.df)
+                for r in self._vocab.filter(F.col("term").isin(unseen)).collect()
+                if r.term != self.SENTINEL
+            }
             for t in unseen:
-                self._idf[t] = found.get(t)
+                self._looked[t] = found.get(t)
+        idf = {}
+        for t in q:
+            v = self._idf[t] if t in self._idf else self._looked.get(t)
+            if v is not None:
+                idf[t] = v
         return {
             "n_docs": self.n_docs,
             "avgdl": self.avgdl,
             "avg_idf": self.avg_idf,
-            "idf": {t: self._idf[t] for t in q if self._idf.get(t) is not None},
+            "idf": idf,
         }
 
     def unpersist(self) -> None:
+        from mcp_vector_search_spark.io import unpin
+
         self._idf.clear()
-        self.tokenized.unpersist()
-        self._vocab.unpersist()
-
-
-def _sql_double(x: float) -> str:
-    """A double as an exact SQL literal: Spark parses the decimal back
-    with `Double.parseDouble`, which returns the double `repr` came
-    from."""
-    return f"({float(x)!r}D)".replace("e", "E")
-
-
-def _sql_string(s: str) -> str:
-    """A string as a SQL string literal."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        self._looked.clear()
+        self._release_vocab()
+        unpin(self.tokenized)
 
 
 def bm25_topk(
@@ -909,7 +933,6 @@ def bm25_topk(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_score: float | None = None,
-    cache_index: bool = False,
     stats: dict | None = None,
     k1: float = K1,
     b: float = B,
@@ -921,40 +944,23 @@ def bm25_topk(
     ``bm25_backend.py:187`` keeps only score > 0); default keeps every
     doc matching ≥1 query term, BM25Okapi-style.
 
-    Default (one-shot) path — the reference's O(df(q)) query-cost
-    property (``bm25_backend.py:147-200``) without building an index:
-    corpus scalars and the query terms' idf come from ONE stats scan
-    (`bm25_oneshot_stats`), then the scoring query is pure
-    per-row arithmetic — tf(term) = size(filter(toks, = term)), score
-    = Σ idf·tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl)) — under a single
-    TakeOrderedAndProject. ZERO shuffles, ONE corpus scan in the
-    scoring job, and the query-term restriction never materializes a
-    full postings table. (Round 3 cached the complete postings build
-    here; the cache fill shuffled every term of the corpus before the
-    query filter could prune — 10.7 s vs 4.7 s at sf0.1. Fixed per
-    VERDICT r3 #1.)
-
-    `cache_index=True` keeps the round-3 behavior — materialize the
-    full postings/doc-stats/idf frames in the session cache — which is
-    the right trade when MANY different queries will hit the same docs
-    frame in-session (the warm-serving shape; `SparkProject._bm25`
-    memoizes the same build). For a standing corpus the persisted K3
-    index (`write_bm25_index` / `bm25_topk_indexed`) replaces both.
+    The reference's O(df(q)) query-cost property
+    (``bm25_backend.py:147-200``) without building an index: corpus
+    scalars and the query terms' idf come from ONE stats scan
+    (`bm25_oneshot_stats`), then the scoring query is pure per-row
+    arithmetic — docs sharing a term with the query, tf(term) =
+    size(filter(toks, = term)), score = Σ idf·tf·(k1+1)/(tf +
+    k1·(1-b+b·dl/avgdl)) — under a single TakeOrderedAndProject.
+    ZERO shuffles, ONE corpus scan in the scoring job, and the
+    query-term restriction never materializes a full postings table.
+    For a standing corpus the persisted K3 index (`write_bm25_index` /
+    `bm25_topk_indexed`) serves the same scores.
 
     `tokenized` (r6 warm serving, VERDICT r5 #6): the cached
     (doc_id, toks, _dl) frame from `Bm25ServingStats.tokenized` —
     the one-shot scoring scan reads it instead of re-tokenizing
     `docs`, identical results by construction (same tokenize expr).
     """
-    if cache_index:
-        postings = build_postings(docs, id_col, text_col).cache()
-        dstats = doc_stats_from_postings(postings).cache()
-        term_stats = build_term_stats(postings, dstats).cache()
-        scored = bm25_scores(postings, dstats, query_terms, term_stats=term_stats)
-        if min_score is not None:
-            scored = scored.filter(F.col("score") > min_score)
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
     q = list(dict.fromkeys(query_terms))
     if stats is None:
         if tokenized is None:
@@ -980,10 +986,8 @@ def bm25_topk(
             .limit(0)
         )
 
-    if tokenized is not None:
-        d = tokenized.select("doc_id", "toks", "_dl")
-    else:
-        d = docs.select(
+    if tokenized is None:
+        tokenized = docs.select(
             F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks")
         ).withColumn("_dl", F.size("toks").cast("double"))
 
@@ -994,20 +998,31 @@ def bm25_topk(
     # so the text must keep this operation order and exact literals:
     #   tf_i  = size(filter(toks, x -> x = term_i))
     #   score = 0 + Σ idf_i·tf_i·(k1+1) / (tf_i + k1·(1 - b + b·_dl/avgdl))
-    zero = _sql_double(0.0)
-    d = d.selectExpr("doc_id", "_dl", *(
-        f"CAST(size(filter(toks, x -> x = {_sql_string(t)})) AS DOUBLE) AS _tf{i}"
+    # A doc scores iff it shares a term with the query, which is Σ tf_i
+    # > 0; as `arrays_overlap` the filter reads `toks` alone, so tf is
+    # computed once, and only for the docs that pass it. The sum runs
+    # in `aggregate` over the idf array literal: the same additions in
+    # the same order, but every per-query double stays inside a lambda
+    # or an array literal, which codegen passes by reference rather
+    # than inlining, so the generated code is the same for every query
+    # with as many terms and is compiled once (inlined idf literals
+    # cost a ~25 ms compile per call on 4 vCPU).
+    d = tokenized.filter(
+        f"arrays_overlap(toks, {sql_array(sql_string(t) for t in terms)})"
+    ).selectExpr("doc_id", "_dl", *(
+        f"CAST(size(filter(toks, x -> x = {sql_string(t)})) AS DOUBLE) AS _tf{i}"
         for i, t in enumerate(terms)
     ))
-    d = d.filter(" + ".join([zero, *(f"_tf{i}" for i in range(len(terms)))]) + f" > {zero}")
     norm = (
-        f"((((_dl * {_sql_double(b)}) / {_sql_double(avgdl)}) + {_sql_double(1 - b)})"
-        f" * {_sql_double(k1)})"
+        f"((((_dl * {sql_double(b)}) / {sql_double(avgdl)}) + {sql_double(1 - b)})"
+        f" * {sql_double(k1)})"
     )
-    score = " + ".join([zero, *(
-        f"((({_sql_double(idf[t])} * _tf{i}) * {_sql_double(k1 + 1)}) / (_tf{i} + {norm}))"
-        for i, t in enumerate(terms)
-    )])
+    score = (
+        f"aggregate(zip_with({sql_array(sql_double(idf[t]) for t in terms)}, "
+        f"array({', '.join(f'_tf{i}' for i in range(len(terms)))}), "
+        f"(w, tf) -> ((w * tf) * {sql_double(k1 + 1)}) / (tf + {norm})), "
+        f"{sql_double(0.0)}, (acc, v) -> acc + v)"
+    )
     scored = d.selectExpr("doc_id", f"round({score}, 6) AS score")
     if min_score is not None:
         scored = scored.filter(F.col("score") > min_score)

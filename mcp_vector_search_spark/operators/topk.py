@@ -15,11 +15,11 @@ Three physical strategies, same logical semantics:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mcp_vector_search_spark.functions.vectors import dot
+from mcp_vector_search_spark.functions.vectors import dot, dot_sql
 
 
 def _normalized(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
@@ -51,14 +51,14 @@ def knn_brute_force(
     v = _normalized(vectors, vec_col, "_u")
     q = _normalized(query, query_vec_col, "_uq")
     return cosine_topk(
-        v.join(F.broadcast(q)), F.col("_uq"), k, id_col, round_to,
+        v.join(F.broadcast(q)), "_uq", k, id_col, round_to,
         drop=(query_vec_col, vec_col, "_uq"),
     )
 
 
 def cosine_topk(
     units: DataFrame,
-    query_unit: Column,
+    query_unit: str,
     k: int,
     id_col: str = "vec_id",
     round_to: int | None = 6,
@@ -66,15 +66,17 @@ def cosine_topk(
 ) -> DataFrame:
     """The one exact single-query cosine tail: score `dot(_u,
     query_unit)` → round → order (ties → lower `id_col`) → limit k.
-    `units` carries the unit-vector column `_u`; `query_unit` is the
-    joined query's unit column (`knn_brute_force`) or a literal of a
-    vector normalized on the driver (`HybridServer`). `_u` and `drop`
-    are dropped from the output, which adds `cos_sim`."""
-    sim = dot(F.col("_u"), query_unit)
+    `units` carries the unit-vector column `_u`; `query_unit` is SQL
+    text: the joined query's unit column `_uq` (`knn_brute_force`) or
+    an `array(...)` literal of a vector normalized on the driver
+    (`HybridServer`). The score is one SQL expression, so a 64-dim
+    literal costs one parse rather than a py4j call per element. `_u`
+    and `drop` are dropped from the output, which adds `cos_sim`."""
+    sim = dot_sql("_u", query_unit)
     if round_to is not None:
-        sim = F.round(sim, round_to)
+        sim = f"round({sim}, {int(round_to)})"
     return (
-        units.withColumn("cos_sim", sim)
+        units.withColumn("cos_sim", F.expr(sim))
         .drop("_u", *drop)
         .orderBy(F.desc("cos_sim"), F.asc(id_col))
         .limit(k)

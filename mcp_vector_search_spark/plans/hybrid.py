@@ -531,17 +531,19 @@ class HybridServer:
     broadcast, and no session conf to tune. The per-query work that
     does not depend on the query lives here, built once:
 
-    1. stats state: `Bm25ServingStats` — cached vocab, corpus scalars
-       and a per-term idf memo; a query whose terms were all seen
-       before runs no stats job, an unseen term one tiny lookup job;
-    2. shared scans: the BM25 leg reads the cached tokenized corpus
-       (no per-query re-tokenize); the vector leg reads the cached
-       UNIT vectors (vec_id, _u), normalized once here instead of per
-       call on the driver and on every executor;
+    1. stats state: `Bm25ServingStats` — corpus scalars and the idf of
+       the highest-df vocabulary terms, loaded at construction; when
+       the whole vocabulary fits, a call runs no stats job at all,
+       otherwise a term outside it costs one tiny lookup job, once;
+    2. shared scans: the BM25 leg reads the tokenized corpus and the
+       vector leg the UNIT vectors (vec_id, _u), normalized once here
+       instead of per call. Both are pinned over a local checkpoint
+       (`io.pin`), so no leg plan inherits an exchange from the input
+       frames' lineage and none is wrapped in an `AdaptiveSparkPlan`;
     3. the query as a literal: `search` unit-normalizes the query
        vector on the driver (`unit_vector`, bit-identical to the
-       column path) and scores `dot(_u, lit(uq))` through the same
-       `cosine_topk` tail `knn_brute_force` uses.
+       column path) and scores `dot(_u, array(<literals>))` through
+       the same `cosine_topk` tail `knn_brute_force` uses.
 
     The worker thread runs the vector leg wrapped by
     `inheritable_thread_target`, so the caller's job group, job
@@ -550,8 +552,9 @@ class HybridServer:
     `F.round`'s rounding, so the rows are identical to
     `hybrid_search(...)` (pinned in tests/test_topk_fusion.py). The
     answer is a local DataFrame built from an Arrow table: reading it
-    runs no job. `close()` stops the worker thread and releases the
-    caches; a closed server refuses `search`. For query SETS use
+    runs no job. `close()` stops the worker thread and releases every
+    cache and checkpoint, as does a constructor that raises; a closed
+    server refuses `search`. For query SETS use
     `hybrid_search_batch`/`_indexed`.
     """
 
@@ -569,22 +572,25 @@ class HybridServer:
         from pyspark.sql.types import DoubleType, StructField, StructType
 
         from mcp_vector_search_spark.functions.vectors import normalized
+        from mcp_vector_search_spark.io import pin, unpin
         from mcp_vector_search_spark.operators.bm25 import Bm25ServingStats
 
         self._docs = docs
-        self._units = (
+        self._cols = (id_col, text_col, vec_id_col)
+        self._spark = docs.sparkSession
+        self._units = pin(
             normalized(vectors.select(vec_id_col, vec_col), vec_col, "_u")
             .select(vec_id_col, "_u")
-            .cache()
         )
-        self._units.count()
-        self._cols = (id_col, text_col, vec_id_col)
+        try:
+            self._stats = Bm25ServingStats(docs, id_col=id_col, text_col=text_col)
+        except BaseException:
+            unpin(self._units)
+            raise
         self._schema = StructType([
             StructField("doc_id", self._units.schema[vec_id_col].dataType),
             StructField("rrf_score", DoubleType()),
         ])
-        self._stats = Bm25ServingStats(docs, id_col=id_col, text_col=text_col)
-        self._spark = docs.sparkSession
         self._pool = ThreadPoolExecutor(1, thread_name_prefix="hybrid-server-leg")
         self._closed = False
 
@@ -599,22 +605,20 @@ class HybridServer:
         """Top-k fused (doc_id, rrf_score). `query` is the query vector
         as a sequence of floats, or a 1-row (query_vec) DataFrame,
         which is read once with `.first()`."""
-        import numpy as np
         import pyarrow as pa
         from pyspark.util import inheritable_thread_target
 
+        from mcp_vector_search_spark.functions.literals import sql_array, sql_double
         from mcp_vector_search_spark.functions.vectors import unit_vector
 
         if self._closed:
             raise ValueError("HybridServer is closed: its caches are released")
         id_col, text_col, vec_id_col = self._cols
         n_leg = k * over_retrieve
-        # a float64 ndarray crosses py4j as ONE double[] literal; a list
-        # would build one Column per element (~20 ms a call at 64 dims)
-        uq = np.asarray(unit_vector(query_values(query)), dtype="float64")
+        uq = sql_array(map(sql_double, unit_vector(query_values(query))))
 
         def vec_leg() -> list:
-            return cosine_topk(self._units, F.lit(uq), n_leg, vec_id_col).collect()
+            return cosine_topk(self._units, uq, n_leg, vec_id_col).collect()
 
         vec_rows = self._pool.submit(inheritable_thread_target(self._spark)(vec_leg))
         bm_rows = bm25_topk(
@@ -636,14 +640,16 @@ class HybridServer:
         return self._spark.createDataFrame(table, self._schema)
 
     def close(self) -> None:
-        """Stop the worker thread and release the caches; a second
-        call does nothing."""
+        """Stop the worker thread and release every cache and
+        checkpoint; a second call does nothing."""
+        from mcp_vector_search_spark.io import unpin
+
         if self._closed:
             return
         self._closed = True
         self._pool.shutdown(wait=True)
         self._stats.unpersist()
-        self._units.unpersist()
+        unpin(self._units)
 
     def __enter__(self):
         return self

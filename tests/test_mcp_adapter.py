@@ -377,15 +377,15 @@ def _node_names(plan) -> list[str]:
 
 
 def test_warm_served_call_is_two_jobs_without_python_or_broadcast(served, monkeypatch):
-    """A warm MCP search_hybrid call after start_serving whose terms
-    an earlier call already had runs exactly two Spark jobs that run
-    one stage each (the stages that built the caches they read are
-    skipped) and shuffle nothing: the BM25 leg and the vector leg,
-    each a TakeOrderedAndProject plan with no Python-evaluation node
-    and no broadcast exchange (the query is embedded on the driver and
-    scored as a literal; the term stats come from the memo; fusion and
-    the answer frame are local). A call with one unseen term adds
-    exactly one job, that term's stats lookup."""
+    """A warm MCP search_hybrid call after start_serving runs exactly
+    two Spark jobs that run one stage each (the stages that built the
+    caches they read are skipped) and shuffle nothing: the BM25 leg
+    and the vector leg, each a TakeOrderedAndProject plan over a
+    pinned cache with no adaptive wrapper, no Python-evaluation node
+    and no exchange (the query is embedded on the driver and scored as
+    a literal; the term stats were loaded at start_serving; fusion and
+    the answer frame are local). A term the corpus lacks adds no job:
+    the whole vocabulary was loaded, so it is known absent."""
     from mcp_vector_search_spark.plans import hybrid
 
     sc = served.project.spark.sparkContext
@@ -426,9 +426,9 @@ def test_warm_served_call_is_two_jobs_without_python_or_broadcast(served, monkey
         names = _node_names(df._jdf.queryExecution().executedPlan())
         assert "TakeOrderedAndProject" in names
         assert "InMemoryTableScan" in names
-        for banned in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
-                       "BroadcastExchange", "Exchange"):
+        for banned in ("AdaptiveSparkPlan", "MapInPandas", "ArrowEvalPython",
+                       "BatchEvalPython", "BroadcastExchange", "Exchange"):
             assert banned not in names, names
 
     unseen = {"query": "data query fast quokkaqz", "limit": 5}
-    assert len(jobs_of_call("warm-served-unseen-term", unseen)) == 3
+    assert len(jobs_of_call("warm-served-unseen-term", unseen)) == 2

@@ -164,23 +164,3 @@ def test_bm25_oneshot_zero_shuffle_single_scan(spark):
     scans = re.findall(r"^\(\d+\) Scan (?:parquet|ExistingRDD)", plan, re.M)
     assert len(scans) == 1, plan
 
-
-def test_bm25_cached_index_single_tokenize_pass(spark):
-    """The warm-serving variant (cache_index=True) must reference ONE
-    cached postings build, not re-tokenize the corpus in three
-    branches. The cached InMemoryRelation carries the tokenize; every
-    other branch reads the InMemoryTableScan."""
-    from mcp_vector_search_spark.operators.bm25 import bm25_topk
-
-    docs = io.table(spark, SF_DIR, "documents")
-    import re
-
-    def distinct_parquet_scans(df) -> set[str]:
-        return set(re.findall(r"^\((\d+)\) Scan parquet", _plan(df), re.M))
-
-    df = bm25_topk(docs, ["data", "fast"], 10, cache_index=True)
-    df.limit(1).count()  # materialize the caches
-    plan = _plan(df)
-    assert "InMemoryTableScan" in plan
-    # exactly ONE distinct corpus scan: the cached postings build.
-    assert len(distinct_parquet_scans(df)) == 1, plan

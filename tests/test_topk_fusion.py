@@ -291,8 +291,7 @@ def test_hybrid_server_matches_hybrid_search(spark):
     exactly hybrid_search's rows, in order — the legs run as two
     collects fused on the driver — and leaves every session conf as it
     was, also while serving. Bm25ServingStats.stats_for matches
-    bm25_oneshot_stats for the same terms, also when a repeated term
-    is answered from its memo."""
+    bm25_oneshot_stats for the same terms, absent ones included."""
     from pyspark.sql import functions as F
 
     from mcp_vector_search_spark import io
@@ -320,11 +319,6 @@ def test_hybrid_server_matches_hybrid_search(spark):
     for terms in (["data", "query"], ["window", "merge", "zzzznotaterm"],
                   ["query", "zzzznotaterm", "window"]):
         check(terms)
-    # a query that would grow the memo past its cap starts it over
-    stats.MEMO_MAX = 3
-    for terms in (["stream", "filter"], ["stream", "data"], ["window"]):
-        check(terms)
-    assert set(stats._idf) == {"window"}
     stats.unpersist()
 
     confs = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
@@ -487,6 +481,47 @@ def test_hybrid_server_refuses_search_after_close(spark):
     assert not leg_threads()
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
 
+
+
+def test_serving_releases_every_pinned_rdd(spark, monkeypatch):
+    """Every cache and checkpoint that serving pins is released: no
+    persistent RDD is left that was not there before start_serving,
+    after stop_serving and after a construction that raises, whether
+    it fails before the BM25 state exists (a docs frame with no text
+    column) or while that state loads its term stats. (Ids, not a
+    count: the context cleaner may drop other tests' RDDs meanwhile.)"""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from mcp_vector_search_spark import io
+    from mcp_vector_search_spark.api import SparkProject
+    from mcp_vector_search_spark.operators.bm25 import Bm25ServingStats
+
+    def persistent() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    docs = io.table(spark, SF_DIR, "documents")
+    emb = io.table(spark, SF_DIR, "embeddings")
+    before = persistent()
+    p = SparkProject(spark, docs, emb)
+    p.start_serving()
+    assert persistent() - before
+    assert p.search_hybrid("data", list(emb.first()["embedding"]), limit=3).count() == 3
+    p.stop_serving()
+    assert not persistent() - before
+
+    no_text = SparkProject(spark, docs.drop("text"), emb)
+    with pytest.raises(AnalysisException):
+        no_text.start_serving()
+    assert not persistent() - before
+
+    def fail(self, df):
+        raise RuntimeError("term stats failed")
+
+    monkeypatch.setattr(Bm25ServingStats, "_idf_of", fail)
+    with pytest.raises(RuntimeError, match="term stats failed"):
+        p.start_serving()
+    assert not persistent() - before
 
 def test_rrf_fuse_zero_max_guard(spark):
     """alpha=1.0 with an empty weighted leg makes every raw score 0 —
