@@ -1499,7 +1499,9 @@ class SparkProject:
             # reference (guide §7.2). One eager localCheckpoint of the
             # slim hash-pair frame (longs, never text) pins it; the
             # report path already caches stage boundaries.
-            sh = sh.localCheckpoint(eager=True)
+            from mcp_vector_search_spark import io as _io
+
+            sh = _io.checkpoint(sh)
         pairs = jaccard_verify(
             minhash_candidates(docs, shingles=sh), sh, threshold=near_dup_jaccard
         )

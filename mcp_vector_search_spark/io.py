@@ -133,6 +133,15 @@ def spread_if_raw(df: DataFrame, min_partitions: int | None = None) -> DataFrame
     return spread(df, min_partitions)
 
 
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """`df` with its lineage cut at a local checkpoint: the blocks stay
+    on the executors that computed them, so a lost executor loses them.
+    Every engine checkpoint goes through here; a reliable checkpoint to
+    storage, where that loss must be survivable, would be switched on
+    in this one place."""
+    return df.localCheckpoint(eager=eager)
+
+
 def pin(df: DataFrame) -> DataFrame:
     """`df` computed once and cached over a local checkpoint, for state
     that many later queries read. The cached plan is `InMemoryRelation
@@ -141,7 +150,7 @@ def pin(df: DataFrame) -> DataFrame:
     of its own is planned without an `AdaptiveSparkPlan` wrapper and
     its `TableCacheQueryStage`. Pins two copies; `unpin` releases
     both."""
-    out = df.localCheckpoint(eager=True).cache()
+    out = checkpoint(df).cache()
     try:
         out.count()
     except BaseException:
@@ -329,14 +338,22 @@ def _manifest_dir(path: str) -> str:
     return os.path.join(path, "_manifests")
 
 
+def list_dir(path: str) -> list[str]:
+    """Names of the entries directly under `path` ([] when it does not
+    exist); URI paths go through the Hadoop FileSystem API."""
+    if _is_uri(path):
+        fs, P = _hadoop_fs(path)
+        if not fs.exists(P(path)):
+            return []
+        return [st.getPath().getName() for st in fs.listStatus(P(path))]
+    return os.listdir(path) if os.path.isdir(path) else []
+
+
 def latest_version(path: str) -> int:
     """Highest committed version, 0 if the table has no commits."""
-    d = _manifest_dir(path)
-    if not os.path.isdir(d):
-        return 0
     vs = [
         int(f[1:-5])
-        for f in os.listdir(d)
+        for f in list_dir(_manifest_dir(path))
         if f.startswith("v") and f.endswith(".json")
     ]
     return max(vs, default=0)
@@ -357,7 +374,16 @@ def read_versioned(spark: SparkSession, path: str, version: int | None = None) -
 def _read_manifest(path: str, version: int) -> dict:
     import json
 
-    with open(os.path.join(_manifest_dir(path), f"v{version}.json")) as f:
+    mf = os.path.join(_manifest_dir(path), f"v{version}.json")
+    if _is_uri(mf):
+        fs, P = _hadoop_fs(mf)
+        stream = fs.open(P(mf))
+        try:
+            jvm = SparkSession.getActiveSession()._jvm
+            return json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
+        finally:
+            stream.close()
+    with open(mf) as f:
         return json.load(f)
 
 
@@ -393,23 +419,44 @@ def _commit_manifest(
     """Atomically claim `version`: stage the manifest, hard-link it to
     its final name (fails iff the version is already taken), unlink
     the stage. Same-filesystem link() is the atomic create-if-absent
-    primitive rename() lacks (rename silently overwrites)."""
+    primitive rename() lacks (rename silently overwrites).
+
+    URI paths stage through the Hadoop FileSystem API and claim the
+    version by renaming the stage into place after checking that the
+    name is free; HDFS's rename also refuses an existing destination,
+    so the claim is atomic there, and a reader never sees a partly
+    written manifest on any store."""
     import json
     import uuid as _uuid
 
     d = _manifest_dir(path)
-    os.makedirs(d, exist_ok=True)
     stage = os.path.join(d, f".stage-{_uuid.uuid4().hex}.json")
+    body = json.dumps(
+        {
+            "version": version,
+            "files": files,
+            "meta": meta or {},
+            "txn": txn or {},
+        }
+    )
+    if _is_uri(path):
+        fs, P = _hadoop_fs(path)
+        fs.mkdirs(P(d))
+        out = fs.create(P(stage), True)
+        try:
+            out.write(bytearray(body.encode("utf-8")))
+        finally:
+            out.close()
+        final = P(os.path.join(d, f"v{version}.json"))
+        try:
+            if fs.exists(final) or not fs.rename(P(stage), final):
+                raise VersionConflict(f"version {version} already committed")
+        finally:
+            fs.delete(P(stage), False)
+        return
+    os.makedirs(d, exist_ok=True)
     with open(stage, "w") as f:
-        json.dump(
-            {
-                "version": version,
-                "files": files,
-                "meta": meta or {},
-                "txn": txn or {},
-            },
-            f,
-        )
+        f.write(body)
     try:
         os.link(stage, os.path.join(d, f"v{version}.json"))
     except FileExistsError as e:

@@ -14,6 +14,15 @@ Query time touches only the postings of the query's terms (an `isin`
 filter that prunes before the join), so cost is O(df(q)) not O(corpus)
 — the property that survives 100 TB.
 
+Persisted (`write_bm25_index`), the three tables become segment and
+version directories named by one JSON manifest per index version,
+which the driver reads itself: readers open only what it names, with
+declared schemas, and take N and avgdl from it as literals, so opening
+an index runs no Spark job. Writers (`update_bm25_index`,
+`compact_bm25_index`, a rebuild) write new directories and commit them
+with one atomic manifest write, so a crash leaves the previous snapshot
+serving.
+
 Scoring: Okapi BM25 exactly as ``rank_bm25.BM25Okapi`` (the class the
 reference instantiates, ``bm25_backend.py:30-145``):
 
@@ -36,6 +45,7 @@ from pyspark.sql import functions as F
 
 from mcp_vector_search_spark.functions.literals import sql_array, sql_double, sql_string
 from mcp_vector_search_spark.functions.text import tokenize
+from mcp_vector_search_spark.io import checkpoint
 
 K1 = 1.5
 B = 0.75
@@ -64,18 +74,27 @@ def build_term_stats(
     """term_stats(term, df, idf) with BM25Okapi's epsilon-floored idf.
 
     Build-time: one groupBy(term) over postings plus one global average
-    over the (small) term table. The flooring constant eps·avg(idf_raw)
-    is a corpus scalar — broadcast, never reshuffled. Persist this
-    (partitioned/sorted by term) as the K3 index sink.
+    over the (small) term table. The corpus scalar N and the flooring
+    constant eps·avg(idf_raw) are broadcast, never reshuffled. A
+    persisted index knows N already and passes it as a literal
+    (`_idf_table`).
     """
     n_docs = doc_stats.agg(F.count("*").cast("double").alias("n_docs"))
-    df_t = (
-        postings.groupBy("term")
-        .agg(F.countDistinct("doc_id").cast("double").alias("df"))
-        .join(F.broadcast(n_docs))
-        .withColumn(
-            "idf_raw", F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        )
+    return _idf_table(
+        _term_df(postings).join(F.broadcast(n_docs)), F.col("n_docs"), epsilon
+    )
+
+
+def _term_df(postings: DataFrame) -> DataFrame:
+    """(term, df). postings hold one row per (doc_id, term), so df is a
+    plain count: no distinct aggregate and its second shuffle."""
+    return postings.groupBy("term").agg(F.count("*").cast("double").alias("df"))
+
+
+def _idf_table(df_t: DataFrame, n_docs, epsilon: float = EPSILON) -> DataFrame:
+    """`_term_df` rows → term_stats(term, df, idf), `n_docs` a Column."""
+    df_t = df_t.withColumn(
+        "idf_raw", F.log((n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5))
     )
     avg_idf = df_t.agg(F.avg("idf_raw").alias("avg_idf"))
     return (
@@ -109,21 +128,34 @@ def bm25_scores(
     q = list(dict.fromkeys(query_terms))  # dedupe, keep order
     if term_stats is None:
         term_stats = build_term_stats(postings, doc_stats)
-    qp = postings.filter(F.col("term").isin(q))
-    q_stats = term_stats.filter(F.col("term").isin(q))
-
     avg = doc_stats.agg(F.avg("dl").alias("avgdl"))
-
-    scored = (
-        qp.join(doc_stats, "doc_id")
-        .join(F.broadcast(q_stats), "term")
+    matched = (
+        postings.filter(F.col("term").isin(q))
+        .join(doc_stats, "doc_id")
         .join(F.broadcast(avg))
-        .withColumn(
-            "contrib",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
+    )
+    return _sum_scores(matched, term_stats, q, F.col("avgdl"), k1, b, round_to)
+
+
+def _sum_scores(
+    matched: DataFrame,
+    term_stats: DataFrame,
+    q: list[str],
+    avgdl,
+    k1: float = K1,
+    b: float = B,
+    round_to: int | None = 6,
+) -> DataFrame:
+    """(doc_id, score) from the query's postings rows already carrying
+    their doc's `dl`; `avgdl` is a Column (a broadcast aggregate, or a
+    persisted index's literal)."""
+    scored = matched.join(
+        F.broadcast(term_stats.filter(F.col("term").isin(q))), "term"
+    ).withColumn(
+        "contrib",
+        F.col("idf")
+        * (F.col("tf") * (k1 + 1))
+        / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / avgdl)),
     )
     agg = scored.groupBy("doc_id").agg(F.sum("contrib").alias("score"))
     if round_to is not None:
@@ -164,106 +196,136 @@ def _dbucket_expr(n: int):
     return _md5_bucket_expr(F.col("doc_id").cast("string"), n)
 
 
-def _bm25_meta(spark, path: str) -> tuple[int | None, int | None, str | None]:
-    """(term_buckets, doc_buckets, doc_id_type) of a persisted index —
-    all None for a legacy index with no meta table; fields added after
-    a meta row was written read as None (forward/backward compatible)."""
-    from pyspark.errors import AnalysisException
+_MANIFEST_KEYS = (
+    "doc_id_type", "term_buckets", "doc_buckets", "segments", "next_seg",
+    "doc_stats", "term_stats", "term_stats_current", "n_docs", "avgdl",
+)
+_TERM_STATS_SCHEMA = "term string, df double, idf double"
 
+
+def _manifest(path: str) -> dict:
+    """The meta of the index's latest manifest plus its `version`, read
+    on the driver (no Spark job). An index without a manifest is a
+    layout this engine no longer reads; a torn or empty manifest is
+    corruption."""
+    from mcp_vector_search_spark.io import _read_manifest, latest_version
+
+    v = latest_version(path)
+    if v == 0:
+        raise ValueError(
+            f"{path} has no BM25 index manifest (missing, or a flat or "
+            "pre-manifest layout); rebuild it with write_bm25_index"
+        )
     try:
-        r = spark.read.parquet(f"{path}/meta").first()
-    except AnalysisException as e:
-        cond = (
-            getattr(e, "getCondition", None) or getattr(e, "getErrorClass", None)
-        )
-        cond = cond() if cond is not None else None
-        # legacy = the meta table does not EXIST. A present-but-unreadable
-        # meta dir (torn copy: directory landed, parquet file didn't —
-        # UNABLE_TO_INFER_SCHEMA) is the same corruption as the zero-row
-        # case below and must not silently serve a bucketed index
-        # unbucketed (r7 review).
-        if cond == "PATH_NOT_FOUND" or (
-            cond is None and "Path does not exist" in str(e)
-        ):
-            return None, None, None
+        meta = _read_manifest(path, v)["meta"]
+        m = {k: meta[k] for k in _MANIFEST_KEYS}
+    except (ValueError, KeyError, TypeError) as e:
         raise ValueError(
-            f"corrupt BM25 index at {path}: meta exists but is unreadable "
-            f"({cond or e.__class__.__name__}) — restore the index or delete "
-            "meta to treat it as a legacy unbucketed layout"
+            f"corrupt BM25 index at {path}: manifest v{v} is torn or "
+            "empty — restore it or rebuild with write_bm25_index"
         ) from e
-    if r is None:
-        # a present-but-EMPTY meta table (torn copy, manual truncation)
-        # is corruption, not a legacy index: the legacy fallback would
-        # silently serve a bucketed index unbucketed (wrong partition
-        # pruning), and r.__fields__ on None raised a bare
-        # AttributeError deep in every read/update path (r6 advice)
-        raise ValueError(
-            f"corrupt BM25 index at {path}: meta table exists but has "
-            "no rows — restore the index or delete meta to treat it "
-            "as a legacy unbucketed layout"
-        )
-    fields = set(r.__fields__)
-    tb = (r["term_buckets"] if "term_buckets" in fields else 0) or None
-    db = (r["doc_buckets"] if "doc_buckets" in fields else 0) or None
-    idt = r["doc_id_type"] if "doc_id_type" in fields else None
-    return tb, db, idt
+    m["version"] = v
+    return m
+
+
+def _commit(spark, path: str, version: int, m: dict) -> None:
+    """Commit `m` as manifest `version` — the one atomic step of every
+    writer, taken after all the parts it names are written — then
+    delete what it no longer names: superseded stats versions, folded,
+    orphan or pre-manifest files, older manifests."""
+    from mcp_vector_search_spark.io import _commit_manifest, delete_path, list_dir
+
+    meta = {k: m[k] for k in _MANIFEST_KEYS}
+    live = [f"postings/seg={s}" for s in meta["segments"]]
+    live += [meta["doc_stats"], meta["term_stats"]]
+    _commit_manifest(path, version, live, meta=meta)
+    parts = ("postings", "doc_stats", "term_stats")
+    for name in list_dir(path):
+        if name not in parts and name != "_manifests":
+            delete_path(spark, f"{path}/{name}")
+    for part in parts:
+        for name in list_dir(f"{path}/{part}"):
+            if f"{part}/{name}" not in live:
+                delete_path(spark, f"{path}/{part}/{name}")
+    for name in list_dir(f"{path}/_manifests"):
+        if name[:1] == "v" and name[1:-5].isdigit() and int(name[1:-5]) < version:
+            delete_path(spark, f"{path}/_manifests/{name}")
+
+
+def _postings(spark, path: str, m: dict) -> DataFrame:
+    """Raw postings (doc_id, term, tf, seg[, tbucket]) of `m`'s segments,
+    stale rows included. Like every index read, it opens only what the
+    manifest names, with a declared schema, so no job runs."""
+    schema = f"doc_id {m['doc_id_type']}, term string, tf bigint, seg int"
+    if m["term_buckets"]:
+        schema += ", tbucket int"
+    return (
+        spark.read.schema(schema)
+        .option("basePath", f"{path}/postings")
+        .parquet(*[f"{path}/postings/seg={s}" for s in m["segments"]])
+    )
+
+
+def _doc_stats(spark, path: str, m: dict) -> DataFrame:
+    """doc_stats (doc_id, dl, seg[, dbucket]): one row per live doc."""
+    schema = f"doc_id {m['doc_id_type']}, dl double, seg int"
+    if m["doc_buckets"]:
+        schema += ", dbucket int"
+    return spark.read.schema(schema).parquet(f"{path}/{m['doc_stats']}")
+
+
+def _live(postings: DataFrame, doc_stats: DataFrame) -> DataFrame:
+    """Segment resolution: the postings rows of each doc's live segment."""
+    return postings.join(doc_stats.select("doc_id", "seg"), ["doc_id", "seg"])
 
 
 def bm25_term_buckets(spark, path: str) -> int | None:
-    """Term-bucket count of a persisted index (None = unbucketed —
-    either a legacy index with no meta table or one written with
-    term_buckets=None)."""
-    return _bm25_meta(spark, path)[0]
+    """Term-bucket count of a persisted index (None = unbucketed)."""
+    return _manifest(path)["term_buckets"] or None
 
 
-def _read_doc_stats_or_empty(spark, path: str) -> DataFrame:
-    """doc_stats read that survives an EMPTY doc-bucketed index: a
-    partitioned doc_stats over zero docs has no data files (same
-    partitionBy-writes-nothing behavior as postings), so the schema is
-    reconstructed from the meta record's doc_id type. Unbucketed
-    doc_stats always keeps a schema-bearing file, so this fallback
-    only ever fires for the bucketed empty-bootstrap case."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(f"{path}/doc_stats")
-    except AnalysisException:
-        _, db, idt = _bm25_meta(spark, path)
-        if idt is None:
-            raise
-        cols = f"doc_id {idt}, dl double, seg int"
-        if db:
-            cols += ", dbucket int"
-        return spark.createDataFrame([], cols)
-
-
-def _with_tbucket(postings: DataFrame, n_buckets: int | None):
-    """ONE definition of the partition-scheme threading: stamp the
-    term-bucket column when the index is bucketed (unless the frame
-    already carries it — compaction's read-back does) and return
-    (postings, partition_cols). Every postings writer — base build,
-    update segment, compaction fold — goes through this, so the
-    scheme cannot desynchronize between them (the mixed-partition-
-    depth failure the meta table exists to prevent)."""
+def _write_segment(postings: DataFrame, path: str, seg: int, n_buckets: int) -> None:
+    """Write `postings(doc_id, term, tf)` as segment `seg`, replacing
+    whatever a crashed write left there. ONE definition of the
+    partition scheme: every postings writer (base build, update
+    segment, compaction fold) goes through here, so a term-bucketed
+    index never gets a segment of another depth."""
+    out = postings.select("doc_id", "term", "tf")
     if n_buckets:
-        if "tbucket" not in postings.columns:
-            postings = postings.withColumn("tbucket", _tbucket_expr(n_buckets))
-        return postings, ["seg", "tbucket"]
-    return postings, ["seg"]
+        out = out.withColumn("tbucket", _tbucket_expr(n_buckets))
+    w = out.sortWithinPartitions("term").write.mode("overwrite")
+    if n_buckets:
+        w = w.partitionBy("tbucket")
+    w.parquet(f"{path}/postings/seg={seg}")
 
 
-def _write_meta(
-    spark, root: str, term_buckets: int | None, doc_buckets: int | None,
-    doc_id_type: str,
-) -> None:
-    """The index's scheme record (0 = unbucketed) — always written by
-    full builds and compactions so a rebuild retires a prior scheme.
-    `doc_id_type` lets readers reconstruct schemas for tables whose
-    partitioned write produced no files (empty bootstrap)."""
-    spark.createDataFrame(
-        [(int(term_buckets or 0), int(doc_buckets or 0), doc_id_type)],
-        "term_buckets int, doc_buckets int, doc_id_type string",
-    ).write.mode("overwrite").parquet(f"{root}/meta")
+def _write_doc_stats(doc_stats: DataFrame, dest: str, doc_buckets: int) -> tuple[float, float]:
+    """Write a whole doc_stats table to `dest`; returns the corpus
+    scalars (N, avgdl), observed by the write itself."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    out = doc_stats.observe(obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
+    if doc_buckets:
+        out = out.withColumn("dbucket", _dbucket_expr(doc_buckets))
+    w = out.write.mode("overwrite")
+    if doc_buckets:
+        w = w.partitionBy("dbucket")
+    w.parquet(dest)
+    return _corpus_scalars(obs.get["n"], obs.get["s"])
+
+
+def _corpus_scalars(n, dl_sum) -> tuple[float, float]:
+    """(N, avgdl) from a doc count and Σ dl. dl values are token counts,
+    so the sum is exact and avgdl equals Spark's avg(dl) bit for bit."""
+    n = float(n or 0)
+    return n, (float(dl_sum) / n if n else 0.0)
+
+
+def _write_term_stats(live: DataFrame, dest: str, n_docs: float) -> None:
+    """term_stats from the LIVE postings, N a literal: an aggregation
+    over the already-tokenized index, never a corpus re-scan."""
+    _idf_table(_term_df(live), F.lit(n_docs)).write.mode("overwrite").parquet(dest)
 
 
 def write_bm25_index(
@@ -276,159 +338,136 @@ def write_bm25_index(
 ) -> None:
     """K3 index sink (reference pickles BM25Okapi,
     ``bm25_backend.py:202-267``; here the index is three parquet
-    tables). postings is sorted by term within files so query-time
-    `term IN (...)` filters benefit from parquet min/max pruning.
+    tables named by one manifest). postings is sorted by term within
+    files so query-time `term IN (...)` filters benefit from parquet
+    min/max pruning.
 
     `term_buckets=N` additionally partitions postings by a term-hash
     bucket (``tbucket``): the query path computes its terms' buckets
     driver-side and the IN-filter becomes PHYSICAL partition pruning —
     a query touches ≤|q| of N partitions no matter how large the
     index grows. This is the 100 TB layout; size N so each bucket's
-    postings fit a scan budget (the bucket count is recorded in a
-    ``meta`` table and threaded through updates and compaction, so
-    one index never mixes partition schemes).
+    postings fit a scan budget (the bucket count is recorded in the
+    manifest and threaded through updates and compaction, so one index
+    never mixes partition schemes).
 
     `doc_buckets=M` additionally partitions doc_stats by a doc-id-hash
     bucket (``dbucket``), which turns `update_bm25_index`'s doc_stats
     maintenance from an O(live docs) full rewrite into a dynamic
     partition overwrite of ONLY the buckets the delta touches —
     O(live/M × touched buckets) per update. The trade (documented in
-    `update_bm25_index`): the per-update doc_stats change is no longer
-    a single atomic swap — a crash mid-write leaves a mixed-version
-    window that the replayed update repairs.
+    `update_bm25_index`): that overwrite is made in place, so a crash
+    mid-write leaves a mixed-version window that the replayed update
+    repairs.
 
     Layout is *segmented* (the Lucene segment model re-expressed as a
     parquet partition column): ``postings/seg=N`` holds the postings
-    written by build N (the base build is seg 0), and ``doc_stats``
-    keeps exactly one row per live doc — ``(doc_id, dl, seg)`` — whose
+    written by one build, update or compaction, and ``doc_stats`` keeps
+    exactly one row per live doc — ``(doc_id, dl, seg)`` — whose
     ``seg`` names the segment that doc's postings live in. The read
     path joins postings against that (doc_id, seg) map, so stale
     postings from superseded or deleted docs are invisible without
     ever being rewritten; `update_bm25_index` appends segments and
     `compact_bm25_index` folds them back to one.
-    """
-    from pyspark.errors import AnalysisException
 
-    from mcp_vector_search_spark.io import atomic_swap_dir, recover_swap
+    One manifest per version (``_manifests/v<N>.json``) names the live
+    segments and the ``doc_stats/v<N>`` and ``term_stats/v<N>``
+    directories, and records the doc_id type, both bucket counts, N and
+    avgdl. A rebuild over an existing index is one more commit, into a
+    fresh segment; what the new manifest no longer names is deleted.
+    """
+    from mcp_vector_search_spark.io import latest_version, list_dir
 
     spark = docs.sparkSession
-    postings = build_postings(docs, id_col, text_col).withColumn("seg", F.lit(0))
-    postings, part_cols = _with_tbucket(postings, term_buckets)
-    # staged + root-swapped (same contract as compact_bm25_index): an
-    # in-place rebuild crashing between the four table overwrites
-    # could leave a postings partition scheme that contradicts meta,
-    # and the NEXT update would write a mixed-depth segment — the
-    # discovery-breaking failure a staged swap makes impossible
-    # (multi-table overwrite = crash window, r6 review class)
-    recover_swap(path)
-    stage = f"{path}.tmp"
-    postings.sortWithinPartitions("term").write.partitionBy(*part_cols).mode(
-        "overwrite"
-    ).parquet(f"{stage}/postings")
-    # derive doc_stats/term_stats from the postings JUST WRITTEN: the
-    # corpus is tokenized exactly once (the write above). The previous
-    # shape derived both from the lazy postings lineage, so the
-    # tokenize+explode+groupBy pipeline re-executed for every
-    # downstream action — doc_stats write, and THREE actions inside
-    # term_stats (broadcast n_docs, broadcast avg_idf, final write):
-    # five full corpus passes per build (guide §1.2/§5 — don't
-    # recompute what one pass already produced; same read-back pattern
-    # update_bm25_index has always used for its delta segment).
-    try:
-        post_rb = spark.read.parquet(f"{stage}/postings")
-    except AnalysisException:
-        # empty corpus: partitionBy over zero rows writes no files —
-        # keep the (empty) lazy frames; nothing to re-derive cheaply
-        post_rb = postings
-    doc_stats = doc_stats_from_postings(post_rb).withColumn("seg", F.lit(0))
-    if doc_buckets:
-        doc_stats = doc_stats.withColumn("dbucket", _dbucket_expr(doc_buckets))
-    dsw = doc_stats.write.mode("overwrite")
-    if doc_buckets:
-        dsw = dsw.partitionBy("dbucket")
-    dsw.parquet(f"{stage}/doc_stats")
-    # term_stats' doc_stats input also reads back the staged parquet
-    # (its n_docs aggregate is an action of its own)
-    try:
-        ds_rb = spark.read.parquet(f"{stage}/doc_stats")
-    except AnalysisException:
-        ds_rb = doc_stats
-    term_stats = build_term_stats(post_rb, ds_rb)
-    term_stats.write.mode("overwrite").parquet(f"{stage}/term_stats")
-    _write_meta(
-        docs.sparkSession, stage, term_buckets, doc_buckets,
-        dict(docs.dtypes)[id_col],
+    version = latest_version(path) + 1
+    seg = 1 + max(
+        (int(d[4:]) for d in list_dir(f"{path}/postings") if d.startswith("seg=")),
+        default=-1,
     )
-    atomic_swap_dir(stage, path)
-
-
-def _read_postings_or_empty(spark, path: str, ds: DataFrame) -> DataFrame:
-    """postings read that survives an EMPTY index. `write_bm25_index`
-    over a zero-doc corpus (the documented bootstrap for
-    `bm25_index_sink`) writes a partitioned postings dir with no data
-    files — partitionBy emits nothing for zero rows — so a plain
-    spark.read.parquet raises UNABLE_TO_INFER_SCHEMA on the first
-    delete-only micro-batch or any query before the first batch
-    (r6 review). The schema is reconstructed from doc_stats, whose
-    unpartitioned write always keeps a schema-bearing file: term/tf/seg
-    types are fixed by `build_postings`; doc_id follows the index."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(f"{path}/postings")
-    except AnalysisException:
-        id_type = dict(ds.dtypes)["doc_id"]
-        return spark.createDataFrame(
-            [], f"doc_id {id_type}, term string, tf bigint, seg int"
-        )
+    _write_segment(build_postings(docs, id_col, text_col), path, seg, term_buckets)
+    m = {
+        "doc_id_type": dict(docs.dtypes)[id_col],
+        "term_buckets": int(term_buckets or 0),
+        "doc_buckets": int(doc_buckets or 0),
+        "segments": [seg],
+        "next_seg": seg + 1,
+        "doc_stats": f"doc_stats/v{version}",
+        "term_stats": f"term_stats/v{version}",
+        "term_stats_current": True,
+    }
+    # both stats tables derive from the postings JUST WRITTEN: the
+    # corpus is tokenized exactly once (the write above)
+    post = _postings(spark, path, m)
+    m["n_docs"], m["avgdl"] = _write_doc_stats(
+        doc_stats_from_postings(post).withColumn("seg", F.lit(seg)),
+        f"{path}/{m['doc_stats']}",
+        m["doc_buckets"],
+    )
+    _write_term_stats(post, f"{path}/{m['term_stats']}", m["n_docs"])
+    _commit(spark, path, version, m)
 
 
 def read_bm25_index(spark, path: str) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Returns (postings, doc_stats, term_stats) with segment
-    resolution already applied: postings carries only live rows (one
-    equi-join on the (doc_id, seg) map — the same doc_id join
-    `bm25_scores` performs anyway), doc_stats is (doc_id, dl). A
-    pre-segment flat index (no `seg` column) reads unchanged."""
-    from mcp_vector_search_spark.io import recover_swap
-
-    # the index ROOT is itself swap-managed (compact_bm25_index stages
-    # the whole layout and swaps `path`) — recover it first, or a crash
-    # inside that swap leaves an intact index at `<path>.old` that every
-    # reader would mistake for a missing index (r6 review)
-    recover_swap(path)
-    for t in ("doc_stats", "term_stats"):
-        recover_swap(f"{path}/{t}")
-    ds = _read_doc_stats_or_empty(spark, path)
-    postings = _read_postings_or_empty(spark, path, ds)
-    term_stats = spark.read.parquet(f"{path}/term_stats")
-    if "seg" in postings.columns:
-        postings = postings.join(ds.select("doc_id", "seg"), ["doc_id", "seg"]).drop("seg")
-        ds = ds.select("doc_id", "dl")
-    return postings, ds, term_stats
+    """Returns (postings, doc_stats, term_stats) of the latest snapshot
+    with segment resolution already applied: postings carries only live
+    rows (one equi-join on the (doc_id, seg) map), doc_stats is
+    (doc_id, dl). Opening runs no Spark job."""
+    m = _manifest(path)
+    ds = _doc_stats(spark, path, m)
+    return (
+        _live(_postings(spark, path, m), ds).drop("seg"),
+        ds.select("doc_id", "dl"),
+        spark.read.schema(_TERM_STATS_SCHEMA).parquet(f"{path}/{m['term_stats']}"),
+    )
 
 
-def _ids_frame(spark, ids, like: DataFrame) -> DataFrame:
+_INTEGRAL = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+
+
+def _ids_frame(spark, ids, id_type: str) -> DataFrame:
     """A one-column (doc_id) frame from a python list OR a DataFrame,
     cast to the index's own doc_id type (never hardcode the id type —
-    string ids are first-class)."""
-    id_type = dict(like.dtypes)["doc_id"]
-    if isinstance(ids, DataFrame):
-        first = ids.columns[0]
-        # try_cast, not cast: ANSI cast would throw the raw
-        # NumberFormatException deep inside a later join — the NULL
-        # check below turns both bad shapes into one clear error
-        out = ids.select(F.col(first).try_cast(id_type).alias("doc_id"))
-    else:
-        out = spark.createDataFrame([(i,) for i in ids], f"doc_id {id_type}")
-    # a NULL id — supplied, or produced by an uncastable value (e.g.
-    # string ids against a long-keyed index) — would left_anti-join
-    # against nothing and the deletion would silently no-op (r6 review)
+    string ids are first-class). A list of integral or string ids
+    becomes a literal array checked on the driver: no job, and no
+    Python-worker frame for the later actions to re-run."""
+    bad = ValueError(
+        f"deleted_ids contain NULL or values not castable to the "
+        f"index's doc_id type {id_type!r} — no deletion was applied"
+    )
+    if not isinstance(ids, DataFrame):
+        if id_type in _INTEGRAL or id_type == "string":
+            lits = sql_array(_id_literal(i, id_type, bad) for i in ids)
+            return spark.range(1).selectExpr(
+                f"explode(CAST({lits} AS ARRAY<{id_type}>)) AS doc_id"
+            )
+        strs = sql_array("NULL" if i is None else sql_string(str(i)) for i in ids)
+        ids = spark.range(1).selectExpr(f"explode({strs})")
+    # try_cast, not cast: ANSI cast would throw the raw
+    # NumberFormatException deep inside a later join. A NULL id —
+    # supplied, or an uncastable value — would left_anti-join against
+    # nothing and the deletion would silently no-op.
+    out = ids.select(F.col(ids.columns[0]).try_cast(id_type).alias("doc_id"))
     if out.filter(F.col("doc_id").isNull()).limit(1).count():
-        raise ValueError(
-            f"deleted_ids contain NULL or values not castable to the "
-            f"index's doc_id type {id_type!r} — no deletion was applied"
-        )
+        raise bad
     return out
+
+
+def _id_literal(v, id_type: str, bad: ValueError) -> str:
+    """`v` as SQL text for an integral or string id type; raises `bad`
+    where Spark's cast would give NULL (or `v` is None)."""
+    import numbers
+
+    if isinstance(v, bool) or not isinstance(v, (str, numbers.Integral)):
+        raise bad
+    if id_type == "string":
+        return sql_string(str(v))
+    try:
+        i = int(v)
+    except ValueError:
+        raise bad from None
+    if not -(1 << _INTEGRAL[id_type] - 1) <= i < 1 << _INTEGRAL[id_type] - 1:
+        raise bad
+    return f"{i}L"
 
 
 def update_bm25_index(
@@ -449,240 +488,192 @@ def update_bm25_index(
     What is and isn't incremental, and why it holds at 100 TB:
 
     - the corpus text is tokenized ONCE per doc, ever: only the delta
-      batch is tokenized here, appended as ``postings/seg=N`` via
-      dynamic partition overwrite (a replayed crash re-writes the same
-      partition — idempotent, same contract as the streaming sinks);
+      batch is tokenized here, written as the next free segment
+      ``postings/seg=N`` (the manifest's `next_seg`: a replayed crash
+      re-writes the same segment — idempotent, same contract as the
+      streaming sinks). The delta (id and text only) is pinned once,
+      and its postings, its doc_stats rows, the upserted ids and the
+      duplicate check all read that copy;
     - ``doc_stats`` (one small row per live doc): superseded/deleted
       ids drop out, delta rows (seg=N) union in. Unbucketed, this is
-      an O(live docs) staged rewrite + `atomic_swap_dir` — the price
-      of keeping segment resolution a cheap equi-join. With
-      `write_bm25_index(doc_buckets=M)` it becomes a dynamic
-      partition overwrite of ONLY the id-hash buckets the delta
-      touches — O(live/M × touched buckets) per update, the layout
-      for extreme doc counts. Bucketed crash note: the per-update
-      doc_stats change is then per-partition, not one swap — a crash
-      mid-write leaves touched buckets at mixed versions until the
-      replayed update (same delta → same buckets) repairs them;
+      an O(live docs) write of a fresh ``doc_stats/v<N>`` — the price
+      of keeping segment resolution a cheap equi-join — that also
+      yields N and avgdl. With `write_bm25_index(doc_buckets=M)` it
+      becomes a dynamic partition overwrite, in place, of ONLY the
+      id-hash buckets the delta touches — O(live/M × touched buckets)
+      per update, the layout for extreme doc counts;
     - ``term_stats`` must change globally whenever N changes (idf_raw
       depends on n_docs, and BM25Okapi's epsilon floor averages over
       ALL terms), and df is not delta-decomposable under upserts — so
-      it is recomputed from the LIVE postings: an aggregation over the
-      already-tokenized index, never a corpus re-scan.
+      it is recomputed from the LIVE postings into a fresh
+      ``term_stats/v<N>``: an aggregation over the already-tokenized
+      index, never a corpus re-scan.
 
-    Crash ordering: postings-then-doc_stats-then-term_stats. A crash
-    after the postings write leaves an orphan segment no doc_stats row
-    references — the index keeps serving the pre-update corpus and a
-    re-run overwrites the same partition. A crash between the two
-    swaps leaves idf one update stale; re-running the update (or
-    `refresh_bm25_term_stats`) repairs it.
+    Crash ordering: the segment, doc_stats and term_stats are written
+    first, and one manifest commit makes them live together. A crash
+    before the commit leaves the previous snapshot serving (the new
+    directories are orphans no manifest names), and re-running the
+    update overwrites the same segment. Doc-bucketed crash note: the
+    in-place bucket overwrite is per partition, so a crash mid-write
+    leaves touched buckets at mixed versions until the replayed update
+    (same delta → same buckets) repairs them.
 
     Reference anchor: incremental reindex, ``chunks_backend.py:269-551``
     (delete-by-key + append); the reference rebuilds its pickled
     BM25Okapi whole — the segment model is what makes the same
     semantics incremental at scale.
     """
-    from mcp_vector_search_spark.io import atomic_swap_dir, recover_swap
+    from mcp_vector_search_spark.io import checkpoint, delete_path, pin, unpin
 
-    recover_swap(path)
-    recover_swap(f"{path}/doc_stats")
-    ds = _read_doc_stats_or_empty(spark, path)
-    if "seg" not in ds.columns:
-        raise ValueError(
-            f"{path} is a flat (pre-segment) BM25 index; rebuild it with "
-            "write_bm25_index before using update_bm25_index"
-        )
-    # seg allocation stays a max() over doc_stats' seg column BY
-    # CHOICE (r6 review considered an O(#segments) partition-directory
-    # listing): doc_stats is the index's SMALL table and the aggregate
-    # column-prunes to one int column, while directory-based
-    # allocation reads past orphan postings segments — a replayed
-    # batch (foreachBatch retry loop) would then burn a fresh segment
-    # and strand an orphan EVERY retry instead of idempotently
-    # overwriting its own partition, unbounded garbage in a crash loop.
-    seg = (ds.agg(F.max("seg")).first()[0] or 0) + 1
-
-    # the delta must land in the SAME partition schemes the base build
-    # chose — mixing depths under one root breaks parquet partition
-    # discovery for every reader (ADVICE r5 failure class)
-    n_buckets, m_buckets, _ = _bm25_meta(spark, path)
-    if new_docs is not None:
-        new_post = build_postings(new_docs, id_col, text_col).withColumn("seg", F.lit(seg))
-        new_post, part_cols = _with_tbucket(new_post, n_buckets)
-        (
-            new_post.sortWithinPartitions("term")
-            .write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*part_cols)
-            .mode("overwrite")
-            .parquet(f"{path}/postings")
-        )
-        # delta doc_stats come from the JUST-WRITTEN segment partition
-        # (partition-pruned read-back): the delta is tokenized exactly
-        # once — the postings write above — and, because
-        # doc_stats_from_postings drops token-less docs, an upsert to
-        # empty text DELETES the doc from the live map instead of
-        # keeping a dl=0 row that would shift n_docs/avgdl (and every
-        # idf) away from the `write_bm25_index` full-rebuild contract
-        # (r6 review). The old version still vanishes: `upserted` below
-        # carries EVERY delta id, tokens or not.
-        # _or_empty: an all-empty-text delta into a still-empty index
-        # writes no postings files at all — the read-back must not die
-        seg_post = _read_postings_or_empty(spark, path, ds).filter(F.col("seg") == seg)
-        new_ds = doc_stats_from_postings(seg_post).withColumn("seg", F.lit(seg))
-        # small one-column frame, cached so the dupe check + the merged
-        # doc_stats write don't re-execute an expensive delta lineage
-        # (the only remaining delta evaluations: postings scan + this)
-        upserted = new_docs.select(F.col(id_col).alias("doc_id")).cache()
-    else:
-        new_ds = spark.createDataFrame([], ds.schema)
-        upserted = new_ds.select("doc_id")
-
-    # delta-batch validation (one tiny agg over the delta, not the
-    # corpus): a duplicated doc_id would double-count the doc in every
-    # score, and an id both upserted and deleted has no defined winner
-    touched = upserted
-    if deleted_ids is not None:
-        dels = _ids_frame(spark, deleted_ids, ds)
-        counts = touched.unionByName(dels.select(F.col("doc_id"))).groupBy("doc_id").count()
-        dupes = [r["doc_id"] for r in counts.filter("count > 1").limit(5).collect()]
-        if dupes:
-            raise ValueError(
-                f"doc_ids duplicated within the update batch (or both "
-                f"upserted and deleted): {dupes}"
+    m = _manifest(path)
+    version, seg, doc_buckets = m["version"] + 1, m["next_seg"], m["doc_buckets"]
+    ds = _doc_stats(spark, path, m)
+    delta = merged = None
+    try:
+        touched = None
+        if new_docs is not None:
+            delta = pin(new_docs.select(
+                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+            ))
+            touched = delta.select("doc_id")
+        if deleted_ids is not None:
+            dels = _ids_frame(spark, deleted_ids, m["doc_id_type"])
+            touched = dels if touched is None else touched.unionByName(dels)
+        if touched is not None:
+            # delta-batch validation (one tiny agg over the delta, not
+            # the corpus): a duplicated doc_id would double-count the
+            # doc in every score, and an id both upserted and deleted
+            # has no defined winner
+            counts = touched.groupBy("doc_id").count()
+            dupes = [r["doc_id"] for r in counts.filter("count > 1").limit(5).collect()]
+            if dupes and deleted_ids is not None:
+                raise ValueError(
+                    f"doc_ids duplicated within the update batch (or both "
+                    f"upserted and deleted): {dupes}"
+                )
+            if dupes:
+                raise ValueError(f"doc_ids duplicated within new_docs: {dupes}")
+        if delta is not None:
+            _write_segment(build_postings(delta), path, seg, m["term_buckets"])
+            m["segments"] = m["segments"] + [seg]
+            m["next_seg"] = seg + 1
+            # dl = the doc's token count = Σ tf of its postings. A
+            # token-less doc gets no row, so an upsert to empty text
+            # DELETES the doc instead of keeping a dl=0 row that would
+            # shift N/avgdl (and every idf) off the full-rebuild
+            # contract; `touched` still carries its id, so the old
+            # version vanishes too.
+            new_ds = (
+                delta.select("doc_id", F.size(tokenize("text")).cast("double").alias("dl"))
+                .filter(F.col("dl") > 0)
+                .withColumn("seg", F.lit(seg))
             )
-        touched = touched.unionByName(dels)
-    else:
-        counts = touched.groupBy("doc_id").count()
-        dupes = [r["doc_id"] for r in counts.filter("count > 1").limit(5).collect()]
-        if dupes:
-            raise ValueError(f"doc_ids duplicated within new_docs: {dupes}")
-    if m_buckets:
-        # bucketed doc_stats (the extreme-doc-count layout): rewrite
-        # ONLY the id-hash buckets the delta touches. The merged frame
-        # is localCheckpointed first — it reads the same partitions the
-        # dynamic overwrite replaces, and the checkpoint both cuts that
-        # self-read and pins ONE materialization for the two consumers
-        # below (the present-buckets collect and the write).
-        if "dbucket" not in new_ds.columns:
-            new_ds = new_ds.withColumn("dbucket", _dbucket_expr(m_buckets))
-        touched_b = sorted(
-            r["dbucket"]
-            for r in touched.select(_dbucket_expr(m_buckets).alias("dbucket"))
-            .distinct()
-            .collect()
-        )
-        merged = (
-            ds.filter(F.col("dbucket").isin(touched_b))
-            .join(touched, "doc_id", "left_anti")
-            .unionByName(new_ds)
-            .localCheckpoint()
-        )
-        present = {r["dbucket"] for r in merged.select("dbucket").distinct().collect()}
-        (
-            merged.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("dbucket")
-            .mode("overwrite")
-            .parquet(f"{path}/doc_stats")
-        )
-        # a touched bucket whose every row vanished (all its docs
-        # deleted) produces NO partition in the dynamic write, so its
-        # stale rows would survive — drop those partitions explicitly
-        from mcp_vector_search_spark.io import delete_path
-
-        for b in sorted(set(touched_b) - present):
-            delete_path(spark, f"{path}/doc_stats/dbucket={b}")
-    else:
-        merged = ds.join(touched, "doc_id", "left_anti").unionByName(new_ds)
-        tmp = f"{path}/doc_stats.tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        atomic_swap_dir(tmp, f"{path}/doc_stats")
-    upserted.unpersist()
+        else:
+            new_ds = ds.select("doc_id", "dl", "seg").limit(0)
+        if touched is not None and doc_buckets:
+            # rewrite ONLY the id-hash buckets the delta touches. The
+            # merged frame is checkpointed first: it reads the same
+            # partitions the dynamic overwrite replaces, and the
+            # checkpoint both cuts that self-read and pins ONE
+            # materialization for the present-buckets collect and the
+            # write.
+            touched_b = sorted(
+                r["dbucket"]
+                for r in touched.select(_dbucket_expr(doc_buckets).alias("dbucket"))
+                .distinct()
+                .collect()
+            )
+            merged = checkpoint(
+                ds.filter(F.col("dbucket").isin(touched_b))
+                .join(touched, "doc_id", "left_anti")
+                .unionByName(new_ds.withColumn("dbucket", _dbucket_expr(doc_buckets)))
+            )
+            present = {r["dbucket"] for r in merged.select("dbucket").distinct().collect()}
+            (
+                merged.write.option("partitionOverwriteMode", "dynamic")
+                .partitionBy("dbucket")
+                .mode("overwrite")
+                .parquet(f"{path}/{m['doc_stats']}")
+            )
+            # a touched bucket whose every row vanished (all its docs
+            # deleted) produces NO partition in the dynamic write, so
+            # its stale rows would survive — drop those explicitly
+            for b in sorted(set(touched_b) - present):
+                delete_path(spark, f"{path}/{m['doc_stats']}/dbucket={b}")
+            # the in-place write leaves no whole-table write to observe
+            r = _doc_stats(spark, path, m).agg(F.count(F.lit(1)), F.sum("dl")).first()
+            m["n_docs"], m["avgdl"] = _corpus_scalars(r[0], r[1])
+        elif touched is not None:
+            m["doc_stats"] = f"doc_stats/v{version}"
+            m["n_docs"], m["avgdl"] = _write_doc_stats(
+                ds.join(F.broadcast(touched), "doc_id", "left_anti").unionByName(new_ds),
+                f"{path}/{m['doc_stats']}",
+                0,
+            )
+    finally:
+        if delta is not None:
+            unpin(delta)
+        if merged is not None:
+            unpin(merged)
 
     # `refresh_term_stats=False` is the high-frequency-update knob
     # (e.g. a streaming sink on a tight trigger): idf is the one
     # global that must otherwise be recomputed over the LIVE postings
     # per update — defer it and run `refresh_bm25_term_stats`
-    # periodically. Staleness contract (r6 review — be precise, the
-    # lag is NOT weighting-only): deleted docs stay invisible and
-    # re-scored docs serve their new postings immediately (doc_stats
-    # is always current), but `bm25_scores` INNER-joins term_stats, so
-    # a term first introduced after the last refresh has no idf row
-    # yet — docs matching ONLY such brand-new terms are ABSENT from
-    # results (not merely mis-weighted) until the next refresh.
+    # periodically. Staleness contract (be precise, the lag is NOT
+    # weighting-only): deleted docs stay invisible and re-scored docs
+    # serve their new postings immediately (doc_stats is always
+    # current), but scoring INNER-joins term_stats, so a term first
+    # introduced after the last refresh has no idf row yet — docs
+    # matching ONLY such brand-new terms are ABSENT from results (not
+    # merely mis-weighted) until the next refresh.
     if refresh_term_stats:
-        refresh_bm25_term_stats(spark, path)
+        m["term_stats"] = f"term_stats/v{version}"
+        m["term_stats_current"] = True
+        live = _live(_postings(spark, path, m), _doc_stats(spark, path, m))
+        _write_term_stats(live, f"{path}/{m['term_stats']}", m["n_docs"])
+    elif touched is not None:
+        m["term_stats_current"] = False
+    _commit(spark, path, version, m)
     return seg
 
 
 def refresh_bm25_term_stats(spark, path: str) -> None:
     """Recompute term_stats from the live (segment-resolved) postings
-    and swap it in — the repair path for a crash between the
-    `update_bm25_index` swaps, and the closing step of every update."""
-    from mcp_vector_search_spark.io import atomic_swap_dir
-
-    postings, doc_stats, _ = read_bm25_index(spark, path)
-    ts = build_term_stats(postings, doc_stats)
-    tmp = f"{path}/term_stats.tmp"
-    ts.write.mode("overwrite").parquet(tmp)
-    atomic_swap_dir(tmp, f"{path}/term_stats")
+    and commit it — the closing step of an update run with
+    `refresh_term_stats=False`; an update with nothing to apply."""
+    update_bm25_index(spark, path, None)
 
 
 def compact_bm25_index(spark, path: str) -> tuple[int, int]:
-    """Fold all segments back into seg 0, dropping stale postings rows
-    physically (they were already invisible logically). Staged under
-    `<path>.tmp` and root-swapped so the three tables change as one —
-    the multi-table analog of `compact_codec_layout`. Returns
-    (segments_before, segments_after)."""
-    import os
-
-    from mcp_vector_search_spark.io import atomic_swap_dir, recover_swap
-
-    recover_swap(path)
-    recover_swap(f"{path}/doc_stats")
-    raw = _read_postings_or_empty(spark, path, _read_doc_stats_or_empty(spark, path))
-    segs_before = raw.select("seg").distinct().count() if "seg" in raw.columns else 1
-    postings, doc_stats, _ = read_bm25_index(spark, path)
-    # drop any legacy dl=0 rows (pre-r6-review updates kept them) so a
-    # compacted index always matches the full-rebuild doc_stats exactly
-    doc_stats = doc_stats.filter(F.col("dl") > 0)
-    stage = f"{path}.tmp"
-    # preserve both bucket schemes (and their meta record) across the
-    # fold — compaction must never change how an index partitions
-    n_buckets, m_buckets, idt = _bm25_meta(spark, path)
-    postings, part_cols = _with_tbucket(postings, n_buckets)
-    (
-        postings.withColumn("seg", F.lit(0))
-        .sortWithinPartitions("term")
-        .write.partitionBy(*part_cols)
-        .mode("overwrite")
-        .parquet(os.path.join(stage, "postings"))
+    """Fold all segments into one fresh segment, dropping stale
+    postings rows physically (they were already invisible logically),
+    with doc_stats re-pointed at it in a fresh directory; one manifest
+    commit swaps the three tables at once — the multi-table analog of
+    `compact_codec_layout`. Live docs do not change, so N and avgdl
+    carry over, and so does a term_stats the manifest marks current;
+    a stale one (an update with `refresh_term_stats=False`) is rebuilt
+    from the folded segment. Returns (segments_before, segments_after)."""
+    m = _manifest(path)
+    version, seg = m["version"] + 1, m["next_seg"]
+    segs_before = len(m["segments"])
+    ds = _doc_stats(spark, path, m)
+    _write_segment(_live(_postings(spark, path, m), ds), path, seg, m["term_buckets"])
+    m["segments"], m["next_seg"] = [seg], seg + 1
+    m["doc_stats"] = f"doc_stats/v{version}"
+    _write_doc_stats(
+        ds.select("doc_id", "dl").withColumn("seg", F.lit(seg)),
+        f"{path}/{m['doc_stats']}",
+        m["doc_buckets"],
     )
-    _write_meta(spark, stage, n_buckets, m_buckets, idt or dict(doc_stats.dtypes)["doc_id"])
-    dsw = doc_stats.withColumn("seg", F.lit(0))
-    if m_buckets:
-        dsw = dsw.withColumn("dbucket", _dbucket_expr(m_buckets))
-    dsww = dsw.write.mode("overwrite")
-    if m_buckets:
-        dsww = dsww.partitionBy("dbucket")
-    dsww.parquet(os.path.join(stage, "doc_stats"))
-    # REBUILD term_stats rather than copying it verbatim: it makes
-    # compaction double as the repair path for an idf left one update
-    # stale by a crash between the update's two swaps (r6 review).
-    # Inputs are the STAGED tables just written: the in-hand `postings`
-    # frame is the lazy segment-resolution join, which build_term_stats
-    # would re-execute three times (two broadcast scalars + the write);
-    # the staged parquet is that join's result, already folded.
-    from pyspark.errors import AnalysisException
-
-    try:
-        post_rb = spark.read.parquet(os.path.join(stage, "postings"))
-        ds_rb = spark.read.parquet(os.path.join(stage, "doc_stats"))
-    except AnalysisException:
-        # empty index: partitioned writes emitted no files
-        post_rb, ds_rb = postings, doc_stats
-    build_term_stats(post_rb, ds_rb).write.mode("overwrite").parquet(
-        os.path.join(stage, "term_stats")
-    )
-    atomic_swap_dir(stage, path)
+    if not m["term_stats_current"]:
+        # the fold holds only live rows: no segment resolution needed
+        m["term_stats"] = f"term_stats/v{version}"
+        m["term_stats_current"] = True
+        _write_term_stats(
+            _postings(spark, path, m), f"{path}/{m['term_stats']}", m["n_docs"]
+        )
+    _commit(spark, path, version, m)
     return segs_before, 1
 
 
@@ -698,20 +689,22 @@ def bm25_topk_indexed(
     but without loading the corpus. On a term-bucketed index
     (`write_bm25_index(term_buckets=N)`) the query terms' buckets are
     computed driver-side and the scan prunes whole partitions — ≤|q|
-    of N directories read, regardless of index size."""
-    postings, doc_stats, term_stats = read_bm25_index(spark, path)
-    # schema-gated: only a bucketed index (tbucket partition column
-    # present) pays the tiny meta read — unbucketed and legacy indexes
-    # add zero jobs to the hot query path (r6 review)
-    if "tbucket" in postings.columns:
-        n_buckets = bm25_term_buckets(spark, path)
-        if n_buckets:
-            buckets = sorted(
-                {term_bucket(t, n_buckets) for t in dict.fromkeys(query_terms)}
-            )
-            postings = postings.filter(F.col("tbucket").isin(buckets))
+    of N directories read, regardless of index size. One doc_stats
+    join resolves segments and dl together, and avgdl is the
+    manifest's literal, so the plan has no aggregate besides the
+    score sum."""
+    m = _manifest(path)
+    q = list(dict.fromkeys(query_terms))
+    postings = _postings(spark, path, m).filter(F.col("term").isin(q))
+    if m["term_buckets"]:
+        buckets = sorted({term_bucket(t, m["term_buckets"]) for t in q})
+        postings = postings.filter(F.col("tbucket").isin(buckets))
+    ds = _doc_stats(spark, path, m).select("doc_id", "seg", "dl")
+    term_stats = spark.read.schema(_TERM_STATS_SCHEMA).parquet(f"{path}/{m['term_stats']}")
     return (
-        bm25_scores(postings, doc_stats, query_terms, term_stats=term_stats)
+        _sum_scores(
+            postings.join(ds, ["doc_id", "seg"]), term_stats, q, F.lit(m["avgdl"])
+        )
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -974,7 +967,7 @@ def bm25_topk(
                     F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks")
                 )
                 .withColumn("_dl", F.size("toks").cast("double"))
-                .localCheckpoint()
+                .transform(checkpoint)
             )
         stats = bm25_oneshot_stats(docs, q, id_col, text_col, tokenized=tokenized)
     idf, avgdl = stats["idf"], stats["avgdl"]

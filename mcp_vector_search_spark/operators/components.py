@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
+from mcp_vector_search_spark.io import checkpoint
 
 # Count-routing bound for the driver-side union-find (the
 # `commit_closure` pattern, sources/git_source.py:260): a SYMMETRIZED
@@ -116,7 +117,7 @@ def connected_components(
     # materialize the edges ONCE: their lineage is the whole upstream
     # candidate detector, which every propagation round would
     # otherwise re-execute
-    sym = sym.distinct().localCheckpoint(eager=True)
+    sym = sym.distinct().transform(checkpoint)
     bound = CC_DRIVER_MAX_EDGES if driver_max_edges is None else driver_max_edges
     # count on the checkpointed slim RDD: one cheap job, no recompute
     if sym.count() <= bound:
@@ -183,7 +184,7 @@ def connected_components(
             )
         is_ckpt = (it + 1) % 8 == 0
         if is_ckpt:
-            ckpt = new_labels.localCheckpoint(eager=True)
+            ckpt = new_labels.transform(checkpoint)
             new_labels.unpersist()
             new_labels = ckpt
         labels.unpersist()
@@ -197,7 +198,7 @@ def connected_components(
     # materialization when the last round already checkpointed.
     if is_ckpt:
         return labels
-    out = labels.localCheckpoint(eager=True)
+    out = labels.transform(checkpoint)
     labels.unpersist()
     return out
 

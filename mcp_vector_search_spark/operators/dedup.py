@@ -30,6 +30,7 @@ from mcp_vector_search_spark.functions.hashing import (
 )
 from mcp_vector_search_spark.functions.text import doc_fingerprint, tokenize, word_ngrams
 from mcp_vector_search_spark.functions.vectors import cosine_sim, dot, normalized
+from mcp_vector_search_spark.io import checkpoint
 
 
 def global_positions(
@@ -54,7 +55,7 @@ def global_positions(
     srt = (
         df.repartitionByRange(num_partitions, F.col(id_col))
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     sizes = sorted(
         (r["_pid"], r["c"])
@@ -249,7 +250,7 @@ def neighbor_jaccard(
     hashed = shingle_sets(docs, shingle_n, id_col, text_col).select(
         "doc_id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("shingles")
     )
-    sh = global_positions(hashed, "doc_id").localCheckpoint(eager=True)
+    sh = global_positions(hashed, "doc_id").transform(checkpoint)
     # Explode each doc's neighbor-position list so the pairing is an
     # *equi-join* on _pos (shuffle-hash/sort-merge at scale), not a
     # broadcast-nested-loop range join.
@@ -498,7 +499,7 @@ def embedding_near_dups_clustered(
     # both sides of the self-join re-execute `assigned`'s lineage —
     # typically the map-side assignment scan over the full vector
     # table — so materialize it once (r12; guide §7.2)
-    slim = slim.localCheckpoint(eager=True)
+    slim = checkpoint(slim)
     a, b = slim.alias("a"), slim.alias("b")
     sim = F.round(dot(F.col("a._u"), F.col("b._u")), round_to)
     return (
@@ -558,7 +559,7 @@ def embedding_near_dups_multiprobe(
     # subtree is the expensive part (N×|centroids| broadcast-join rows
     # through a per-id rank window) — materialize the slim
     # (_id, cluster_id) result once (r12; guide §7.2)
-    probes = probes.localCheckpoint(eager=True)
+    probes = checkpoint(probes)
     a, b = probes.alias("a"), probes.alias("b")
     pairs = (
         a.join(
@@ -692,7 +693,7 @@ def duplicate_spans(
     # k-token hash per token position) executed twice per action
     # (r12; guide §7.2). One eager localCheckpoint of the slim
     # (doc_id, pos, wh) rows halves the hashing work.
-    wins = wins.localCheckpoint(eager=True)
+    wins = checkpoint(wins)
     dup_hashes = (
         wins.groupBy("wh").agg(F.count("*").alias("c")).filter(F.col("c") >= min_count)
     )

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from mcp_vector_search_spark.io import checkpoint
 
 
 def bfs_min_hops(
@@ -54,7 +55,7 @@ def bfs_min_hops(
     lazy) runs 2.3-2.8 s, identical rows (r8; the cycle_nodes family
     rule in PLANS.md)."""
     if materialize_edges:
-        edges = edges.select(src_col, dst_col).localCheckpoint(eager=True)
+        edges = edges.select(src_col, dst_col).transform(checkpoint)
     visited = start_ids.select(F.col("id"), F.lit(0).alias("hop"))
     frontier = visited
     for h in range(1, max_hops + 1):
@@ -74,7 +75,7 @@ def bfs_min_hops(
             visited.unionByName(nxt).groupBy("id").agg(F.min("hop").alias("hop"))
         )
         if checkpoint_every and h % checkpoint_every == 0 and h < max_hops:
-            visited = visited.localCheckpoint(eager=False)
+            visited = visited.transform(checkpoint, eager=False)
         frontier = visited.filter(F.col("hop") == h)
     return visited
 
@@ -173,12 +174,12 @@ def cycle_nodes(
         e0.join(both.withColumnRenamed("_n", "_es"), "_es", "left_semi")
         .join(both.withColumnRenamed("_n", "_ed"), "_ed", "left_semi")
         .select("_es", "_ed")
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     pairs = (
         e.select(F.col("_es").alias("origin"), F.col("_ed").alias("node"))
         .distinct()
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     hits = pairs.filter(F.col("origin") == F.col("node")).select(F.col("origin").alias("id"))
     cur = pairs
@@ -187,7 +188,7 @@ def cycle_nodes(
             cur.join(e, cur["node"] == e["_es"])
             .select("origin", F.col("_ed").alias("node"))
             .distinct()
-            .localCheckpoint()
+            .transform(checkpoint)
         )
         hits = hits.unionByName(
             cur.filter(F.col("origin") == F.col("node")).select(F.col("origin").alias("id"))
@@ -209,7 +210,7 @@ def unreachable_nodes(
     # node-universe union AND the BFS (told not to re-materialize):
     # unshared, the all-nodes union re-executed the edge lineage twice
     # more on top of the BFS's own checkpoint
-    edges = edges.select(src_col, dst_col).localCheckpoint(eager=True)
+    edges = edges.select(src_col, dst_col).transform(checkpoint)
     all_nodes = (
         edges.select(F.col(src_col).alias("id"))
         .unionByName(edges.select(F.col(dst_col).alias("id")))
@@ -246,7 +247,7 @@ def trace_paths(
     False for an edges frame that is already a bare table scan."""
     e = edges.select(F.col(src_col).alias("_es"), F.col(dst_col).alias("_ed"))
     if materialize_edges and max_depth >= 2:
-        e = e.localCheckpoint(eager=True)
+        e = checkpoint(e)
     # the first hop needs the same cycle rejection as every later hop:
     # a self-loop on the start node would otherwise emit the non-simple
     # path |a|a| and extend it at every depth (r6 review #4)
@@ -273,7 +274,7 @@ def trace_paths(
             # level's join input) — ×2 lineage replication per depth,
             # 256× at the reference's depth-8 cap without this lazy
             # truncation (r8; the family rule in PLANS.md)
-            .localCheckpoint(eager=False)
+            .transform(checkpoint, eager=False)
         )
         out = out.unionByName(nxt.select("path", "depth"))
         cur = nxt

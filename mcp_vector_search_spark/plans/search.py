@@ -29,6 +29,7 @@ from mcp_vector_search_spark.functions.query import (
 from mcp_vector_search_spark.functions.scoring import heuristic_rescore, sigmoid
 from mcp_vector_search_spark.operators.fusion import max_score_merge
 from mcp_vector_search_spark.operators.mmr import mmr_diversify
+from mcp_vector_search_spark.io import checkpoint
 
 
 import functools
@@ -165,14 +166,14 @@ def full_search(
     def _vec_leg():
         return rank_vec_leg(
             knn_brute_force(vectors, query_vec, k * 3 * 2)
-        ).localCheckpoint(eager=True)
+        ).transform(checkpoint)
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_vec = pool.submit(_vec_leg)
         tok = (
             docs.select(F.col("doc_id"), _tok("text").alias("toks"))
             .withColumn("_dl", F.size("toks").cast("double"))
-            .localCheckpoint()
+            .transform(checkpoint)
         )
         stats = bm25_oneshot_stats(docs, union_terms, tokenized=tok)
         vec_ranked = f_vec.result()

@@ -961,7 +961,7 @@ def _fused_family_rows(spark, sf_dir, codecs):
         # unmaterialized lineage re-scans the vector table per leg
         queries = emb.filter(F.col("vec_id") % 37 == 0).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        ).localCheckpoint(eager=True)
+        ).transform(io.checkpoint)
         # caches: each codec's comparison runs 2 actions (merged block
         # aggregate, symmetric serve difference) — without them the
         # second action would re-execute the sample fit + corpus pack
@@ -1101,7 +1101,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             topk_per_query(emb, queries, BATCH_K)
             .select("query_id", "vec_id")
-            .localCheckpoint()
+            .transform(io.checkpoint)
         )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
@@ -1265,7 +1265,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~6 re-scans of the vector table without this
     queries = emb.filter(F.col("vec_id") < BATCH_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    ).localCheckpoint(eager=True)
+    ).transform(io.checkpoint)
 
     # Three independent blocking materializations — the brute top-k
     # checkpoint (r8: the 4-path union references brute in every
@@ -1281,16 +1281,16 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             topk_per_query(emb, queries, BATCH_K)
             .select("query_id", "vec_id")
-            .localCheckpoint()
+            .transform(io.checkpoint)
         )
 
     def _coarse():
         a, c = ivf_build(emb, num_clusters=16)
-        return a.localCheckpoint(), c
+        return a.transform(io.checkpoint), c
 
     def _pq():
         cb = pq_train(emb, m=PQ_GATE_M, k=PQ_GATE_CODES)
-        return pq_encode(emb, cb).localCheckpoint(), cb
+        return pq_encode(emb, cb).transform(io.checkpoint), cb
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         f_brute, f_coarse, f_pq = (
@@ -1373,7 +1373,7 @@ def q_bm25_expanded(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
         docs.select("doc_id", tokenize("text").alias("toks"))
         .withColumn("_dl", F.size("toks").cast("double"))
-        .localCheckpoint()
+        .transform(io.checkpoint)
     )
     stats = bm25_oneshot_stats(
         docs, [t for v in variants for t in v.split()], tokenized=tok

@@ -23,6 +23,7 @@ import subprocess
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from mcp_vector_search_spark.io import checkpoint
 
 COMMITS_SCHEMA = (
     "commit_sha string, parent_sha string, parent_shas array<string>,"
@@ -217,7 +218,7 @@ def ancestry_closure(
             )
         )
         .distinct()
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     n = anc.count()
     for _ in range(max_iters):
@@ -226,7 +227,7 @@ def ancestry_closure(
             .join(anc.alias("b"), F.col("a.ancestor") == F.col("b.node"))
             .select(F.col("a.node").alias("node"), F.col("b.ancestor").alias("ancestor"))
         )
-        nxt = anc.unionByName(grown).distinct().localCheckpoint()
+        nxt = anc.unionByName(grown).distinct().transform(checkpoint)
         m = nxt.count()
         anc = nxt
         if m == n:

@@ -183,7 +183,8 @@ def process_batch(
                 # manual truncation. Restarting batch numbering at 0 here
                 # would silently re-issue batch ids that downstream
                 # batch-id-keyed state may have consumed — corruption, not
-                # first-write; mirror bm25._bm25_meta (r7 advice)
+                # first-write; the same rule as a torn BM25 index
+                # manifest (`bm25._manifest`), which raises (r7 advice)
                 raise ValueError(
                     f"corrupt chunks table at {_chunks_path(state_dir)}: "
                     "batch_id partition dirs exist but no parquet files "

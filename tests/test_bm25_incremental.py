@@ -94,19 +94,41 @@ def test_empty_text_upsert_supersedes(spark, tmp_path):
     )
 
 
-def test_root_swap_crash_is_recovered(spark, tmp_path):
-    # a crash inside compact's root swap leaves only `<idx>.old`;
-    # every entry point must rename it back instead of failing on a
-    # missing index (r6 review)
+def _manifest_file(idx):
+    from mcp_vector_search_spark.io import latest_version
+
+    return os.path.join(idx, "_manifests", f"v{latest_version(idx)}.json")
+
+
+def _manifest_meta(idx):
+    import json
+
+    with open(_manifest_file(idx)) as f:
+        return json.load(f)["meta"]
+
+
+def test_torn_manifest_raises_corrupt(spark, tmp_path):
+    # the commit is one atomic link of a fully written manifest, so a
+    # torn one only comes from outside damage (a partial copy): every
+    # entry point must refuse it rather than guess a layout
     tmp = str(tmp_path)
     idx = os.path.join(tmp, "idx")
+    write_bm25_index(_corpus(spark, BASE), idx, term_buckets=4)
+    mf = _manifest_file(idx)
+    with open(mf) as f:
+        body = f.read()
+    with open(mf, "w") as f:
+        f.write(body[: len(body) // 2])
+    with pytest.raises(ValueError, match="corrupt BM25 index"):
+        _topk(spark, idx)
+    with pytest.raises(ValueError, match="corrupt BM25 index"):
+        update_bm25_index(spark, idx, _corpus(spark, ADDED))
+    with pytest.raises(ValueError, match="corrupt BM25 index"):
+        compact_bm25_index(spark, idx)
+    # a rebuild is the way out, and it retires the torn manifest
     write_bm25_index(_corpus(spark, BASE), idx)
-    want = _topk(spark, idx)
-    os.rename(idx, idx + ".old")
-    assert _topk(spark, idx) == want
-    os.rename(idx, idx + ".old")
-    update_bm25_index(spark, idx, _corpus(spark, ADDED))
-    assert _topk(spark, idx) == _full_equiv(spark, tmp, BASE + ADDED)
+    assert _topk(spark, idx) == _full_equiv(spark, tmp, BASE)
+    assert os.listdir(os.path.join(idx, "_manifests")) == [os.path.basename(_manifest_file(idx))]
 
 
 def test_uncastable_deleted_ids_raise(spark, tmp_path):
@@ -122,21 +144,19 @@ def test_uncastable_deleted_ids_raise(spark, tmp_path):
 
 
 def test_compact_repairs_stale_term_stats(spark, tmp_path):
-    # the documented crash window leaves idf one update stale; compact
-    # has postings + doc_stats in hand and must rebuild term_stats,
-    # not copy the stale table forward (r6 review)
-    import shutil
-
+    # an update with refresh_term_stats=False leaves idf one update
+    # stale, and the manifest says so; compact must rebuild term_stats
+    # from the fold, not carry the stale table forward
     tmp = str(tmp_path)
     idx = os.path.join(tmp, "idx")
     write_bm25_index(_corpus(spark, BASE), idx)
-    stale = os.path.join(tmp, "stale_ts")
-    shutil.copytree(os.path.join(idx, "term_stats"), stale)
-    update_bm25_index(spark, idx, _corpus(spark, ADDED))
-    # simulate the crash-before-refresh window: put the stale idf back
-    shutil.rmtree(os.path.join(idx, "term_stats"))
-    shutil.copytree(stale, os.path.join(idx, "term_stats"))
+    update_bm25_index(spark, idx, _corpus(spark, ADDED), refresh_term_stats=False)
+    stale = _manifest_meta(idx)
+    assert stale["term_stats_current"] is False
     compact_bm25_index(spark, idx)
+    fresh = _manifest_meta(idx)
+    assert fresh["term_stats_current"] is True
+    assert fresh["term_stats"] != stale["term_stats"]
     assert _topk(spark, idx) == _full_equiv(spark, tmp, BASE + ADDED)
 
 
@@ -200,15 +220,19 @@ def test_flat_v1_index_rejected(spark, tmp_path):
     postings.write.parquet(f"{idx}/postings")
     ds.write.parquet(f"{idx}/doc_stats")
     build_term_stats(postings, ds).write.parquet(f"{idx}/term_stats")
-    # reads fine (back-compat) ...
-    assert len(_topk(spark, idx)) > 0
-    # ... but updates demand the segmented layout
-    with pytest.raises(ValueError, match="flat"):
-        update_bm25_index(spark, idx, _corpus(spark, ADDED))
-    # and compaction IS the migration path
-    compact_bm25_index(spark, idx)
+    # a layout without a manifest is refused by every entry point ...
+    for call in (
+        lambda: _topk(spark, idx),
+        lambda: update_bm25_index(spark, idx, _corpus(spark, ADDED)),
+        lambda: compact_bm25_index(spark, idx),
+    ):
+        with pytest.raises(ValueError, match="rebuild it with write_bm25_index"):
+            call()
+    # ... and a rebuild over it is the migration path
+    write_bm25_index(_corpus(spark, BASE), idx)
     update_bm25_index(spark, idx, _corpus(spark, ADDED))
     assert _topk(spark, idx) == _full_equiv(spark, str(tmp_path), BASE + ADDED)
+    assert sorted(os.listdir(idx)) == ["_manifests", "doc_stats", "postings", "term_stats"]
 
 
 def test_empty_corpus_bootstrap(spark, tmp_path):
@@ -294,12 +318,14 @@ def test_term_bucketed_index_lifecycle(spark, tmp_path):
         for seg in plan.split("PartitionFilters")[1:]
     )
 
-    # compaction preserves the scheme and its meta record
+    # compaction preserves the scheme in its manifest, and the fold
+    # is the one segment left
     compact_bm25_index(spark, idx)
     assert bm25_term_buckets(spark, idx) == 8
+    [folded] = os.listdir(os.path.join(idx, "postings"))
     assert any(
         d.startswith("tbucket=")
-        for d in os.listdir(os.path.join(idx, "postings", "seg=0"))
+        for d in os.listdir(os.path.join(idx, "postings", folded))
     )
     assert _topk(spark, idx) == _full_equiv(spark, tmp, final)
 
@@ -335,7 +361,7 @@ def test_doc_bucketed_index_lifecycle(spark, tmp_path):
         return int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % m
 
     def bucket_files(idx):
-        root = os.path.join(idx, "doc_stats")
+        root = os.path.join(idx, _manifest_meta(idx)["doc_stats"])
         return {
             d: sorted(os.listdir(os.path.join(root, d)))
             for d in os.listdir(root)
@@ -375,35 +401,94 @@ def test_doc_bucketed_index_lifecycle(spark, tmp_path):
     assert _topk(spark, idx) == _full_equiv(spark, tmp, remaining)
 
 
-def test_doc_bucketed_crash_replay_repairs(spark, tmp_path):
-    # the documented bucketed crash window: a crash mid-way through
-    # the per-bucket dynamic overwrite leaves touched buckets at mixed
-    # versions. Simulate the worst partial state — postings seg=N
-    # fully written, NO doc_stats bucket updated (the whole delta
-    # invisible) — then replay the same update and require full-
-    # rebuild parity.
-    import shutil
+class _Crash(RuntimeError):
+    pass
 
+
+def _crash_after(mp, part):
+    """Make the next write of `part` (postings, doc_stats or term_stats
+    — a parquet write under that directory — or the manifest commit)
+    raise once it has finished."""
+    if part == "manifest":
+        from mcp_vector_search_spark import io
+
+        real_commit = io._commit_manifest
+
+        def commit(*a, **kw):
+            real_commit(*a, **kw)
+            raise _Crash(part)
+
+        mp.setattr(io, "_commit_manifest", commit)
+        return
+    from pyspark.sql import DataFrameWriter
+
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **kw):
+        real_parquet(self, path, *a, **kw)
+        if f"/{part}/" in path:
+            raise _Crash(part)
+
+    mp.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def test_doc_bucketed_crash_replay_repairs(spark, tmp_path, monkeypatch):
+    # the documented bucketed crash window: a crash mid-way through
+    # the in-place per-bucket overwrite leaves touched buckets at mixed
+    # versions. Take the worst partial state — postings seg=N fully
+    # written, NO doc_stats bucket updated (the whole delta invisible)
+    # — then replay the same update and require full-rebuild parity.
     tmp = str(tmp_path)
     idx = os.path.join(tmp, "idx")
     write_bm25_index(_corpus(spark, BASE), idx, doc_buckets=4)
-    # snapshot doc_stats AND term_stats, run the real update, then
-    # restore both: postings seg=1 exists but neither stats table
-    # advanced — exactly the crash-after-postings / before-any-bucket
-    # state (term_stats is written after doc_stats, so a crash there
-    # leaves it pre-update too)
-    for t in ("doc_stats", "term_stats"):
-        shutil.copytree(os.path.join(idx, t), os.path.join(tmp, f"{t}_snap"))
-    update_bm25_index(spark, idx, _corpus(spark, ADDED), deleted_ids=[2])
-    for t in ("doc_stats", "term_stats"):
-        shutil.rmtree(os.path.join(idx, t))
-        shutil.copytree(os.path.join(tmp, f"{t}_snap"), os.path.join(idx, t))
+    with monkeypatch.context() as mp:
+        _crash_after(mp, "postings")
+        with pytest.raises(_Crash):
+            update_bm25_index(spark, idx, _corpus(spark, ADDED), deleted_ids=[2])
     # the index serves the PRE-update corpus (orphan segment invisible)
     assert _topk(spark, idx) == _full_equiv(spark, tmp, BASE)
     # replaying the same delta repairs everything
     update_bm25_index(spark, idx, _corpus(spark, ADDED), deleted_ids=[2])
     final = [b for b in BASE if b[0] != 2] + ADDED
     assert _topk(spark, idx) == _full_equiv(spark, tmp, final)
+
+
+@pytest.mark.parametrize("op", ["update", "compact"])
+@pytest.mark.parametrize("part", ["postings", "doc_stats", "term_stats", "manifest"])
+def test_crash_after_each_part_write_serves_one_snapshot(spark, tmp_path, monkeypatch, op, part):
+    # a writer that dies after any one of its part writes leaves the
+    # index serving exactly the old snapshot (before the manifest
+    # commit) or exactly the new one (after it), never a mix; replaying
+    # the call then scores like a fresh build
+    tmp = str(tmp_path)
+    idx = os.path.join(tmp, "idx")
+    write_bm25_index(_corpus(spark, BASE), idx)
+    final = [BASE[0], REPLACED[0], BASE[3]] + ADDED
+    if op == "update":
+        update_bm25_index(spark, idx, _corpus(spark, ADDED))
+
+        def run():
+            update_bm25_index(spark, idx, _corpus(spark, REPLACED), deleted_ids=[2])
+    else:
+        # a deferred refresh makes compaction write all three parts
+        update_bm25_index(spark, idx, _corpus(spark, ADDED))
+        update_bm25_index(
+            spark, idx, _corpus(spark, REPLACED), deleted_ids=[2],
+            refresh_term_stats=False,
+        )
+
+        def run():
+            compact_bm25_index(spark, idx)
+    old = _topk(spark, idx)
+    with monkeypatch.context() as mp:
+        _crash_after(mp, part)
+        with pytest.raises(_Crash):
+            run()
+    new = _full_equiv(spark, tmp, final)
+    assert old != new
+    assert _topk(spark, idx) == (new if part == "manifest" else old)
+    run()
+    assert _topk(spark, idx) == new
 
 
 def test_empty_doc_bucketed_bootstrap(spark, tmp_path):
@@ -446,28 +531,66 @@ def test_update_batch_validation(spark, tmp_path):
         update_bm25_index(spark, idx, _corpus(spark, [(0, "both")]), deleted_ids=[0])
 
 
-def test_present_but_empty_meta_table_raises_corrupt(spark, tmp_path):
-    """A zero-row meta table (torn copy, manual truncation) is
-    corruption, not a legacy unbucketed index: the legacy fallback
-    would serve a bucketed layout unbucketed, and pre-fix the read
-    path died with a bare AttributeError (r7, ADVICE low)."""
+def test_empty_manifest_raises_corrupt(spark, tmp_path):
+    """A zero-byte manifest, or one whose meta lacks the index fields,
+    is corruption: no entry point may fall back to guessing a bucket
+    scheme or a doc_id type."""
     from mcp_vector_search_spark.operators.bm25 import bm25_term_buckets
 
     idx = str(tmp_path / "idx")
     write_bm25_index(_corpus(spark, BASE), idx, term_buckets=4)
-    # truncate meta to zero rows in place
-    empty = spark.read.parquet(f"{idx}/meta").limit(0)
-    empty.write.mode("overwrite").parquet(f"{idx}/meta_empty")
-    import shutil
+    mf = _manifest_file(idx)
+    for body in ("", '{"version": 1, "files": [], "meta": {}}'):
+        with open(mf, "w") as f:
+            f.write(body)
+        with pytest.raises(ValueError, match="corrupt BM25 index"):
+            bm25_term_buckets(spark, idx)
+        with pytest.raises(ValueError, match="corrupt BM25 index"):
+            update_bm25_index(spark, idx, None, deleted_ids=[0])
 
-    shutil.rmtree(f"{idx}/meta")
-    shutil.move(f"{idx}/meta_empty", f"{idx}/meta")
-    with pytest.raises(ValueError, match="corrupt BM25 index"):
-        bm25_term_buckets(spark, idx)
-    # torn-copy shape 2 (r7 review): meta DIRECTORY exists but holds no
-    # readable parquet — must also raise, not silently serve the
-    # bucketed index unbucketed via the legacy fallback
-    shutil.rmtree(f"{idx}/meta")
-    os.makedirs(f"{idx}/meta")
-    with pytest.raises(ValueError, match="unreadable"):
-        bm25_term_buckets(spark, idx)
+
+def test_update_errors_release_caches(spark, tmp_path):
+    # every error exit of update_bm25_index releases what it pinned
+    idx = str(tmp_path / "idx")
+    write_bm25_index(_corpus(spark, BASE), idx)
+
+    def persistent() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persistent()
+    bad_calls = [
+        dict(new_docs=_corpus(spark, [(7, "a doc"), (7, "same id twice")])),
+        dict(new_docs=_corpus(spark, [(0, "both")]), deleted_ids=[0]),
+        dict(new_docs=_corpus(spark, ADDED), deleted_ids=[None]),
+        dict(new_docs=_corpus(spark, ADDED),
+             deleted_ids=spark.createDataFrame([("doc-2",)], "doc_id string")),
+    ]
+    for kw in bad_calls:
+        with pytest.raises(ValueError):
+            update_bm25_index(spark, idx, **kw)
+        assert not persistent() - before, kw
+
+
+def test_deleted_id_list_is_checked_without_a_job(spark):
+    # a deleted-id list becomes a literal array in the plan: NULLs and
+    # uncastable values are refused on the driver, and no Python-worker
+    # frame is built for it
+    import uuid
+
+    from mcp_vector_search_spark.operators.bm25 import _ids_frame
+
+    sc = spark.sparkContext
+    group = f"ids-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "deleted-id literals")
+    try:
+        out = _ids_frame(spark, [3, "4", 2**40], "bigint")
+        for bad in ([None], ["doc-2"], [2**63], [True], [1.5]):
+            with pytest.raises(ValueError, match="castable"):
+                _ids_frame(spark, bad, "bigint")
+        assert _ids_frame(spark, [7, "x'y"], "string").dtypes == [("doc_id", "string")]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert out.dtypes == [("doc_id", "bigint")]
+    assert sorted(r.doc_id for r in out.collect()) == [3, 4, 2**40]

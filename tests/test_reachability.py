@@ -49,6 +49,11 @@ SURVEY_CAPABILITIES = {
     "write_schema_version": "SURVEY §1 schema system",
     "read_schema_version": "SURVEY §1 schema system",
     "check_schema_version": "SURVEY §1 schema system",
+    # the persisted BM25 index's public API (SURVEY K3) beyond the
+    # write/update/compact/query calls the gates and perfbench make
+    "read_bm25_index": "SURVEY K3 persisted index frames for hybrid_search_batch_indexed",
+    "bm25_term_buckets": "SURVEY K3 bucket count for hybrid_search_batch_indexed",
+    "refresh_bm25_term_stats": "SURVEY K3 deferred idf refresh after refresh_term_stats=False",
 }
 
 # Reference implementations that tests compare a reached path against.
